@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR
   * and prints one JSON line {"metric":...,"queries":{...}}.
@@ -288,19 +289,12 @@ object Bench {
     // missing/unparsable artifact disables the tripwire, never the run
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
     val prevPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", outFile)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def jsonFields(path: String, field: String) =
+      mapper.readTree(new java.io.File(path)).path(field).properties().asScala
     val prevMins: Map[String, Double] = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(prevPath)), "UTF-8")
-      """"queries":\{(.*?)\}""".r.findFirstMatchIn(txt).map {
-        _.group(1).split(",").toSeq.flatMap { kv =>
-          kv.split(":") match {
-            case Array(k, v) =>
-              try Some(k.replace("\"", "") -> v.toDouble)
-              catch { case _: NumberFormatException => None }
-            case _ => None
-          }
-        }.toMap
-      }.getOrElse(Map.empty)
+      jsonFields(prevPath, "queries")
+        .collect { case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble }.toMap
     } catch { case _: Exception => Map.empty }
 
     // Historical bands (round-14 verdict tasks 2 + 7): per-query
@@ -313,33 +307,11 @@ object Bench {
     // Missing/unparsable bands degrade to the prev-artifact tripwire.
     val bandsPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_BANDS", "BENCH_BANDS.json")
     val bands: Map[String, (Double, Double)] = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(bandsPath)), "UTF-8")
-      // per-query objects look like "name": {"max": 1.2, ..., "med3": 0.5, ...}
-      // (whitespace-tolerant: json.dump emits ": " separators)
-      val parsed = """"(q\w+)"\s*:\s*\{([^}]*)\}""".r.findAllMatchIn(txt).flatMap { m =>
-        val fields = m.group(2).split(",").flatMap { kv =>
-          kv.split(":") match {
-            case Array(k, v) =>
-              try Some(k.replace("\"", "").trim -> v.toDouble)
-              catch { case _: NumberFormatException => None }
-            case _ => None
-          }
-        }.toMap
-        for (m3 <- fields.get("med3"); mx <- fields.get("max"))
-          yield m.group(1) -> (m3, mx)
+      jsonFields(bandsPath, "bands").flatMap { e =>
+        val (m3, mx) = (e.getValue.path("med3"), e.getValue.path("max"))
+        if (m3.isNumber && mx.isNumber) Some(e.getKey -> (m3.asDouble, mx.asDouble))
+        else None
       }.toMap
-      // round-15 advice: a PARTIAL parse (format drift dropping some
-      // queries) is otherwise indistinguishable from intent — compare
-      // against a structural count of `": {"` occurrences (minus the
-      // top-level "bands" wrapper) and warn loudly on a shortfall so a
-      // silently degraded tripwire is visible in the run log.
-      val braceKeys = """"\s*:\s*\{""".r.findAllIn(txt).size -
-        (if (txt.contains("\"bands\"")) 1 else 0)
-      if (parsed.size < braceKeys)
-        System.err.println(
-          s"[bench] WARNING: bands file $bandsPath has ~$braceKeys entries but only ${parsed.size} parsed — tripwire partially degraded (format drift?)")
-      parsed
     } catch { case _: Exception => Map.empty }
     if (bands.nonEmpty)
       System.err.println(s"[bench] tripwire bands loaded: ${bands.size} queries from $bandsPath")

@@ -54,7 +54,11 @@ object Main {
           case "--log-level" => cfg = cfg.copy(logLevel = next())
           case "--source-format" => extras += "source-format" -> next()
           case "--source-root" => extras += "source-root" -> next()
-          case "--export-parallelism" => extras += "export-parallelism" -> next()
+          case "--export-parallelism" =>
+            val n = next()
+            if (n.toInt < 1)
+              return Left(s"bad numeric value: --export-parallelism must be at least 1, got $n")
+            extras += "export-parallelism" -> n
           case "--jdbc-url" => extras += "jdbc-url" -> next()
           case other => return Left(s"unknown option: $other")
         }
@@ -65,6 +69,8 @@ object Main {
       case e: NumberFormatException => return Left(s"bad numeric value: ${e.getMessage}")
       case e: IllegalArgumentException => return Left(s"bad flag value: ${e.getMessage}")
     }
+    if (extras("source-format") == "parquet" && !extras.contains("source-root"))
+      return Left("missing value for --source-root: required by --source-format parquet")
     if (schemas.nonEmpty) cfg = cfg.copy(schemas = schemas)
     Right((cfg, extras))
   }
@@ -89,12 +95,10 @@ object Main {
       spark.sparkContext.setLogLevel(cfg.logLevel)
       println(s"[export] config: ${redacted(cfg)}")
       val sink = new ParquetSink(cfg)
+      val par = extras.getOrElse("export-parallelism", "1").toInt
       val report = extras("source-format") match {
         case "parquet" =>
-          val root = java.nio.file.Paths.get(extras.getOrElse("source-root",
-            sys.error("--source-root required for --source-format parquet")))
-          val catalog = new ParquetCatalog(root)
-          val par = extras.getOrElse("export-parallelism", "1").toInt
+          val catalog = new ParquetCatalog(java.nio.file.Paths.get(extras("source-root")))
           new Exporter(cfg, catalog, new ParquetSource(catalog), sink, par)
             .exportTables(spark)
         case "jdbc" =>
@@ -103,7 +107,6 @@ object Main {
           // goes through DatabaseMetaData either way.
           val override_ = extras.get("jdbc-url")
           val jdbcUrl = override_.getOrElse(cfg.jdbcUrl)
-          val par = extras.getOrElse("export-parallelism", "1").toInt
           val catalog = new JdbcMetaCatalog(jdbcUrl)
           // A15: one SCN fetched on the driver pins every table scan of
           // the run to the same snapshot under SERIALIZABLE

@@ -2,6 +2,7 @@ package graft.engine
 
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 import scala.util.matching.Regex
 
 /** Catalog discovery (reference A1-A6): which tables to export per
@@ -159,7 +160,8 @@ final class ParquetCatalog(root: Path) extends TableCatalog {
     val dir = schemaDir(schema)
     if (!Files.isDirectory(dir)) Seq.empty
     else {
-      val names = Files.list(dir).iterator().asScala.toSeq.flatMap { p =>
+      // the directory stream holds a descriptor until closed
+      val names = Using.resource(Files.list(dir))(_.iterator().asScala.toList).flatMap { p =>
         val fn = p.getFileName.toString
         if (Files.isDirectory(p)) Some(fn)
         else if (fn.endsWith(".parquet")) Some(fn.stripSuffix(".parquet"))

@@ -2,6 +2,7 @@ package graft.engine
 
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
+import scala.util.Using
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
@@ -36,8 +37,8 @@ final class ParquetSink(cfg: ExportConfig) {
   }
 
   private def deleteRecursively(p: Path): Unit =
-    Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-      .forEach(f => Files.delete(f))
+    Using.resource(Files.walk(p))(_.sorted(Comparator.reverseOrder[Path]())
+      .forEach(f => Files.delete(f)))
 
   /** Records-per-file budget hitting the byte target: sample up to
     * `sampleRows` rows, measure their average UnsafeRow width, divide.
@@ -178,9 +179,8 @@ final class ParquetSink(cfg: ExportConfig) {
       .option("maxRecordsPerFile", recordsPerFile)
       .options(rowGroupOpts)
       .parquet(dir.toString)
-    val files = Files.list(dir).iterator()
-    var n = 0
-    files.forEachRemaining(p => if (p.getFileName.toString.endsWith(".parquet")) n += 1)
+    val n = Using.resource(Files.list(dir))(
+      _.filter(p => p.getFileName.toString.endsWith(".parquet")).count().toInt)
     WriteStats(rows = obs.get("rows").asInstanceOf[Long], files = n,
       outputDir = dir.toString)
   }

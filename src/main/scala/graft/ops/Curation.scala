@@ -31,13 +31,10 @@ object Curation extends QueryFamily {
     * corpus. */
   def qCurationWaterfall(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val stop = array(Seq("the", "a", "of", "and", "to", "in").map(lit): _*)
     val base = T.documents(spark, dir)
       .withColumn("w", split($"text", " "))
-      .withColumn("n_stop", size(filter($"w", x => array_contains(stop, x))))
-      .withColumn("quality",
-        least(lit(1.0), size($"w") / lit(100.0)) *
-          (lit(1.0) - $"n_stop".cast("double") / size($"w")))
+      .withColumn("n_stop", Text.stopCount($"w"))
+      .withColumn("quality", Text.qualityScore($"w", $"n_stop"))
       .select($"doc_id",
         (size($"w") >= 20).as("g_len"),
         ($"quality" >= 0.3).as("g_quality"))
@@ -1061,13 +1058,10 @@ object Curation extends QueryFamily {
     * nothing downstream rescans a fact table. */
   def qCurationPipeline(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val stop = array(Seq("the", "a", "of", "and", "to", "in").map(lit): _*)
     val base = T.documents(spark, dir)
       .withColumn("w", split($"text", " "))
-      .withColumn("n_stop", size(filter($"w", x => array_contains(stop, x))))
-      .withColumn("quality",
-        least(lit(1.0), size($"w") / lit(100.0)) *
-          (lit(1.0) - $"n_stop".cast("double") / size($"w")))
+      .withColumn("n_stop", Text.stopCount($"w"))
+      .withColumn("quality", Text.qualityScore($"w", $"n_stop"))
       .select($"doc_id", $"source", size($"w").as("n_tok"),
         (size($"w") >= 20).as("g_len"), ($"quality" >= 0.3).as("g_quality"))
     val rep = qRepetition(spark, dir).select($"doc_id", $"keep".as("g_rep"))
@@ -1612,16 +1606,13 @@ object Curation extends QueryFamily {
     * vacuous output (the card always emits one row per source). */
   def qDataCard(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val stop = array(Seq("the", "a", "of", "and", "to", "in").map(lit): _*)
     val d = T.documents(spark, dir)
       .select($"source", $"lang", $"n_chars",
         md5($"text".cast("binary")).as("h"),
         split($"text", " ").as("w"))
       .select($"source", $"lang", $"n_chars", $"h",
         size($"w").cast("long").as("n_tok"),
-        (least(lit(1.0), size($"w") / lit(100.0)) *
-          (lit(1.0) - size(filter($"w", x => array_contains(stop, x)))
-            .cast("double") / size($"w"))).as("quality"))
+        Text.qualityScore($"w", Text.stopCount($"w")).as("quality"))
       .ckpt()
     val dup = d.groupBy($"h").agg(count(lit(1)).as("cdup"))
     val per = d.join(dup, Seq("h"))

@@ -127,15 +127,22 @@ object Dedup extends QueryFamily {
       .filter($"a_id" < $"b_id")
       .select($"a_id", $"b_id").distinct()
     val sizes = shx.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val inter = cand
-      .join(shx.select($"doc_id".as("a_id"), $"sh"), Seq("a_id"))
-      .join(shx.select($"doc_id".as("b_id"), $"sh"), Seq("b_id", "sh"))
-      .groupBy($"a_id", $"b_id").agg(count(lit(1)).as("ninter"))
-    inter
-      .join(sizes.select($"doc_id".as("a_id"), $"n".as("na")), Seq("a_id"))
-      .join(sizes.select($"doc_id".as("b_id"), $"n".as("nb")), Seq("b_id"))
+    overlap(cand, shx, sizes)
       .withColumn("j", $"ninter".cast("double") / ($"na" + $"nb" - $"ninter"))
   }
+
+  /** Exact shingle overlap of candidate pairs: each (a_id, b_id) pair
+    * of `cand` meets both documents' shingles in `shx` (doc_id, sh) and
+    * their shingle counts in `sizes` (doc_id, n). Returns (b_id, a_id,
+    * ninter, na, nb). The caller owns `shx` and `sizes`, and decides
+    * whether they are cached or checkpointed. */
+  private def overlap(cand: DataFrame, shx: DataFrame, sizes: DataFrame): DataFrame =
+    cand
+      .join(shx.select(col("doc_id").as("a_id"), col("sh")), Seq("a_id"))
+      .join(shx.select(col("doc_id").as("b_id"), col("sh")), Seq("b_id", "sh"))
+      .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("ninter"))
+      .join(sizes.select(col("doc_id").as("a_id"), col("n").as("na")), Seq("a_id"))
+      .join(sizes.select(col("doc_id").as("b_id"), col("n").as("nb")), Seq("b_id"))
 
   def qDedupMinhash(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -262,13 +269,7 @@ object Dedup extends QueryFamily {
         .join(bands.select($"doc_id".as("b_id"), $"b", $"bandsig"), Seq("b", "bandsig"))
         .filter($"a_id" < $"b_id")
         .select($"a_id", $"b_id").distinct()
-      val inter = cand
-        .join(shx.select($"doc_id".as("a_id"), $"sh"), Seq("a_id"))
-        .join(shx.select($"doc_id".as("b_id"), $"sh"), Seq("b_id", "sh"))
-        .groupBy($"a_id", $"b_id").agg(count(lit(1)).as("ninter"))
-      val verified = inter
-        .join(sizes.select($"doc_id".as("a_id"), $"n".as("na")), Seq("a_id"))
-        .join(sizes.select($"doc_id".as("b_id"), $"n".as("nb")), Seq("b_id"))
+      val verified = overlap(cand, shx, sizes)
         .withColumn("j", $"ninter".cast("double") / ($"na" + $"nb" - $"ninter"))
       cand.agg(count(lit(1)).as("n_candidates")).crossJoin(
           verified.filter($"j" >= 0.8).agg(count(lit(1)).as("n_verified")))
@@ -511,13 +512,7 @@ object Dedup extends QueryFamily {
       .filter($"a_id" < $"b_id")
       .select($"a_id", $"b_id").distinct()
     val sizes = shx.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val inter = cand
-      .join(shx.select($"doc_id".as("a_id"), $"sh"), Seq("a_id"))
-      .join(shx.select($"doc_id".as("b_id"), $"sh"), Seq("b_id", "sh"))
-      .groupBy($"a_id", $"b_id").agg(count(lit(1)).as("ninter"))
-    inter
-      .join(sizes.select($"doc_id".as("a_id"), $"n".as("na")), Seq("a_id"))
-      .join(sizes.select($"doc_id".as("b_id"), $"n".as("nb")), Seq("b_id"))
+    overlap(cand, shx, sizes)
       .withColumn("j", $"ninter".cast("double") / ($"na" + $"nb" - $"ninter"))
       .filter($"j" >= 0.5)
       .select($"a_id", $"b_id", round($"j", 4).as("jaccard"))
@@ -604,10 +599,8 @@ object Dedup extends QueryFamily {
     T.documents(spark, dir)
       .join(drop, $"doc_id" === $"b_id", "left_anti")
       .withColumn("w", split($"text", " "))
-      .withColumn("n_stop", size(filter($"w", x => array_contains(stopArrShared, x))))
-      .withColumn("quality",
-        least(lit(1.0), size($"w") / lit(100.0)) *
-          (lit(1.0) - $"n_stop".cast("double") / size($"w")))
+      .withColumn("n_stop", Text.stopCount($"w"))
+      .withColumn("quality", Text.qualityScore($"w", $"n_stop"))
       .filter($"quality" >= 0.3 && size($"w") >= 20)
       .groupBy($"lang")
       .agg(count(lit(1)).as("n_kept"),
@@ -615,9 +608,6 @@ object Dedup extends QueryFamily {
         sum($"n_chars").as("sum_chars"))
       .orderBy($"lang")
   }
-
-  private def stopArrShared =
-    array(Seq("the", "a", "of", "and", "to", "in").map(lit): _*)
 
   val qCleanCorpusSql: String =
     s"""$minhashCte,
@@ -648,13 +638,7 @@ object Dedup extends QueryFamily {
       .filter($"a_id" < $"b_id")
       .select($"a_id", $"b_id").distinct()
     val sizes = shx.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val inter = cand
-      .join(shx.select($"doc_id".as("a_id"), $"sh"), Seq("a_id"))
-      .join(shx.select($"doc_id".as("b_id"), $"sh"), Seq("b_id", "sh"))
-      .groupBy($"a_id", $"b_id").agg(count(lit(1)).as("ninter"))
-    inter
-      .join(sizes.select($"doc_id".as("a_id"), $"n".as("na")), Seq("a_id"))
-      .join(sizes.select($"doc_id".as("b_id"), $"n".as("nb")), Seq("b_id"))
+    overlap(cand, shx, sizes)
       .withColumn("cont_a", $"ninter".cast("double") / $"na")
       .withColumn("cont_b", $"ninter".cast("double") / $"nb")
       .filter($"cont_a" >= 0.5 || $"cont_b" >= 0.5)
@@ -1160,8 +1144,8 @@ object Dedup extends QueryFamily {
     // checkpointed legs is then pure plan assembly (no further job).
     // each leg's candidate relation is a few thousand rows spread over
     // ~32 post-shuffle partitions — coalesce to a handful before the
-    // ckpt so the three downstream consumers (counts / probe slice /
-    // hits) don't launch 360+ near-empty tasks per execution
+    // ckpt so the two downstream consumers (counts + hits / probe
+    // slice) don't launch 360+ near-empty tasks per execution
     val Seq(mhC, simC, pfC, emC, truth) = inParallel(
       () => mh.select($"strategy", $"a_id", $"b_id").coalesce(4).ckpt(),
       () => sim.select($"strategy", $"a_id", $"b_id").coalesce(4).ckpt(),
@@ -1174,24 +1158,19 @@ object Dedup extends QueryFamily {
         .select($"a_id", $"b_id").coalesce(1).ckpt())
     val allc = mhC.unionByName(simC).unionByName(pfC).unionByName(emC)
     // ---- per-strategy capacity x quality rows ----
-    val counts = allc.groupBy($"strategy").agg(count(lit(1)).as("n_candidates"))
-    val pslice = allc.filter($"a_id" < ServingProbeDocs)
-    val pc = pslice.groupBy($"strategy").agg(count(lit(1)).as("n_cand_probe"))
-    val hits = pslice.join(truth, Seq("a_id", "b_id"), "left_semi")
-      .groupBy($"strategy").agg(count(lit(1)).as("n_hits"))
-    val nTrue = truth.agg(count(lit(1)).as("n_true"))
-    counts
+    val pc = allc.filter($"a_id" < ServingProbeDocs)
+      .groupBy($"strategy").agg(count(lit(1)).as("n_cand_probe"))
+    // every truth pair lies in the probe slice (its a-side is a probe
+    // doc), so the hits among all candidates are the probe-slice hits
+    RecallAudit.pooled(truth, allc, Seq("a_id", "b_id"), by = Seq("strategy"))
       .join(pc, Seq("strategy"), "left")
-      .join(hits, Seq("strategy"), "left")
-      .crossJoin(broadcast(nTrue))
-      .select($"strategy", $"n_candidates",
+      .select($"strategy", $"n_found".as("n_candidates"),
         coalesce($"n_cand_probe", lit(0L)).as("n_cand_probe"),
-        coalesce($"n_hits", lit(0L)).as("n_hits"),
-        $"n_true",
-        round(coalesce($"n_hits", lit(0L)) /
+        $"n_hits", $"n_true",
+        round($"n_hits" /
           when(coalesce($"n_cand_probe", lit(0L)) =!= 0, $"n_cand_probe"), 4)
           .as("probe_precision"),
-        round(coalesce($"n_hits", lit(0L)) / $"n_true", 4).as("probe_recall"))
+        $"recall".as("probe_recall"))
       .orderBy($"strategy")
   }
 

@@ -296,14 +296,7 @@ object Similarity extends QueryFamily {
     val exact = qSimBruteforce(spark, dir).filter($"rank" <= 3)
       .select($"q_id", $"n_id")
     val approx = qSimIvfProbe2(spark, dir).select($"q_id", $"n_id")
-    val hits = exact.join(approx, Seq("q_id", "n_id"), "left_semi")
-      .groupBy($"q_id").agg(count(lit(1)).as("n_hits"))
-    exact.groupBy($"q_id").agg(count(lit(1)).as("n_true"))
-      .join(hits, Seq("q_id"), "left")
-      .select($"q_id",
-        coalesce($"n_hits", lit(0L)).as("n_hits"),
-        round(coalesce($"n_hits", lit(0L)).cast("double") / $"n_true", 4).as("recall"))
-      .orderBy($"q_id")
+    RecallAudit.perKey(exact, approx, "q_id", "n_id").orderBy($"q_id")
   }
 
   val qSimIvfProbe2RecallSql: String =
@@ -398,14 +391,9 @@ object Similarity extends QueryFamily {
     val (cand, tops, probesUsed) =
       partsA.asInstanceOf[(DataFrame, DataFrame, DataFrame)]
     val exact = exactA.asInstanceOf[DataFrame]
-    def recallOf(sel: DataFrame, name: String): DataFrame = {
-      val hits = exact.join(sel, Seq("q_id", "n_id"), "left_semi")
-        .groupBy($"q_id").agg(count(lit(1)).as("n_hits"))
-      exact.groupBy($"q_id").agg(count(lit(1)).as("n_true"))
-        .join(hits, Seq("q_id"), "left")
-        .select($"q_id",
-          round(coalesce($"n_hits", lit(0L)).cast("double") / $"n_true", 4).as(name))
-    }
+    def recallOf(sel: DataFrame, name: String): DataFrame =
+      RecallAudit.perKey(exact, sel, "q_id", "n_id")
+        .select($"q_id", $"recall".as(name))
     val adaptiveSel = tops.join(probesUsed, Seq("q_id"))
       .filter($"stage" === $"probes_used").select($"q_id", $"n_id")
     val fullSel = tops.filter($"stage" === 4).select($"q_id", $"n_id")
@@ -539,15 +527,10 @@ object Similarity extends QueryFamily {
     val probes = e0.filter($"vec_id" < 10)
       .select($"vec_id".as("q_id"), $"embedding".as("qv"))
     def row(name: String, sel: DataFrame, truth: DataFrame,
-            nCand: DataFrame, gt: String): DataFrame = {
-      val hits = truth.join(sel, Seq("q_id", "n_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-      val nTrue = truth.agg(count(lit(1)).as("n_true"))
-      nCand.crossJoin(broadcast(hits)).crossJoin(broadcast(nTrue))
+            nCand: DataFrame, gt: String): DataFrame =
+      nCand.crossJoin(broadcast(RecallAudit.pooled(truth, sel, Seq("q_id", "n_id"))))
         .select(lit(name).as("strategy"), $"n_candidates", $"n_hits", $"n_true",
-          round($"n_hits".cast("double") / $"n_true", 4).as("recall"),
-          lit(gt).as("ground_truth"))
-    }
+          $"recall", lit(gt).as("ground_truth"))
     val g0 = storedKnnGraph(spark, dir) // idempotent sidecar load, once
     val eVec = e0.select($"vec_id", $"embedding").cache()
     val wq = Window.partitionBy($"q_id").orderBy(desc("cos"), asc("n_id"))
@@ -932,14 +915,7 @@ object Similarity extends QueryFamily {
     val exact = qSimBruteforce(spark, dir).filter($"rank" <= 3)
       .select($"q_id", $"n_id")
     val approx = qSimLsh(spark, dir).select($"q_id", $"n_id")
-    val hits = exact.join(approx, Seq("q_id", "n_id"), "left_semi")
-      .groupBy($"q_id").agg(count(lit(1)).as("n_hits"))
-    exact.groupBy($"q_id").agg(count(lit(1)).as("n_true"))
-      .join(hits, Seq("q_id"), "left")
-      .select($"q_id",
-        coalesce($"n_hits", lit(0L)).as("n_hits"),
-        round(coalesce($"n_hits", lit(0L)).cast("double") / $"n_true", 4).as("recall"))
-      .orderBy($"q_id")
+    RecallAudit.perKey(exact, approx, "q_id", "n_id").orderBy($"q_id")
   }
 
   val qSimLshRecallSql: String =
@@ -961,14 +937,7 @@ object Similarity extends QueryFamily {
     val exact = qSimBruteforce(spark, dir).filter($"rank" <= 3)
       .select($"q_id", $"n_id")
     val approx = qSimIvf(spark, dir).select($"q_id", $"n_id")
-    val hits = exact.join(approx, Seq("q_id", "n_id"), "left_semi")
-      .groupBy($"q_id").agg(count(lit(1)).as("n_hits"))
-    exact.groupBy($"q_id").agg(count(lit(1)).as("n_true"))
-      .join(hits, Seq("q_id"), "left")
-      .select($"q_id",
-        coalesce($"n_hits", lit(0L)).as("n_hits"),
-        round(coalesce($"n_hits", lit(0L)).cast("double") / $"n_true", 4).as("recall"))
-      .orderBy($"q_id")
+    RecallAudit.perKey(exact, approx, "q_id", "n_id").orderBy($"q_id")
   }
 
   val qSimIvfRecallSql: String =
@@ -1028,14 +997,8 @@ object Similarity extends QueryFamily {
         .select(lit(s"b_postfilter_x$f").as("strategy"), $"q_id", $"n_id")
     }
     val retrieved = (pre +: posts).reduce(_ union _)
-    val hits = retrieved.join(truthTop, Seq("q_id", "n_id"), "left_semi")
-      .groupBy($"strategy").agg(count(lit(1)).as("n_hits"))
-    retrieved.groupBy($"strategy").agg(count(lit(1)).as("n_returned"))
-      .join(hits, Seq("strategy"), "left")
-      .crossJoin(broadcast(truthTop.agg(count(lit(1)).as("n_true"))))
-      .select($"strategy", $"n_returned",
-        coalesce($"n_hits", lit(0L)).as("n_hits"),
-        round(coalesce($"n_hits", lit(0L)).cast("double") / $"n_true", 4).as("recall"))
+    RecallAudit.pooled(truthTop, retrieved, Seq("q_id", "n_id"), by = Seq("strategy"))
+      .select($"strategy", $"n_found".as("n_returned"), $"n_hits", $"recall")
       .orderBy($"strategy")
   }
 
@@ -1439,18 +1402,10 @@ object Similarity extends QueryFamily {
     val rr3 = Skew.twoPhaseTopK(rescored, Seq($"q_id"),
         Seq(desc("cos"), asc("n_id")), k = 3, rankName = "rank")
       .select($"q_id", $"n_id")
-    val shortHits = exact.join(shortlist, Seq("q_id", "n_id"), "left_semi")
-      .groupBy($"q_id").agg(count(lit(1)).as("n_short"))
-    val rrHits = exact.join(rr3, Seq("q_id", "n_id"), "left_semi")
-      .groupBy($"q_id").agg(count(lit(1)).as("n_rr"))
-    exact.groupBy($"q_id").agg(count(lit(1)).as("n_true"))
-      .join(shortHits, Seq("q_id"), "left")
-      .join(rrHits, Seq("q_id"), "left")
-      .select($"q_id",
-        round(coalesce($"n_short", lit(0L)).cast("double") / $"n_true", 4)
-          .as("recall_shortlist"),
-        round(coalesce($"n_rr", lit(0L)).cast("double") / $"n_true", 4)
-          .as("recall_rerank"))
+    RecallAudit.perKey(exact, shortlist, "q_id", "n_id")
+      .select($"q_id", $"recall".as("recall_shortlist"))
+      .join(RecallAudit.perKey(exact, rr3, "q_id", "n_id")
+        .select($"q_id", $"recall".as("recall_rerank")), Seq("q_id"))
       .orderBy($"q_id")
   }
 
@@ -2048,14 +2003,7 @@ object Similarity extends QueryFamily {
     val exactTop = exact.withColumn("rn", row_number().over(w)).filter($"rn" <= 3)
       .select($"q_id", $"n_id")
     val approx = qSimPq(spark, dir).select($"q_id", $"n_id")
-    val hits = exactTop.join(approx, Seq("q_id", "n_id"), "left_semi")
-      .groupBy($"q_id").agg(count(lit(1)).as("n_hits"))
-    exactTop.groupBy($"q_id").agg(count(lit(1)).as("n_true"))
-      .join(hits, Seq("q_id"), "left")
-      .select($"q_id",
-        coalesce($"n_hits", lit(0L)).as("n_hits"),
-        round(coalesce($"n_hits", lit(0L)).cast("double") / $"n_true", 4).as("recall"))
-      .orderBy($"q_id")
+    RecallAudit.perKey(exactTop, approx, "q_id", "n_id").orderBy($"q_id")
   }
 
   val qSimPqRecallSql: String =
@@ -3240,14 +3188,7 @@ object Similarity extends QueryFamily {
     // rebuild by q_index_persist), not a fresh inline build
     val approx = storedKnnGraph(spark, dir).filter($"src_id" < 10)
       .select($"src_id", $"nbr_id")
-    val hits = exact.join(approx, Seq("src_id", "nbr_id"), "left_semi")
-      .groupBy($"src_id").agg(count(lit(1)).as("n_hits"))
-    exact.groupBy($"src_id").agg(count(lit(1)).as("n_true"))
-      .join(hits, Seq("src_id"), "left")
-      .select($"src_id",
-        coalesce($"n_hits", lit(0L)).as("n_hits"),
-        round(coalesce($"n_hits", lit(0L)).cast("double") / $"n_true", 4).as("recall"))
-      .orderBy($"src_id")
+    RecallAudit.perKey(exact, approx, "src_id", "nbr_id").orderBy($"src_id")
   }
 
   val qKnnGraphRecallSql: String =
@@ -3429,18 +3370,14 @@ object Similarity extends QueryFamily {
       () => Seq(qSimBruteforce(spark, dir).filter($"rank" <= 3)
         .select($"q_id", $"n_id").ckpt()))
     val exact = exactPack.head
-    val nTrue = exact.agg(count(lit(1)).as("n_true"))
     def row(beam: Int, visited: DataFrame): DataFrame = {
       val w = Window.partitionBy($"q_id").orderBy(desc("cos"), asc("n_id"))
       val got = visited
         .filter($"q_id" =!= $"n_id")
         .withColumn("rank", row_number().over(w)).filter($"rank" <= 3)
         .select($"q_id", $"n_id")
-      exact.join(got, Seq("q_id", "n_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-        .crossJoin(broadcast(nTrue))
-        .select(lit(beam).as("beam"), $"n_hits", $"n_true",
-          round($"n_hits".cast("double") / $"n_true", 4).as("recall"))
+      RecallAudit.pooled(exact, got, Seq("q_id", "n_id"))
+        .select(lit(beam).as("beam"), $"n_hits", $"n_true", $"recall")
     }
     val Seq(v1, v3, v6) = walkVis
     row(1, v1).unionByName(row(3, v3)).unionByName(row(6, v6))
@@ -3608,18 +3545,14 @@ object Similarity extends QueryFamily {
       () => Seq(qSimBruteforce(spark, dir).filter($"rank" <= 3)
         .select($"q_id", $"n_id").ckpt()))
     val exact = exactPack.head
-    val nTrue = exact.agg(count(lit(1)).as("n_true"))
     def row(nEntries: Int, visited: DataFrame): DataFrame = {
       val w = Window.partitionBy($"q_id").orderBy(desc("cos"), asc("n_id"))
       val got = visited
         .filter($"q_id" =!= $"n_id")
         .withColumn("rank", row_number().over(w)).filter($"rank" <= 3)
         .select($"q_id", $"n_id")
-      exact.join(got, Seq("q_id", "n_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-        .crossJoin(broadcast(nTrue))
-        .select(lit(nEntries).as("entries"), $"n_hits", $"n_true",
-          round($"n_hits".cast("double") / $"n_true", 4).as("recall"))
+      RecallAudit.pooled(exact, got, Seq("q_id", "n_id"))
+        .select(lit(nEntries).as("entries"), $"n_hits", $"n_true", $"recall")
     }
     val Seq(v1, v2, v4) = walkVis
     row(1, v1).unionByName(row(2, v2)).unionByName(row(4, v4))
@@ -3734,17 +3667,13 @@ object Similarity extends QueryFamily {
         .select($"q_id", $"n_id").ckpt()))
     val Seq(flat, upper, hier) = walkPack
     val exact = exactPack.head
-    val nTrue = exact.agg(count(lit(1)).as("n_true"))
     def row(name: String, visited: DataFrame, cand: DataFrame, hops: Int): DataFrame = {
       val got = visited.filter($"q_id" =!= $"n_id")
         .withColumn("r", row_number().over(wq)).filter($"r" <= 3)
         .select($"q_id", $"n_id")
-      val hits = exact.join(got, Seq("q_id", "n_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-      cand.crossJoin(broadcast(hits)).crossJoin(broadcast(nTrue))
+      cand.crossJoin(broadcast(RecallAudit.pooled(exact, got, Seq("q_id", "n_id"))))
         .select(lit(name).as("strategy"), lit(hops.toLong).as("hops"),
-          $"n_candidates", $"n_hits", $"n_true",
-          round($"n_hits".cast("double") / $"n_true", 4).as("recall"))
+          $"n_candidates", $"n_hits", $"n_true", $"recall")
     }
     val flatRow = row("a_flat_fixed_entry", flat,
       flat.agg(count(lit(1)).as("n_candidates")), hops = 3)
@@ -3897,14 +3826,7 @@ object Similarity extends QueryFamily {
     val exact = qSimBruteforce(spark, dir).filter($"rank" <= 3)
       .select($"q_id", $"n_id")
     val got = qKnnSearch(spark, dir).select($"q_id", $"n_id")
-    val hits = exact.join(got, Seq("q_id", "n_id"), "left_semi")
-      .groupBy($"q_id").agg(count(lit(1)).as("n_hits"))
-    exact.groupBy($"q_id").agg(count(lit(1)).as("n_true"))
-      .join(hits, Seq("q_id"), "left")
-      .select($"q_id",
-        coalesce($"n_hits", lit(0L)).as("n_hits"),
-        round(coalesce($"n_hits", lit(0L)).cast("double") / $"n_true", 4).as("recall"))
-      .orderBy($"q_id")
+    RecallAudit.perKey(exact, got, "q_id", "n_id").orderBy($"q_id")
   }
 
   val qKnnSearchRecallSql: String =
@@ -4032,14 +3954,7 @@ object Similarity extends QueryFamily {
     val approx = Skew.twoPhaseTopK(scored, Seq($"q_id"),
         Seq(desc("cos"), asc("n_id")), k = 3, rankName = "rank")
       .select($"q_id", $"n_id")
-    val hits = exact.join(approx, Seq("q_id", "n_id"), "left_semi")
-      .groupBy($"q_id").agg(count(lit(1)).as("n_hits"))
-    exact.groupBy($"q_id").agg(count(lit(1)).as("n_true"))
-      .join(hits, Seq("q_id"), "left")
-      .select($"q_id",
-        coalesce($"n_hits", lit(0L)).as("n_hits"),
-        round(coalesce($"n_hits", lit(0L)).cast("double") / $"n_true", 4).as("recall"))
-      .orderBy($"q_id")
+    RecallAudit.perKey(exact, approx, "q_id", "n_id").orderBy($"q_id")
   }
 
   val qSqRecallSql: String =

@@ -22,6 +22,28 @@ object Text extends QueryFamily {
   private def stopArr = array(stopwords.map(lit): _*)
   private val stopListSql = stopwords.map(s => s"'$s'").mkString("[", ", ", "]")
 
+  /** Number of stop words in the token array `w`. */
+  private[ops] def stopCount(w: Column): Column =
+    size(filter(w, x => array_contains(stopArr, x)))
+
+  /** Heuristic document quality: length saturation times (1 − stop-word
+    * ratio), least(1, |w|/100)·(1 − nStop/|w|), unrounded — callers
+    * round for their own report. */
+  private[ops] def qualityScore(w: Column, nStop: Column): Column =
+    least(lit(1.0), size(w) / lit(100.0)) * (lit(1.0) - nStop.cast("double") / size(w))
+
+  /** (score, y) per document: the 4dp quality score and the source
+    * label (src0 = 1) — the one classifier input shared by the ROC-AUC,
+    * PR-AUC, KS and Brier reports. */
+  private def scoredDocs(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    T.documents(spark, dir)
+      .withColumn("w", split($"text", " "))
+      .withColumn("n_stop", stopCount($"w"))
+      .select(round(qualityScore($"w", $"n_stop"), 4).as("score"),
+        when($"source" === "src0", 1L).otherwise(0L).as("y"))
+  }
+
   /** Per-document token statistics: counts, distincts, type-token ratio,
     * average word length. */
   def qTokenStats(spark: SparkSession, dir: String): DataFrame = {
@@ -111,15 +133,13 @@ object Text extends QueryFamily {
     import spark.implicits._
     T.documents(spark, dir)
       .withColumn("w", split($"text", " "))
-      .withColumn("n_stop",
-        size(filter($"w", x => array_contains(stopArr, x))))
+      .withColumn("n_stop", stopCount($"w"))
       .select(
         $"doc_id",
         size($"w").as("n_tokens"),
         $"n_stop",
         round($"n_stop".cast("double") / size($"w"), 4).as("stop_ratio"),
-        round(least(lit(1.0), size($"w") / lit(100.0)) *
-          (lit(1.0) - $"n_stop".cast("double") / size($"w")), 4).as("quality"))
+        round(qualityScore($"w", $"n_stop"), 4).as("quality"))
       .orderBy($"doc_id")
   }
 
@@ -1127,8 +1147,7 @@ object Text extends QueryFamily {
       .select(
         when($"source" === "src0", 1.0).otherwise(0.0).as("y"),
         (size($"w") / lit(100.0)).as("x1"),
-        (size(filter($"w", x => array_contains(stopArr, x))).cast("double") /
-          size($"w")).as("x2"))
+        (stopCount($"w").cast("double") / size($"w")).as("x2"))
       .cache()
     def g6(c: Column) = round(avg(c), 6) + lit(0.0)
     def p(b: Double, wl: Double, ws: Double): Column =
@@ -1193,8 +1212,7 @@ object Text extends QueryFamily {
     import spark.implicits._
     val base = T.documents(spark, dir)
       .withColumn("w", split($"text", " "))
-      .withColumn("n_stop",
-        size(filter($"w", x => array_contains(stopArr, x))))
+      .withColumn("n_stop", stopCount($"w"))
       .select(
         when($"source" === "src0", 1L).otherwise(0L).as("y"),
         least(lit(9L), expr("size(w) div 20")).as("len_b"),
@@ -1258,15 +1276,7 @@ object Text extends QueryFamily {
   def qAucQuality(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val scored = T.documents(spark, dir)
-      .withColumn("w", split($"text", " "))
-      .withColumn("n_stop",
-        size(filter($"w", x => array_contains(stopArr, x))))
-      .select(
-        round(least(lit(1.0), size($"w") / lit(100.0)) *
-          (lit(1.0) - $"n_stop".cast("double") / size($"w")), 4).as("score"),
-        when($"source" === "src0", 1L).otherwise(0L).as("y"))
-    val grid = scored.groupBy($"score")
+    val grid = scoredDocs(spark, dir).groupBy($"score")
       .agg(count(lit(1)).as("c"), sum($"y").as("np"))
     val cum = grid.withColumn("cumb",
       sum($"c").over(Window.orderBy($"score")
@@ -1308,15 +1318,7 @@ object Text extends QueryFamily {
   def qPrAuc(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val scored = T.documents(spark, dir)
-      .withColumn("w", split($"text", " "))
-      .withColumn("n_stop",
-        size(filter($"w", x => array_contains(stopArr, x))))
-      .select(
-        round(least(lit(1.0), size($"w") / lit(100.0)) *
-          (lit(1.0) - $"n_stop".cast("double") / size($"w")), 4).as("score"),
-        when($"source" === "src0", 1L).otherwise(0L).as("y"))
-    val grid = scored.groupBy($"score")
+    val grid = scoredDocs(spark, dir).groupBy($"score")
       .agg(count(lit(1)).as("c"), sum($"y").as("np"))
     val w = Window.orderBy(desc("score"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1440,15 +1442,7 @@ object Text extends QueryFamily {
   def qKsClassifier(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val scored = T.documents(spark, dir)
-      .withColumn("w", split($"text", " "))
-      .withColumn("n_stop",
-        size(filter($"w", x => array_contains(stopArr, x))))
-      .select(
-        round(least(lit(1.0), size($"w") / lit(100.0)) *
-          (lit(1.0) - $"n_stop".cast("double") / size($"w")), 4).as("score"),
-        when($"source" === "src0", 1L).otherwise(0L).as("y"))
-    val grid = scored.groupBy($"score")
+    val grid = scoredDocs(spark, dir).groupBy($"score")
       .agg(count(lit(1)).as("c"), sum($"y").as("np"))
     val w = Window.orderBy($"score")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1496,15 +1490,8 @@ object Text extends QueryFamily {
     * broadcast — one fact scan total. */
   def qBrierScore(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val scored = T.documents(spark, dir)
-      .withColumn("w", split($"text", " "))
-      .withColumn("n_stop",
-        size(filter($"w", x => array_contains(stopArr, x))))
-      .select(
-        round(least(lit(1.0), size($"w") / lit(100.0)) *
-          (lit(1.0) - $"n_stop".cast("double") / size($"w")), 4).as("score"),
-        when($"source" === "src0", 1L).otherwise(0L).as("y"))
-    val grid = scored.groupBy($"score", $"y").agg(count(lit(1)).as("c")).cache()
+    val grid = scoredDocs(spark, dir).groupBy($"score", $"y")
+      .agg(count(lit(1)).as("c")).cache()
     val brier = grid.agg(sum($"c").as("n"),
       sum($"c" * ($"score" - $"y") * ($"score" - $"y")).as("se"),
       sum($"c" * $"y").as("sy"))
@@ -1974,9 +1961,7 @@ object Text extends QueryFamily {
     import spark.implicits._
     val scored = T.documents(spark, dir)
       .withColumn("w", split($"text", " "))
-      .withColumn("stop_ratio",
-        size(filter($"w", x => array_contains(stopArr, x))).cast("double")
-          / size($"w"))
+      .withColumn("stop_ratio", stopCount($"w").cast("double") / size($"w"))
       .select($"lang", least(lit(1.0), round($"stop_ratio" * 3, 6)).as("p"))
       .withColumn("y", when($"lang" === "en", 1.0).otherwise(0.0))
       .withColumn("bin", least(floor($"p" * 10), lit(9.0)).cast("int"))

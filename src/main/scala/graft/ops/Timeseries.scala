@@ -677,6 +677,34 @@ object Timeseries extends QueryFamily {
       |  round(cv, 4) AS cv, round((cv - 1) / (cv + 1), 4) AS burstiness
       |FROM c ORDER BY event_type""".stripMargin
 
+  /** Per-user time-to-conversion, the input of the survival family
+    * ([[qSurvivalKm]], [[qLogRank]], [[qNelsonAalen]]): (user_id,
+    * duration_h, ev) with duration_h = whole hours from the user's first
+    * view to the first purchase at or after it (ev = 1), or to the
+    * study end — the corpus's last event — when the user never converts
+    * (ev = 0, right-censored). Users without a view are dropped. The
+    * per-user window minima share one user_id exchange. */
+  private def survivalDurations(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val wUser = Window.partitionBy($"user_id")
+    val per = T.events(spark, dir)
+      .select($"user_id", $"event_type", unix_micros($"ts").as("us"))
+      .withColumn("v_us",
+        min(when($"event_type" === "view", $"us")).over(wUser))
+      .withColumn("p_us",
+        min(when($"event_type" === "purchase" && $"us" >= $"v_us", $"us")).over(wUser))
+      .groupBy($"user_id")
+      .agg(max($"v_us").as("v_us"), max($"p_us").as("p_us"))
+    val end = T.events(spark, dir)
+      .agg(max(unix_micros($"ts")).as("end_us"))
+    per.crossJoin(broadcast(end))
+      .filter($"v_us".isNotNull)
+      .select($"user_id",
+        floor((coalesce($"p_us", $"end_us") - $"v_us") / 3600000000.0)
+          .cast("long").as("duration_h"),
+        when($"p_us".isNotNull, 1L).otherwise(0L).as("ev"))
+  }
+
   /** Kaplan-Meier survival curve of time-to-conversion: hours from a
     * user's first view to their first subsequent purchase,
     * right-censored at the study end (the corpus's last event) for
@@ -691,23 +719,7 @@ object Timeseries extends QueryFamily {
     * grid, never the fact table. Event rows only, 6dp. */
   def qSurvivalKm(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val wUser = Window.partitionBy($"user_id")
-    val per = T.events(spark, dir)
-      .select($"user_id", $"event_type", unix_micros($"ts").as("us"))
-      .withColumn("v_us",
-        min(when($"event_type" === "view", $"us")).over(wUser))
-      .withColumn("p_us",
-        min(when($"event_type" === "purchase" && $"us" >= $"v_us", $"us")).over(wUser))
-      .groupBy($"user_id")
-      .agg(max($"v_us").as("v_us"), max($"p_us").as("p_us"))
-    val end = T.events(spark, dir)
-      .agg(max(unix_micros($"ts")).as("end_us"))
-    val grid = per.crossJoin(broadcast(end))
-      .filter($"v_us".isNotNull)
-      .select(
-        floor((coalesce($"p_us", $"end_us") - $"v_us") / 3600000000.0)
-          .cast("long").as("duration_h"),
-        when($"p_us".isNotNull, 1L).otherwise(0L).as("ev"))
+    val grid = survivalDurations(spark, dir)
       .groupBy($"duration_h")
       .agg(sum($"ev").as("d"), count(lit(1)).as("c"))
     val wRisk = Window.orderBy($"duration_h")
@@ -744,23 +756,8 @@ object Timeseries extends QueryFamily {
     * test costs one user-keyed aggregate plus bounded-grid windows. */
   def qLogRank(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val wUser = Window.partitionBy($"user_id")
-    val per = T.events(spark, dir)
-      .select($"user_id", $"event_type", unix_micros($"ts").as("us"))
-      .withColumn("v_us",
-        min(when($"event_type" === "view", $"us")).over(wUser))
-      .withColumn("p_us",
-        min(when($"event_type" === "purchase" && $"us" >= $"v_us", $"us")).over(wUser))
-      .groupBy($"user_id")
-      .agg(max($"v_us").as("v_us"), max($"p_us").as("p_us"))
-    val end = T.events(spark, dir)
-      .agg(max(unix_micros($"ts")).as("end_us"))
-    val grid = per.crossJoin(broadcast(end))
-      .filter($"v_us".isNotNull)
-      .select(($"user_id" % 2).cast("int").as("arm"),
-        floor((coalesce($"p_us", $"end_us") - $"v_us") / 3600000000.0)
-          .cast("long").as("duration_h"),
-        when($"p_us".isNotNull, 1L).otherwise(0L).as("ev"))
+    val grid = survivalDurations(spark, dir)
+      .select(($"user_id" % 2).cast("int").as("arm"), $"duration_h", $"ev")
       .groupBy($"duration_h")
       .agg(sum(when($"arm" === 0, $"ev").otherwise(0L)).as("d0"),
         sum(when($"arm" === 1, $"ev").otherwise(0L)).as("d1"),
@@ -989,23 +986,7 @@ object Timeseries extends QueryFamily {
     * aggregate at any SF. */
   def qNelsonAalen(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val wUser = Window.partitionBy($"user_id")
-    val per = T.events(spark, dir)
-      .select($"user_id", $"event_type", unix_micros($"ts").as("us"))
-      .withColumn("v_us",
-        min(when($"event_type" === "view", $"us")).over(wUser))
-      .withColumn("p_us",
-        min(when($"event_type" === "purchase" && $"us" >= $"v_us", $"us")).over(wUser))
-      .groupBy($"user_id")
-      .agg(max($"v_us").as("v_us"), max($"p_us").as("p_us"))
-    val end = T.events(spark, dir)
-      .agg(max(unix_micros($"ts")).as("end_us"))
-    val grid = per.crossJoin(broadcast(end))
-      .filter($"v_us".isNotNull)
-      .select(
-        floor((coalesce($"p_us", $"end_us") - $"v_us") / 3600000000.0)
-          .cast("long").as("duration_h"),
-        when($"p_us".isNotNull, 1L).otherwise(0L).as("ev"))
+    val grid = survivalDurations(spark, dir)
       .groupBy($"duration_h")
       .agg(sum($"ev").as("d"), count(lit(1)).as("c"))
     val wRisk = Window.orderBy($"duration_h")

@@ -91,6 +91,23 @@ class SinkExporterSpec extends AnyFunSuite {
     assert(!Files.exists(Paths.get(out, "stale")))
   }
 
+  test("catalog listing and output-root wipes close their directory streams") {
+    val fdDir = new java.io.File("/proc/self/fd")
+    assume(fdDir.isDirectory, "needs Linux /proc/self/fd")
+    def openFds(): Int = fdDir.list().length
+    val fixture = Paths.get(sf)
+    val cat = new ParquetCatalog(fixture.getParent)
+    val sink = new ParquetSink(ExportConfig(outputDirectory = freshDir(), overwrite = true))
+    sink.prepareRoot()
+    val before = openFds()
+    (1 to 200).foreach { _ =>
+      cat.listTables(fixture.getFileName.toString, ".*".r, None)
+      sink.prepareRoot()
+    }
+    val grown = openFds() - before
+    assert(grown < 50, s"$grown descriptors leaked over 200 listings and wipes")
+  }
+
   test("byte-target splitting produces multiple bounded files") {
     val out = freshDir()
     // ~60k rows of lineitem ~= a few MB in memory; 200KB target => many files
@@ -270,13 +287,15 @@ class CliSpec extends AnyFunSuite {
       "--compression-method", "gzip", "--row-limit", "7",
       "--isolation-level", "READ COMMITTED", "--lowercase-object-names",
       "--parquet-max-file-size", "1000000",
-      "--source-format", "parquet", "--source-root", "/tmp/x")): @unchecked
+      "--source-format", "parquet", "--source-root", "/tmp/x",
+      "--export-parallelism", "3")): @unchecked
     assert(cfg.schemas === Seq("A", "B"))
     assert(cfg.tableNameExcludePattern === Some("TMP.*"))
     assert(cfg.overwrite && cfg.lowercaseObjectNames)
     assert(cfg.compressionMethod === "gzip" && cfg.rowLimit === 7L)
     assert(cfg.isolationLevel === IsolationLevel.ReadCommitted)
     assert(extras("source-format") === "parquet")
+    assert(extras("export-parallelism") === "3")
   }
 
   test("cluster-by flag: parses cols + curve, defaults to morton, rejects malformed specs") {
@@ -313,6 +332,13 @@ class CliSpec extends AnyFunSuite {
   test("version short-circuits; unknown flag rejected; password redacted") {
     assert(graft.cli.Main.parseArgs(Seq("--version")).isLeft)
     assert(graft.cli.Main.parseArgs(Seq("--nope")).isLeft)
+    // bad values are rejected before any SparkSession starts, with the
+    // prefixes main maps to exit code 2
+    for (bad <- Seq("0", "-1", "two"))
+      assert(graft.cli.Main.parseArgs(Seq("--export-parallelism", bad))
+        .left.exists(_.startsWith("bad numeric value")), bad)
+    assert(graft.cli.Main.parseArgs(Seq("--source-format", "parquet"))
+      .left.exists(_.startsWith("missing value for --source-root")))
     val Right((cfg, _)) =
       graft.cli.Main.parseArgs(Seq("--password", "hunter2")): @unchecked
     assert(!graft.cli.Main.redacted(cfg).contains("hunter2"))

@@ -29,6 +29,30 @@ class SimilaritySpec extends AnyFunSuite {
     assert(rTwo >= rOne, "a second probe cell must not lose recall")
   }
 
+  test("recall audit: a probe with no hit reports 0 hits and recall 0.0; pooled form") {
+    import spark.implicits._
+    val truth = Seq((1L, 10L), (1L, 11L), (1L, 12L), (2L, 20L), (2L, 21L))
+      .toDF("q_id", "n_id")
+    // probe 1 finds two of three (plus a miss); probe 2 finds nothing
+    val found = Seq((1L, 10L), (1L, 12L), (1L, 99L), (2L, 98L)).toDF("q_id", "n_id")
+    val perKey = ops.RecallAudit.perKey(truth, found, "q_id", "n_id")
+      .orderBy("q_id").collect()
+      .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("n_hits"), r.getAs[Double]("recall")))
+    assert(perKey.toSeq === Seq((1L, 2L, 0.6667), (2L, 0L, 0.0)))
+    def counts(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(r =>
+      (r.getAs[Long]("n_found"), r.getAs[Long]("n_hits"), r.getAs[Long]("n_true"),
+        r.getAs[Double]("recall")))
+    assert(counts(ops.RecallAudit.pooled(truth, found, Seq("q_id", "n_id"))) ===
+      Seq((4L, 2L, 5L, 0.4)))
+    // grouped by a column of the found side: the group without a hit
+    // still reports 0, and n_true stays the whole truth
+    assert(counts(ops.RecallAudit.pooled(truth, found, Seq("q_id", "n_id"), by = Seq("q_id"))
+      .orderBy("q_id")) === Seq((3L, 2L, 5L, 0.4), (1L, 0L, 5L, 0.0)))
+    // an empty found side still yields its one pooled row
+    assert(counts(ops.RecallAudit.pooled(truth, found.filter($"q_id" === 3L),
+      Seq("q_id", "n_id"))) === Seq((0L, 0L, 5L, 0.0)))
+  }
+
   test("every ANN result is a genuine corpus vector with valid cosine") {
     val rows = ops.Similarity.qSimLshMultiprobe(spark, sf).collect()
     rows.foreach { r =>
