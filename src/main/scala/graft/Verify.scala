@@ -77,35 +77,19 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // Builder-side token substitution: {THUMBS} -> this run's
-    // materialized decode sidecar (written during query construction
-    // above, so it exists by the time the driver's DuckDB reads it).
-    // Oracle SQL stays static text per query; only the fixture-derived
-    // path varies per run. Failed queries are dropped here: their
-    // Spark dump does not exist, and pairing SQL with a missing dump
-    // would let the driver compare DuckDB against stale state instead
-    // of reporting the Spark failure.
-    val thumbs = graft.ops.Multimodal.thumbsSidecarPath(sfDir)
-    val graph = graft.ops.Similarity.graphSidecarPath(sfDir)
-    val graphBase = graft.ops.Similarity.graphBaseSidecarPath(sfDir)
-    val graphUpper = graft.ops.Similarity.upperGraphSidecarPath(sfDir)
-    val pqBook = graft.ops.Similarity.pqCodebookSidecarPath(sfDir)
-    val pqCodes = graft.ops.Similarity.pqCodesSidecarPath(sfDir)
-    val pqBookBase = graft.ops.Similarity.pqBaseCodebookSidecarPath(sfDir)
-    val uniVocab = graft.ops.Text.uniVocabSidecarPath(sfDir)
-    val bpeMerges = graft.ops.Text.bpeMergesSidecarPath(sfDir)
+    // Token substitution: {THUMBS}/{GRAPH}/... -> this run's sidecar
+    // paths (written during query construction above, so they exist by
+    // the time the DuckDB oracle reads them), from the one sidecar
+    // registry. Oracle SQL stays static text per query; only the
+    // fixture-derived path varies per run. Failed queries are dropped
+    // here: their Spark dump does not exist, and pairing SQL with a
+    // missing dump would compare DuckDB against stale state instead of
+    // reporting the Spark failure.
+    val tokens = graft.ops.Fixtures.tokens(sfDir)
     val json = SparkEntry.oracleSql
       .filter(kv => keep(kv._1) && !failures.contains(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v
-        .replace("{THUMBS}", thumbs)
-        .replace("{GRAPH}", graph)
-        .replace("{GRAPHBASE}", graphBase)
-        .replace("{GRAPHUPPER}", graphUpper)
-        .replace("{PQCODEBOOKBASE}", pqBookBase)
-        .replace("{PQCODEBOOK}", pqBook)
-        .replace("{PQCODES}", pqCodes)
-        .replace("{UNIVOCAB}", uniVocab)
-        .replace("{BPEMERGES}", bpeMerges))}" }
+      .map { case (k, v) =>
+        s"${q(k)}: ${q(tokens.foldLeft(v) { case (sql, (t, p)) => sql.replace(t, p) })}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Per-query metadata sidecar: row counts + vacuous markers +

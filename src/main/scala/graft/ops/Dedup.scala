@@ -698,14 +698,11 @@ object Dedup extends QueryFamily {
     import spark.implicits._
     val e0 = T.embeddings(spark, dir).select($"vec_id", $"label", $"embedding")
     val blocks = e0.groupBy($"label").agg(count(lit(1)).as("bn"))
-    val e = e0.join(broadcast(blocks), Seq("label"))
-      .withColumn("bits",
-        Similarity.scaledBits($"bn", targetBucket = 64, floor = 0, max = 16))
-      .withColumn("sg", Similarity.signBits(16))
-      .withColumn("cell", expr("substring(sg, 1, bits)"))
-    val a = e.select($"vec_id".as("a_id"), $"label", $"cell", $"embedding".as("va"))
-    val b = e.select($"vec_id".as("b_id"), $"label", $"cell", $"embedding".as("vb"))
-    a.join(b, Seq("label", "cell")).filter($"a_id" < $"b_id")
+    val e = Similarity.signBucket(e0.join(broadcast(blocks), Seq("label")),
+      Similarity.scaledBits($"bn", targetBucket = 64, floor = 0, max = 16))
+    val a = e.select($"vec_id".as("a_id"), $"label", $"bucket", $"embedding".as("va"))
+    val b = e.select($"vec_id".as("b_id"), $"label", $"bucket", $"embedding".as("vb"))
+    a.join(b, Seq("label", "bucket")).filter($"a_id" < $"b_id")
   }
 
   val qDedupEmbeddingSql: String =

@@ -311,15 +311,6 @@ object Multimodal extends QueryFamily {
     }(enc)
   }
 
-  /** Absolute path of the materialized 16x16 pixel side-table for one
-    * fixture dir — keyed by the fixture's basename so every scale
-    * factor gets its own sidecar. Lives under the repo's tools/fixtures
-    * (SPARK_GRAFT_FIXTURE_DIR overrides), where the DuckDB oracle can
-    * read it back (Verify substitutes the {THUMBS} token in oracle SQL
-    * with this path). */
-  def thumbsSidecarPath(dir: String): String =
-    Fixtures.sidecarPath(dir, "thumbs")
-
   /** Deterministic near-duplicate SEED thumbnails appended to every
     * fixture's sidecar (round-12 verdict task 5): the sf0.001/sf0.01
     * stub decodes genuinely contain no image near-dup pairs, which
@@ -346,17 +337,20 @@ object Multimodal extends QueryFamily {
   }
 
   /** Materialize the decode output once per fixture: (doc_id, px[256])
-    * to parquet at [[thumbsSidecarPath]], plus the [[seedThumbs]]
+    * to parquet at the `thumbs` sidecar path, plus the [[seedThumbs]]
     * rows. This is the round-10 verdict task-4 move — decode output
     * that never landed in a relation DuckDB could read made everything
     * DOWNSTREAM of decode rows-only; with the pixels parqueted,
     * image-derived operators (q_dedup_phash) get full differential
     * oracles even though decode itself stays engine-side.
     * Deterministic: same fixture -> same row set (MultimodalSpec pins
-    * it), so overwrite is idempotent. */
+    * it), so overwrite is idempotent. The path comes from the
+    * [[Fixtures]] registry, but unlike the trained indexes this
+    * sidecar is rewritten on every call (no freshness marker):
+    * MultimodalSpec's determinism check relies on each call writing. */
   def materializeThumbs(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    val path = thumbsSidecarPath(dir)
+    val path = Fixtures.sidecarPath(dir, "thumbs")
     val seeds = spark.createDataFrame(
       spark.sparkContext.parallelize(
         seedThumbs.map { case (id, px) => Row(id, px) }, 1),
@@ -436,8 +430,8 @@ object Multimodal extends QueryFamily {
       .orderBy($"a_id", $"b_id")
   }
 
-  /** `{THUMBS}` is substituted by Verify with [[thumbsSidecarPath]] of
-    * the run's fixture dir (the sidecar is written by the Spark side
+  /** `{THUMBS}` is substituted by Verify with the `thumbs` sidecar path
+    * of the run's fixture dir (the sidecar is written by the Spark side
     * during query construction, before DuckDB runs). */
   val qDedupPhashSql: String =
     """WITH t AS (SELECT doc_id, px, list_sum(px) / 256.0 AS mean

@@ -62,6 +62,15 @@ object Similarity extends QueryFamily {
       |              IF(substring(bucket, k, 1) = '1', '0', '1'),
       |              substring(bucket, k + 1, bits - k)) END)""".stripMargin))
 
+  /** THE sign-LSH bucket of a relation carrying `embedding`: adds
+    * `bits` (the hash depth) and `bucket`, the `bits`-long prefix of
+    * [[signBits]](16) — the key every bucketed candidate join of the
+    * LSH family (and [[hamming1Probes]]) works on. */
+  private[ops] def signBucket(df: DataFrame, bits: Column): DataFrame =
+    df.withColumn("bits", bits)
+      .withColumn("sg", signBits(16))
+      .withColumn("bucket", expr("substring(sg, 1, bits)"))
+
   /** Exact brute-force top-5 cosine neighbors for probe vectors
     * (vec_id < 10) against the whole corpus. The probe set is tiny, so
     * a plain per-probe ranking window would drag every scored corpus row
@@ -1279,10 +1288,8 @@ object Similarity extends QueryFamily {
     import spark.implicits._
     val e0 = T.embeddings(spark, dir)
     val n = e0.agg(count(lit(1)).as("n"))
-    val sizes = e0.crossJoin(broadcast(n))
-      .withColumn("bits", scaledBits($"n", targetBucket = 64, floor = 2, max = 16))
-      .withColumn("sg", signBits(16))
-      .withColumn("bucket", expr("substring(sg, 1, bits)"))
+    val sizes = signBucket(e0.crossJoin(broadcast(n)),
+        scaledBits($"n", targetBucket = 64, floor = 2, max = 16))
       .groupBy($"bucket").agg(count(lit(1)).as("s"))
     sizes.agg(count(lit(1)).as("n_buckets"), sum($"s").as("n_vecs"),
         max($"s").as("max_bucket"),
@@ -1552,48 +1559,28 @@ object Similarity extends QueryFamily {
         $"xf".cast("double").as("x"))
   }
 
-  /** Stored PQ codebook (c, sub, i, cx — label-mean centroids, i is
-    * the 0-based dimension) of a fixture. */
-  def pqCodebookSidecarPath(dir: String): String =
-    Fixtures.sidecarPath(dir, "pqcodebook")
-
-  /** Stored PQ-encoded corpus (n_id, sub, code — 4 codes per vector,
-    * the compressed index a billion-vector store actually holds). */
-  def pqCodesSidecarPath(dir: String): String =
-    Fixtures.sidecarPath(dir, "pqcodes")
-
   /** Build-once PQ index: train the codebook and encode the corpus to
-    * the two sidecars (same lifecycle discipline as
-    * [[materializeKnnGraph]] — the encode pass over the corpus is the
+    * the `pqcodebook` sidecar (c, sub, i, cx — label-mean centroids, i
+    * is the 0-based dimension) and the `pqcodes` sidecar (n_id, sub,
+    * code — 4 codes per vector, the compressed index a billion-vector
+    * store actually holds). The encode pass over the corpus is the
     * expensive half, and a production store pays it at build time,
-    * never per query). `q_pq_persist` proves stored == retrain. */
-  def materializePqIndex(spark: SparkSession, dir: String): (String, String) = {
-    import spark.implicits._
-    val bookPath = pqCodebookSidecarPath(dir)
-    val codesPath = pqCodesSidecarPath(dir)
-    if (!indexFresh(bookPath) || !indexFresh(codesPath)) {
+    * never per query ([[Fixtures]] lifecycle). `q_pq_persist` proves
+    * stored == retrain. */
+  private def materializePqIndex(spark: SparkSession, dir: String): Seq[String] =
+    Fixtures.materialize(dir, "pqcodebook", "pqcodes") {
+      import spark.implicits._
       val d = pqDims(spark, dir)
       val cent = d.groupBy($"label".as("c"), $"sub", $"i").agg(avg($"x").as("cx"))
         .ckpt() // train once; feeds the codebook write AND the encode
-      cent.write.mode("overwrite").parquet(bookPath)
-      markIndex(bookPath)
-      val dv = $"x" - $"cx"
-      val enc = d.join(broadcast(cent), Seq("sub", "i"))
-        .groupBy($"vec_id", $"sub", $"c").agg(sum(dv * dv).as("d2"))
-      val wEnc = Window.partitionBy($"vec_id", $"sub").orderBy(asc("d2"), asc("c"))
-      enc.withColumn("rn", row_number().over(wEnc)).filter($"rn" === 1)
-        .select($"vec_id".as("n_id"), $"sub", $"c".as("code"))
-        .write.mode("overwrite").parquet(codesPath)
-      markIndex(codesPath)
+      Seq(cent, pqArgminCodes(pqEncodeAgainst(d, cent)))
     }
-    (bookPath, codesPath)
-  }
 
   def storedPqCodebook(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(materializePqIndex(spark, dir)._1)
+    spark.read.parquet(materializePqIndex(spark, dir)(0))
 
   def storedPqCodes(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(materializePqIndex(spark, dir)._2)
+    spark.read.parquet(materializePqIndex(spark, dir)(1))
 
   /** The stored PQ index surfaced as a query: every vector's 4 codes,
     * each tagged with its codebook centroid's 6dp mean coordinate (so
@@ -1768,35 +1755,22 @@ object Similarity extends QueryFamily {
   /** Stored PRE-INSERT PQ index: codebook trained on the corpus MINUS
     * the [[PqDeltaSize]] delta batch, codes for the base vectors only
     * — the artifact [[qPqChurn]] maintains, mirroring
-    * [[materializeKnnBaseGraph]] for the graph family. The codebook
+    * [[storedKnnBaseGraph]] for the graph family. The codebook
     * genuinely never saw the delta at train time, which is what makes
     * the insert differential an honest lifecycle claim rather than a
-    * re-encode of training data. */
-  def pqBaseCodebookSidecarPath(dir: String): String =
-    Fixtures.sidecarPath(dir, "pqcodebook_base")
-
-  def pqBaseCodesSidecarPath(dir: String): String =
-    Fixtures.sidecarPath(dir, "pqcodes_base")
-
-  def materializePqBaseIndex(spark: SparkSession, dir: String): (String, String) = {
-    import spark.implicits._
-    val bookPath = pqBaseCodebookSidecarPath(dir)
-    val codesPath = pqBaseCodesSidecarPath(dir)
-    if (!indexFresh(bookPath) || !indexFresh(codesPath)) {
+    * re-encode of training data. Sidecars `pqcodebook_base` and
+    * `pqcodes_base`. */
+  private def materializePqBaseIndex(spark: SparkSession, dir: String): Seq[String] =
+    Fixtures.materialize(dir, "pqcodebook_base", "pqcodes_base") {
+      import spark.implicits._
       val n = T.embeddings(spark, dir).agg(count(lit(1)).as("n_all"))
       val d = pqDims(spark, dir).crossJoin(broadcast(n))
         .filter($"vec_id" < $"n_all" - PqDeltaSize)
         .ckpt() // feeds the codebook train AND the base encode
       val cent = d.groupBy($"label".as("c"), $"sub", $"i").agg(avg($"x").as("cx"))
         .ckpt()
-      cent.write.mode("overwrite").parquet(bookPath)
-      markIndex(bookPath)
-      pqArgminCodes(pqEncodeAgainst(d, cent))
-        .write.mode("overwrite").parquet(codesPath)
-      markIndex(codesPath)
+      Seq(cent, pqArgminCodes(pqEncodeAgainst(d, cent)))
     }
-    (bookPath, codesPath)
-  }
 
   /** COMPOSED PQ index maintenance — the maintained artifact itself,
     * not just the delta rows: the stored BASE codes (built before the
@@ -1813,9 +1787,9 @@ object Similarity extends QueryFamily {
     * |delta|-bounded encode; the base corpus is never re-encoded. */
   def qPqChurn(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (bookPath, codesPath) = materializePqBaseIndex(spark, dir)
-    val cent = spark.read.parquet(bookPath)
-    val baseCodes = spark.read.parquet(codesPath)
+    val paths = materializePqBaseIndex(spark, dir)
+    val cent = spark.read.parquet(paths(0))
+    val baseCodes = spark.read.parquet(paths(1))
     val deltaCodes = pqArgminCodes(
       pqEncodeAgainst(pqDeltaDims(spark, dir), cent))
     baseCodes.unionByName(deltaCodes)
@@ -2311,14 +2285,7 @@ object Similarity extends QueryFamily {
     * the ranking shuffle: only (src, nbr, cos) crosses it. */
   def qKnnGraph(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val scored = knnGraphCandidates(spark, dir)
-      .select($"src_id", $"nbr_id",
-        graft.functions.F.cosineSimilarity($"qv", $"v").as("cos"))
-    Skew.twoPhaseTopK(scored, Seq($"src_id"),
-        Seq(desc("cos"), asc("nbr_id")), k = 3, rankName = "rank")
-      .select($"src_id", $"rank".cast("long").as("rank"), $"nbr_id",
-        round($"cos", 4).as("cos"))
-      .orderBy($"src_id", $"rank")
+    knnEdgesOf(knnGraphCandidates(spark, dir)).orderBy($"src_id", $"rank")
   }
 
   /** Candidate edges (src_id, qv, nbr_id, v) of [[qKnnGraph]] — split
@@ -2328,15 +2295,9 @@ object Similarity extends QueryFamily {
     import spark.implicits._
     val e0 = T.embeddings(spark, dir)
     val n = e0.agg(count(lit(1)).as("n"))
-    val e = e0.crossJoin(broadcast(n))
-      .withColumn("bits", scaledBits($"n", targetBucket = 64, floor = 2, max = 16))
-      .withColumn("sg", signBits(16))
-      .withColumn("bucket", expr("substring(sg, 1, bits)"))
-    val l = e.withColumn("probe_bucket", hamming1Probes)
-      .select($"vec_id".as("src_id"), $"embedding".as("qv"), $"probe_bucket")
-    val r = e.select($"vec_id".as("nbr_id"), $"embedding".as("v"),
-      $"bucket".as("probe_bucket"))
-    l.join(r, Seq("probe_bucket")).filter($"src_id" =!= $"nbr_id")
+    val e = signBucket(e0.crossJoin(broadcast(n)),
+      scaledBits($"n", targetBucket = 64, floor = 2, max = 16))
+    knnCandidates(e, e)
   }
 
   val qKnnGraphSql: String =
@@ -2382,141 +2343,71 @@ object Similarity extends QueryFamily {
   // `q_index_persist` is the differential that proves stored==rebuild.
   // ------------------------------------------------------------------
 
-  /** Bumped whenever the stored-index DEFINITION changes: the
-    * freshness marker file embeds it, so a sidecar built by older code
-    * rebuilds instead of silently serving a stale graph. */
-  private val IndexVersion = 1
-
-  /** Stored FULL kNN-graph index of a fixture (all vectors). */
-  def graphSidecarPath(dir: String): String =
-    Fixtures.sidecarPath(dir, "knngraph")
-
-  /** Stored PRE-INSERT index (base corpus = all but the
-    * [[KnnDeltaSize]]-vector delta batch) — what [[qKnnGraphDelta]]
-    * maintains. */
-  def graphBaseSidecarPath(dir: String): String =
-    Fixtures.sidecarPath(dir, "knngraph_base")
-
-  private def indexFresh(path: String): Boolean =
-    !sys.env.get("SPARK_GRAFT_REBUILD_INDEX").contains("1") &&
-      new java.io.File(path, s"_GRAFT_INDEX_V$IndexVersion").isFile
-
-  private def markIndex(path: String): Unit =
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, s"_GRAFT_INDEX_V$IndexVersion"), "")
-
-  /** Build-once/serve-many: materialize the full [[qKnnGraph]] index +
-    * its build config to [[graphSidecarPath]]. Idempotent and
-    * version-guarded (the build is deterministic: rounded cosines,
-    * total-order tiebreaks), skipped when the artifact is fresh —
-    * that skip IS the lifecycle point, it's what makes every serve
-    * and maintain query pay serve-only cost. SPARK_GRAFT_REBUILD_INDEX=1
-    * forces a rebuild (the compaction path). */
-  def materializeKnnGraph(spark: SparkSession, dir: String): String = {
-    import spark.implicits._
-    val path = graphSidecarPath(dir)
-    if (!indexFresh(path)) {
+  /** Build-once/serve-many: the full [[qKnnGraph]] index + its build
+    * config as the `knngraph` sidecar ([[Fixtures]]). The build is
+    * deterministic (rounded cosines, total-order tiebreaks) and skipped
+    * while the artifact is fresh — that skip IS the lifecycle point,
+    * it's what makes every serve and maintain query pay serve-only
+    * cost. */
+  def storedKnnGraph(spark: SparkSession, dir: String): DataFrame =
+    Fixtures.stored(spark, dir, "knngraph") {
+      import spark.implicits._
       val bits = T.embeddings(spark, dir).agg(count(lit(1)).as("n"))
         .select(scaledBits($"n", targetBucket = 64, floor = 2, max = 16).as("bits"))
       qKnnGraph(spark, dir)
-        .withColumn("rank", $"rank".cast("long"))
         .crossJoin(broadcast(bits))
         .withColumn("hash_kind", lit("sign16"))
-        .write.mode("overwrite").parquet(path)
-      markIndex(path)
     }
-    path
-  }
 
-  def storedKnnGraph(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(materializeKnnGraph(spark, dir))
-
-  /** Materialize the PRE-INSERT base index: the graph over the base
-    * corpus under the base corpus's own scaled hash depth — the
-    * config [[qKnnGraphDelta]] then REUSES for the whole insert (an
-    * index's hash depth is a build-time constant; inserts never
-    * re-derive it). */
-  def materializeKnnBaseGraph(spark: SparkSession, dir: String): String = {
-    import spark.implicits._
-    val path = graphBaseSidecarPath(dir)
-    if (!indexFresh(path)) {
-      val e0 = T.embeddings(spark, dir)
-      val nAll = e0.agg(count(lit(1)).as("n_all"))
-      val base = e0.crossJoin(broadcast(nAll))
-        .filter($"vec_id" < $"n_all" - KnnDeltaSize)
-        .select($"vec_id", $"embedding")
-      val nBase = base.agg(count(lit(1)).as("n"))
-      val h = base.crossJoin(broadcast(nBase))
-        .withColumn("bits", scaledBits($"n", targetBucket = 64, floor = 2, max = 16))
-        .withColumn("sg", signBits(16))
-        .withColumn("bucket", expr("substring(sg, 1, bits)"))
-        .ckpt()
-      val cand = h.withColumn("probe_bucket", hamming1Probes)
-        .select($"vec_id".as("src_id"), $"embedding".as("qv"), $"probe_bucket")
-        .join(h.select($"vec_id".as("nbr_id"), $"embedding".as("v"),
-          $"bucket".as("probe_bucket")), Seq("probe_bucket"))
-        .filter($"src_id" =!= $"nbr_id")
-      knnEdgesOf(cand)
-        .crossJoin(broadcast(h.agg(max($"bits").as("bits"))))
-        .withColumn("hash_kind", lit("sign16"))
-        .write.mode("overwrite").parquet(path)
-      markIndex(path)
-    }
-    path
-  }
-
-  def storedKnnBaseGraph(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(materializeKnnBaseGraph(spark, dir))
-
-  /** Stored UPPER-LAYER graph (the HNSW-style coarse layer): the kNN
-    * graph over the deterministic 1/32 node sample (vec_id % 32 == 0),
-    * under the SAMPLE's own scaled hash depth. */
-  def upperGraphSidecarPath(dir: String): String =
-    Fixtures.sidecarPath(dir, "knngraph_upper")
-
-  /** The upper-layer graph WITHOUT the sidecar — the rebuild side of
-    * the stored==rebuild differential (SimilaritySpec), and the build
-    * body of [[materializeKnnUpperGraph]]. Same pipeline as the base
-    * layer: LSH-bucketed candidates among the sampled nodes only,
-    * hamming<=1 probes, [[knnEdgesOf]] top-3 ranking. */
-  private[graft] def buildKnnUpperGraph(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val up = T.embeddings(spark, dir)
-      .filter($"vec_id" % 32 === 0)
-      .select($"vec_id", $"embedding")
-    val nUp = up.agg(count(lit(1)).as("n"))
-    val h = up.crossJoin(broadcast(nUp))
-      .withColumn("bits", scaledBits($"n", targetBucket = 64, floor = 2, max = 16))
-      .withColumn("sg", signBits(16))
-      .withColumn("bucket", expr("substring(sg, 1, bits)"))
-      .ckpt()
-    val cand = h.withColumn("probe_bucket", hamming1Probes)
-      .select($"vec_id".as("src_id"), $"embedding".as("qv"), $"probe_bucket")
-      .join(h.select($"vec_id".as("nbr_id"), $"embedding".as("v"),
-        $"bucket".as("probe_bucket")), Seq("probe_bucket"))
-      .filter($"src_id" =!= $"nbr_id")
-    knnEdgesOf(cand)
+  /** The kNN graph over a vector subset (vec_id, embedding) under the
+    * SUBSET's own scaled hash depth, with its build config (bits,
+    * hash_kind) — the build of every stored layer below. Same pipeline
+    * as [[qKnnGraph]]: LSH-bucketed candidates among the subset only,
+    * hamming<=1 probes, [[knnEdgesOf]] top-3 ranking. ckpt: the hashed
+    * subset feeds both candidate sides and the config row. */
+  private def knnGraphOver(vecs: DataFrame): DataFrame = {
+    import vecs.sparkSession.implicits._
+    val v = vecs.select($"vec_id", $"embedding")
+    val n = v.agg(count(lit(1)).as("n"))
+    val h = signBucket(v.crossJoin(broadcast(n)),
+      scaledBits($"n", targetBucket = 64, floor = 2, max = 16)).ckpt()
+    knnEdgesOf(knnCandidates(h, h))
       .crossJoin(broadcast(h.agg(max($"bits").as("bits"))))
       .withColumn("hash_kind", lit("sign16"))
   }
 
-  /** Build-once/serve-many for the coarse layer — the same lifecycle
-    * as [[materializeKnnGraph]]: [[qKnnHierSearch]] and the serving-
-    * cost table pay serve-only cost once the artifact exists. At a
-    * 100 TB corpus the upper layer is 1/32 of the nodes, so its build
-    * is a rounding error next to the base graph's, and its whole edge
-    * relation is small enough to broadcast to every searcher. */
-  def materializeKnnUpperGraph(spark: SparkSession, dir: String): String = {
-    val path = upperGraphSidecarPath(dir)
-    if (!indexFresh(path)) {
-      buildKnnUpperGraph(spark, dir).write.mode("overwrite").parquet(path)
-      markIndex(path)
+  /** The stored PRE-INSERT base index (`knngraph_base`: the base corpus
+    * = all but the [[KnnDeltaSize]]-vector delta batch, under the base
+    * corpus's own scaled hash depth) — what [[qKnnGraphDelta]]
+    * maintains, REUSING its config for the whole insert (an index's
+    * hash depth is a build-time constant; inserts never re-derive
+    * it). */
+  def storedKnnBaseGraph(spark: SparkSession, dir: String): DataFrame =
+    Fixtures.stored(spark, dir, "knngraph_base") {
+      import spark.implicits._
+      val e0 = T.embeddings(spark, dir)
+      val nAll = e0.agg(count(lit(1)).as("n_all"))
+      knnGraphOver(e0.crossJoin(broadcast(nAll))
+        .filter($"vec_id" < $"n_all" - KnnDeltaSize))
     }
-    path
+
+  /** The UPPER-LAYER graph (the HNSW-style coarse layer) WITHOUT the
+    * sidecar: the kNN graph over the deterministic 1/32 node sample
+    * (vec_id % 32 == 0) — the rebuild side of the stored==rebuild
+    * differential (SimilaritySpec). */
+  private[graft] def buildKnnUpperGraph(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    knnGraphOver(T.embeddings(spark, dir).filter($"vec_id" % 32 === 0))
   }
 
+  /** The stored coarse layer (`knngraph_upper`): [[qKnnHierSearch]] and
+    * the serving-cost table pay serve-only cost once the artifact
+    * exists. At a 100 TB corpus the upper layer is 1/32 of the nodes,
+    * so its build is a rounding error next to the base graph's, and
+    * its whole edge relation is small enough to broadcast to every
+    * searcher. */
   def storedKnnUpperGraph(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(materializeKnnUpperGraph(spark, dir))
+    Fixtures.stored(spark, dir, "knngraph_upper")(buildKnnUpperGraph(spark, dir))
 
   /** The coarse quantizer REUSING a stored index's config: hash depth
     * comes from the artifact's `bits` column, never re-derived from
@@ -2525,9 +2416,7 @@ object Similarity extends QueryFamily {
     * under the stored config. */
   private[graft] def quantizerFromIndex(e0: DataFrame, idx: DataFrame): DataFrame = {
     import e0.sparkSession.implicits._
-    e0.crossJoin(broadcast(idx.agg(max($"bits").as("bits"))))
-      .withColumn("sg", signBits(16))
-      .withColumn("bucket", expr("substring(sg, 1, bits)"))
+    signBucket(e0.crossJoin(broadcast(idx.agg(max($"bits").as("bits")))), $"bits")
   }
 
   /** The stored index surfaced as a query: edges + build config, read
@@ -2586,19 +2475,30 @@ object Similarity extends QueryFamily {
     val e0 = T.embeddings(spark, dir)
     val n = e0.agg(count(lit(1)).as("n"))
     val bits = storedKnnBaseGraph(spark, dir).agg(max($"bits").as("bits"))
-    e0.crossJoin(broadcast(n))
-      .crossJoin(broadcast(bits))
-      .withColumn("sg", signBits(16))
-      .withColumn("bucket", expr("substring(sg, 1, bits)"))
+    signBucket(e0.crossJoin(broadcast(n)).crossJoin(broadcast(bits)), $"bits")
       .withColumn("is_new", $"vec_id" >= $"n" - KnnDeltaSize)
       .select($"vec_id", $"embedding", $"bits", $"bucket", $"is_new")
       .ckpt()
   }
 
-  /** Top-3 ranking stage shared by the delta pipeline's graph builds:
-    * candidates (src_id, qv, nbr_id, v) -> ranked edges. Identical
-    * ranking to [[qKnnGraph]] (two-phase top-k, vectors pruned before
-    * the ranking shuffle). */
+  /** Sign-LSH candidate pairs (src_id, qv, nbr_id, v): every `probes`
+    * vector explores its hamming<=1 probe buckets ([[hamming1Probes]])
+    * against `corpus`'s own buckets, self-pairs dropped. Both sides are
+    * already hashed ([[signBucket]]), so each caller keeps its own
+    * checkpoint choice. */
+  private def knnCandidates(probes: DataFrame, corpus: DataFrame): DataFrame = {
+    import probes.sparkSession.implicits._
+    probes.withColumn("probe_bucket", hamming1Probes)
+      .select($"vec_id".as("src_id"), $"embedding".as("qv"), $"probe_bucket")
+      .join(corpus.select($"vec_id".as("nbr_id"), $"embedding".as("v"),
+        $"bucket".as("probe_bucket")), Seq("probe_bucket"))
+      .filter($"src_id" =!= $"nbr_id")
+  }
+
+  /** Top-3 ranking stage of every kNN-graph build: candidates
+    * (src_id, qv, nbr_id, v) -> ranked edges (two-phase top-k, vectors
+    * pruned before the ranking shuffle, only (src, nbr, cos) crosses
+    * it). */
   private def knnEdgesOf(cand: DataFrame): DataFrame = {
     import cand.sparkSession.implicits._
     val scored = cand.select($"src_id", $"nbr_id",
@@ -2630,13 +2530,7 @@ object Similarity extends QueryFamily {
     import h.sparkSession.implicits._
     val affected = h.filter($"is_new").select($"vec_id")
       .unionByName(knnDeltaAffectedBase(h))
-    val probeSide = h.join(affected, Seq("vec_id"), "left_semi")
-      .withColumn("probe_bucket", hamming1Probes)
-      .select($"vec_id".as("src_id"), $"embedding".as("qv"), $"probe_bucket")
-    val corpusSide = h.select($"vec_id".as("nbr_id"), $"embedding".as("v"),
-      $"bucket".as("probe_bucket"))
-    probeSide.join(corpusSide, Seq("probe_bucket"))
-      .filter($"src_id" =!= $"nbr_id")
+    knnCandidates(h.join(affected, Seq("vec_id"), "left_semi"), h)
   }
 
   /** The recompute-stage candidates, standalone — split out so
@@ -2712,29 +2606,8 @@ object Similarity extends QueryFamily {
       .withColumn("is_del", $"vec_id" < KnnDeleteSize)
     // step 1: incremental insert onto the stored base index
     val maintained = knnDeltaMaintained(spark, dir, h).ckpt()
-    // step 2: incremental erasure FROM THE MAINTAINED GRAPH — only
-    // sources whose maintained top-3 contained a deleted neighbor
-    // re-rank against the survivors (candidates only shrink)
-    val deleted = h.filter($"is_del").select($"vec_id")
-    val affected = maintained
-      .join(deleted.select($"vec_id".as("nbr_id")), Seq("nbr_id"), "left_semi")
-      .select($"src_id").distinct()
-      .join(deleted.select($"vec_id".as("src_id")), Seq("src_id"), "left_anti")
-      .ckpt()
-    val kept = maintained
-      .join(deleted.select($"vec_id".as("src_id")), Seq("src_id"), "left_anti")
-      .join(affected, Seq("src_id"), "left_anti")
-    val probeSide = h.filter(!$"is_del")
-      .join(affected.select($"src_id".as("vec_id")), Seq("vec_id"), "left_semi")
-      .withColumn("probe_bucket", hamming1Probes)
-      .select($"vec_id".as("src_id"), $"embedding".as("qv"), $"probe_bucket")
-    val corpusSide = h.filter(!$"is_del")
-      .select($"vec_id".as("nbr_id"), $"embedding".as("v"),
-        $"bucket".as("probe_bucket"))
-    val recomputed = knnEdgesOf(
-      probeSide.join(corpusSide, Seq("probe_bucket"))
-        .filter($"src_id" =!= $"nbr_id"))
-    kept.unionByName(recomputed)
+    // step 2: incremental erasure FROM THE MAINTAINED GRAPH
+    knnDeleteMaintained(maintained, h)
       .orderBy($"src_id", $"rank")
   }
 
@@ -2893,57 +2766,61 @@ object Similarity extends QueryFamily {
     import spark.implicits._
     val e0 = T.embeddings(spark, dir)
     val bits = storedKnnGraph(spark, dir).agg(max($"bits").as("bits"))
-    e0.crossJoin(broadcast(bits))
-      .withColumn("sg", signBits(16))
-      .withColumn("bucket", expr("substring(sg, 1, bits)"))
+    signBucket(e0.crossJoin(broadcast(bits)), $"bits")
       .withColumn("is_del", $"vec_id" < KnnDeleteSize)
       .select($"vec_id", $"embedding", $"bits", $"bucket", $"is_del")
       .ckpt()
   }
 
-  /** Recompute candidates of the delete pipeline, standalone for
-    * ScaleSpec: probe side = sources whose STORED top-3 contains a
-    * deleted neighbor; corpus side = survivors. */
+  /** Live sources whose `graph` top-3 contains a deleted (`is_del`)
+    * vector of the hashed corpus `h` — the ONLY sources a delete can
+    * change: candidates only shrink, so a source whose shortlist kept
+    * all its members keeps its exact top-3 (survivors' relative order
+    * is untouched). Tighter than insert's affected-set (bucket
+    * visibility): delete locality is the deleted vectors' graph
+    * IN-DEGREE. ckpt: feeds the keep filter and the recompute. */
+  private def knnDeleteAffectedSources(graph: DataFrame, h: DataFrame): DataFrame = {
+    import h.sparkSession.implicits._
+    val deleted = h.filter($"is_del").select($"vec_id")
+    graph
+      .join(deleted.select($"vec_id".as("nbr_id")), Seq("nbr_id"), "left_semi")
+      .select($"src_id").distinct()
+      .join(deleted.select($"vec_id".as("src_id")), Seq("src_id"), "left_anti")
+      .ckpt()
+  }
+
+  /** Recompute candidates of a delete: the affected sources probing
+    * the survivors of `h`. */
+  private def knnDeleteRecomputeCand(affected: DataFrame, h: DataFrame): DataFrame = {
+    import h.sparkSession.implicits._
+    val live = h.filter(!$"is_del")
+    knnCandidates(
+      live.join(affected.select($"src_id".as("vec_id")), Seq("vec_id"), "left_semi"),
+      live)
+  }
+
+  /** Incremental erasure of `h`'s `is_del` vectors from `graph`: drop
+    * the deleted sources' rows, keep unaffected sources' rows as-is,
+    * re-rank the affected sources against the survivors under `h`'s
+    * pinned hash config — shared by [[qKnnGraphDelete]] (over the
+    * stored index) and [[qKnnGraphChurn]] (over the insert-maintained
+    * graph). */
+  private def knnDeleteMaintained(graph: DataFrame, h: DataFrame): DataFrame = {
+    import h.sparkSession.implicits._
+    val affected = knnDeleteAffectedSources(graph, h)
+    val kept = graph
+      .join(h.filter($"is_del").select($"vec_id".as("src_id")), Seq("src_id"), "left_anti")
+      .join(affected, Seq("src_id"), "left_anti")
+    kept.unionByName(knnEdgesOf(knnDeleteRecomputeCand(affected, h)))
+  }
+
+  /** Recompute candidates of [[qKnnGraphDelete]], standalone for
+    * ScaleSpec: the query's own path — sources whose STORED top-3
+    * contains a deleted neighbor, probing the survivors. */
   private[graft] def knnGraphDeleteRecomputeCandidates(
       spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val h = knnDeleteHashed(spark, dir)
-    val affected = knnDeleteAffected(h)
-    val probeSide = h.filter(!$"is_del")
-      .join(affected, Seq("vec_id"), "left_semi")
-      .withColumn("probe_bucket", hamming1Probes)
-      .select($"vec_id".as("src_id"), $"embedding".as("qv"), $"probe_bucket")
-    val corpusSide = h.filter(!$"is_del")
-      .select($"vec_id".as("nbr_id"), $"embedding".as("v"),
-        $"bucket".as("probe_bucket"))
-    probeSide.join(corpusSide, Seq("probe_bucket"))
-      .filter($"src_id" =!= $"nbr_id")
-  }
-
-  /** Live sources whose stored top-3 contains a deleted neighbor —
-    * the ONLY sources a delete can change: candidates only shrink, so
-    * a source whose shortlist kept all its members keeps its exact
-    * top-3 (survivors' relative order is untouched). Tighter than
-    * insert's affected-set (bucket visibility): delete locality is
-    * the deleted vectors' graph IN-DEGREE. */
-  private def knnDeleteAffected(h: DataFrame): DataFrame = {
-    import h.sparkSession.implicits._
-    val old = knnEdgesOf(knnDeleteFullCand(h))
-    val deleted = h.filter($"is_del").select($"vec_id")
-    old.join(deleted.select($"vec_id".as("nbr_id")), Seq("nbr_id"), "left_semi")
-      .select($"src_id".as("vec_id")).distinct()
-      .join(deleted, Seq("vec_id"), "left_anti")
-  }
-
-  /** Full-corpus candidate pairs over the delete pipeline's hashed
-    * relation — the stored pre-delete index's build input. */
-  private def knnDeleteFullCand(h: DataFrame): DataFrame = {
-    import h.sparkSession.implicits._
-    h.withColumn("probe_bucket", hamming1Probes)
-      .select($"vec_id".as("src_id"), $"embedding".as("qv"), $"probe_bucket")
-      .join(h.select($"vec_id".as("nbr_id"), $"embedding".as("v"),
-        $"bucket".as("probe_bucket")), Seq("probe_bucket"))
-      .filter($"src_id" =!= $"nbr_id")
+    knnDeleteRecomputeCand(knnDeleteAffectedSources(storedKnnGraph(spark, dir), h), h)
   }
 
   /** Incremental kNN-graph DELETE — the other half of index
@@ -2969,26 +2846,7 @@ object Similarity extends QueryFamily {
     // keep, and re-rank against it, never an inline rebuild
     val oldGraph = storedKnnGraph(spark, dir)
       .select($"src_id", $"rank", $"nbr_id", $"cos").ckpt()
-    val deleted = h.filter($"is_del").select($"vec_id")
-    val affected = oldGraph
-      .join(deleted.select($"vec_id".as("nbr_id")), Seq("nbr_id"), "left_semi")
-      .select($"src_id").distinct()
-      .join(deleted.select($"vec_id".as("src_id")), Seq("src_id"), "left_anti")
-      .ckpt()
-    val kept = oldGraph
-      .join(deleted.select($"vec_id".as("src_id")), Seq("src_id"), "left_anti")
-      .join(affected, Seq("src_id"), "left_anti")
-    val probeSide = h.filter(!$"is_del")
-      .join(affected.select($"src_id".as("vec_id")), Seq("vec_id"), "left_semi")
-      .withColumn("probe_bucket", hamming1Probes)
-      .select($"vec_id".as("src_id"), $"embedding".as("qv"), $"probe_bucket")
-    val corpusSide = h.filter(!$"is_del")
-      .select($"vec_id".as("nbr_id"), $"embedding".as("v"),
-        $"bucket".as("probe_bucket"))
-    val recomputed = knnEdgesOf(
-      probeSide.join(corpusSide, Seq("probe_bucket"))
-        .filter($"src_id" =!= $"nbr_id"))
-    kept.unionByName(recomputed)
+    knnDeleteMaintained(oldGraph, h)
       .orderBy($"src_id", $"rank")
   }
 
@@ -3037,10 +2895,8 @@ object Similarity extends QueryFamily {
     import spark.implicits._
     val e0 = T.embeddings(spark, dir)
     val n = e0.agg(count(lit(1)).as("n"))
-    val e = e0.crossJoin(broadcast(n))
-      .withColumn("bits", scaledBits($"n", targetBucket = 64, floor = 2, max = 16))
-      .withColumn("sg", signBits(16))
-      .withColumn("bucket", expr("substring(sg, 1, bits)"))
+    val e = signBucket(e0.crossJoin(broadcast(n)),
+      scaledBits($"n", targetBucket = 64, floor = 2, max = 16))
     val probes = e.filter($"vec_id" < 10)
       .withColumn("probe_bucket", hamming1Probes)
       .select($"vec_id".as("q_id"), $"embedding".as("qv"), $"probe_bucket")
@@ -3097,10 +2953,8 @@ object Similarity extends QueryFamily {
     import spark.implicits._
     val e0 = T.embeddings(spark, dir)
     val n = e0.agg(count(lit(1)).as("n"))
-    val e = e0.crossJoin(broadcast(n))
-      .withColumn("bits", scaledBits($"n", targetBucket = 64, floor = 2, max = 16))
-      .withColumn("sg", signBits(16))
-      .withColumn("bucket", expr("substring(sg, 1, bits)"))
+    val e = signBucket(e0.crossJoin(broadcast(n)),
+        scaledBits($"n", targetBucket = 64, floor = 2, max = 16))
       .select($"vec_id", $"label", $"embedding", $"bits", $"bucket")
       .cache() // anchors + positives + negative candidates, one scan
     val anchors = e.filter($"vec_id" < 10)

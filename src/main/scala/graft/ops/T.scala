@@ -181,18 +181,25 @@ object T {
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }
 
-/** Fixture-keyed sidecar parquet locations shared by the operators
-  * that MATERIALIZE an artifact both engines then read (the decode
-  * pixel table, the stored kNN-graph index): absolute paths under the
-  * repo's `tools/fixtures` (SPARK_GRAFT_FIXTURE_DIR overrides), keyed
-  * by the fixture's basename so every scale factor gets its own
-  * artifact. The oracle SQL embeds these absolute paths via Verify's
-  * token substitution ({THUMBS}/{GRAPH}/...), so the Spark writer and
-  * the DuckDB reader must agree on the location — the root is anchored
-  * to the repo that owns THIS compiled class (the first ancestor of
-  * the class's code source carrying build.sbt), depending on neither
-  * the invoking process's working directory nor a hardcoded checkout
-  * location. */
+/** Stored artifacts ("sidecars") derived from a fixture and read back
+  * by both engines: the decode pixel table, the kNN-graph layers, the
+  * PQ codebooks and codes, the unigram vocabulary and the BPE merge
+  * table. This object owns every sidecar rule in one place:
+  *  - WHERE: absolute paths under the repo's `tools/fixtures`
+  *    (SPARK_GRAFT_FIXTURE_DIR overrides), keyed by the fixture's
+  *    basename so every scale factor gets its own artifact. The root is
+  *    anchored to the repo that owns THIS compiled class (the first
+  *    ancestor of the class's code source carrying build.sbt), so the
+  *    Spark writer and the DuckDB reader agree on the location no
+  *    matter the invoking process's working directory. The oracle SQL
+  *    names each sidecar by its token ({THUMBS}, {GRAPH}, ...), which
+  *    Verify substitutes from [[tokens]].
+  *  - WHEN: a sidecar is fresh iff its marker file records the current
+  *    [[Version]] and the fingerprint (relative path, size, mtime of
+  *    every file) of the fixture table it derives from. Anything else —
+  *    older code, an in-place fixture edit, a missing marker, or the
+  *    forced-rebuild switch read in [[fresh]] (the compaction path) —
+  *    rebuilds. */
 object Fixtures {
   def root: String = sys.env.getOrElse("SPARK_GRAFT_FIXTURE_DIR", {
     val codeSrc = try {
@@ -207,7 +214,81 @@ object Fixtures {
       .getOrElse(new java.io.File("tools/fixtures").getAbsolutePath)
   })
 
+  /** kind -> (oracle SQL token, fixture table it derives from). */
+  private val registry: Map[String, (String, String)] = Map(
+    "thumbs"          -> ("THUMBS", "documents"),
+    "knngraph"        -> ("GRAPH", "embeddings"),
+    "knngraph_base"   -> ("GRAPHBASE", "embeddings"),
+    "knngraph_upper"  -> ("GRAPHUPPER", "embeddings"),
+    "pqcodebook"      -> ("PQCODEBOOK", "embeddings"),
+    "pqcodes"         -> ("PQCODES", "embeddings"),
+    "pqcodebook_base" -> ("PQCODEBOOKBASE", "embeddings"),
+    "pqcodes_base"    -> ("PQCODESBASE", "embeddings"),
+    "univocab"        -> ("UNIVOCAB", "documents"),
+    "bpemerges"       -> ("BPEMERGES", "documents"))
+
   /** `{root}/{kind}_{fixture-basename}.parquet` */
-  def sidecarPath(dir: String, kind: String): String =
+  def sidecarPath(dir: String, kind: String): String = {
+    require(registry.contains(kind), s"unregistered sidecar kind: $kind")
     s"$root/${kind}_${new java.io.File(dir).getName}.parquet"
+  }
+
+  /** `{TOKEN}` -> this fixture's sidecar path, for every kind. */
+  def tokens(dir: String): Seq[(String, String)] =
+    registry.toSeq.map { case (kind, (token, _)) =>
+      s"{$token}" -> sidecarPath(dir, kind) }
+
+  /** Bumped whenever a stored artifact's DEFINITION changes, so a
+    * sidecar built by older code rebuilds instead of serving. */
+  private[graft] val Version = 2
+
+  /** Freshness marker written inside each sidecar directory (Spark's
+    * reader skips `_`-prefixed files; DuckDB reads `*.parquet`). */
+  private[graft] val Marker = "_GRAFT_SIDECAR"
+
+  /** The marker's contents: [[Version]], then one `path size mtime` line
+    * per file of the source fixture table, paths relative to `dir`. */
+  private def stamp(dir: String, kind: String): String = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val base = Paths.get(dir)
+    val files = scala.util.Using.resource(
+      Files.walk(base.resolve(s"${registry(kind)._2}.parquet")))(
+      _.iterator.asScala.filter(Files.isRegularFile(_)).toList)
+    (s"v$Version" +: files.map(f =>
+      s"${base.relativize(f)} ${Files.size(f)} ${Files.getLastModifiedTime(f).toMillis}")
+      .sorted).mkString("", "\n", "\n")
+  }
+
+  private def fresh(dir: String, kind: String): Boolean = {
+    val marker = new java.io.File(sidecarPath(dir, kind), Marker)
+    !sys.env.get("SPARK_GRAFT_REBUILD_INDEX").contains("1") && marker.isFile &&
+      java.nio.file.Files.readString(marker.toPath) == stamp(dir, kind)
+  }
+
+  /** Write `df` as `dir`'s `kind` sidecar and stamp it fresh — the
+    * build step of [[materialize]], and the hook that serves an
+    * externally-trained artifact (e.g. a vocabulary from another
+    * corpus) as this fixture's own. */
+  def install(dir: String, kind: String, df: DataFrame): String = {
+    val path = sidecarPath(dir, kind)
+    df.write.mode("overwrite").parquet(path)
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(path, Marker), stamp(dir, kind))
+    path
+  }
+
+  /** Build-once/serve-many: unless every `kinds` sidecar of `dir` is
+    * fresh, evaluate `build` (one relation per kind, written in order,
+    * so one build can feed several artifacts) and [[install]] each.
+    * Returns the paths, in `kinds` order. */
+  def materialize(dir: String, kinds: String*)(build: => Seq[DataFrame]): Seq[String] = {
+    if (!kinds.forall(fresh(dir, _)))
+      kinds.zip(build).foreach { case (kind, df) => install(dir, kind, df) }
+    kinds.map(sidecarPath(dir, _))
+  }
+
+  /** The `kind` sidecar of `dir`, built by `build` when stale. */
+  def stored(spark: SparkSession, dir: String, kind: String)(build: => DataFrame): DataFrame =
+    spark.read.parquet(materialize(dir, kind)(Seq(build)).head)
 }

@@ -781,53 +781,17 @@ object Text extends QueryFamily {
        |${(1 to 8).map(row).mkString("UNION ALL\n")}ORDER BY step""".stripMargin
   }
 
-  /** Version stamp for the stored BPE merge table; bumping invalidates
-    * sidecars built by older code (same discipline as
-    * [[materializeUniVocab]]). */
-  private val BpeMergesVersion = 1
-
-  /** Stored depth-8 BPE merge table of a fixture: (step, lft, rgt,
-    * merged) from [[qBpeTrain8]]. */
-  def bpeMergesSidecarPath(dir: String): String =
-    Fixtures.sidecarPath(dir, "bpemerges")
-
-  private def bpeMergesFresh(path: String): Boolean =
-    !sys.env.get("SPARK_GRAFT_REBUILD_INDEX").contains("1") &&
-      new java.io.File(path, s"_GRAFT_BPEMERGES_V$BpeMergesVersion").isFile
-
   /** Build-once/serve-many for the TRAINED BPE tokenizer (round-15
     * verdict task 3, completing build→serve symmetry with the unigram
-    * family): the depth-8 merge table materializes once per fixture
-    * and every serve pass reads the STORED rules. The build is the
-    * SAME code path as [[qBpeTrain8]] (integer pair counts, lexical
-    * tie-break), so stored == retrain is exact equality
-    * (DedupTextSpec pins it). SPARK_GRAFT_REBUILD_INDEX=1 forces a
-    * rebuild. */
-  def materializeBpeMerges(spark: SparkSession, dir: String): String = {
-    val path = bpeMergesSidecarPath(dir)
-    if (!bpeMergesFresh(path)) {
-      qBpeTrain8(spark, dir).select("step", "lft", "rgt", "merged")
-        .write.mode("overwrite").parquet(path)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(path, s"_GRAFT_BPEMERGES_V$BpeMergesVersion"), "")
-    }
-    path
-  }
-
+    * family): the depth-8 merge table (step, lft, rgt, merged) from
+    * [[qBpeTrain8]] materializes once per fixture as the `bpemerges`
+    * sidecar ([[Fixtures]]) and every serve pass reads the STORED
+    * rules. The build is the SAME code path as [[qBpeTrain8]] (integer
+    * pair counts, lexical tie-break), so stored == retrain is exact
+    * equality (DedupTextSpec pins it). */
   def storedBpeMerges(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(materializeBpeMerges(spark, dir))
-
-  /** Test hook: install an externally-trained merge table as `dir`'s
-    * stored sidecar (see [[installUniVocab]] — the fertility-drift
-    * path needs rules trained on a DIFFERENT corpus). */
-  private[graft] def installBpeMerges(
-      spark: SparkSession, merges: DataFrame, dir: String): String = {
-    val path = bpeMergesSidecarPath(dir)
-    merges.write.mode("overwrite").parquet(path)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, s"_GRAFT_BPEMERGES_V$BpeMergesVersion"), "")
-    path
-  }
+    Fixtures.stored(spark, dir, "bpemerges")(
+      qBpeTrain8(spark, dir).select("step", "lft", "rgt", "merged"))
 
   /** Encode the distinct-word table under the stored merge rules: the
     * 8-row merge table is collected (bounded — depth, not data) and
@@ -2531,7 +2495,7 @@ object Text extends QueryFamily {
     * pieces); `scores2` is the hard-EM re-estimated vocabulary
     * (p, u1, lp) — every quantity derives from INTEGER usage counts
     * (u1, Σu1, |vocab|), so `lp` is bit-for-bit reproducible across
-    * builds: the property [[materializeUniVocab]]'s stored==retrain
+    * builds: the property [[storedUniVocab]]'s stored==retrain
     * differential rests on. */
   private def uniEm2Pipeline(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import spark.implicits._
@@ -2658,57 +2622,16 @@ object Text extends QueryFamily {
   private[graft] def uniEm2Scores(spark: SparkSession, dir: String): DataFrame =
     uniEm2Pipeline(spark, dir)._2
 
-  /** Version stamp for the stored unigram vocabulary: bumping it
-    * invalidates sidecars built by older code (the
-    * [[graft.ops.Similarity]] index-freshness discipline). */
-  private val UniVocabVersion = 1
-
-  /** Stored trained unigram-LM vocabulary of a fixture: the EM-2
-    * piece scores (p, u1, lp) from [[uniEm2Pipeline]]. */
-  def uniVocabSidecarPath(dir: String): String =
-    Fixtures.sidecarPath(dir, "univocab")
-
-  private def uniVocabFresh(path: String): Boolean =
-    !sys.env.get("SPARK_GRAFT_REBUILD_INDEX").contains("1") &&
-      new java.io.File(path, s"_GRAFT_UNIVOCAB_V$UniVocabVersion").isFile
-
   /** Build-once/serve-many for the TRAINED tokenizer (round-14
     * verdict task 3 — the tokenizer family's q_index_persist): the
-    * EM-2 vocabulary materializes to [[uniVocabSidecarPath]] and every
-    * serve pass ([[qUnigramApply]]) reads the STORED artifact instead
-    * of retraining. The build is exactly reproducible — lp derives
-    * from integer usage counts only — so stored == retrain is a
-    * bit-equality check (TextSpec pins it). SPARK_GRAFT_REBUILD_INDEX=1
-    * forces a rebuild. */
-  def materializeUniVocab(spark: SparkSession, dir: String): String = {
-    val path = uniVocabSidecarPath(dir)
-    if (!uniVocabFresh(path)) {
-      uniEm2Pipeline(spark, dir)._2
-        .write.mode("overwrite").parquet(path)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(path, s"_GRAFT_UNIVOCAB_V$UniVocabVersion"), "")
-    }
-    path
-  }
-
+    * EM-2 vocabulary (p, u1, lp) materializes as the `univocab` sidecar
+    * ([[Fixtures]]) and every serve pass ([[qUnigramApply]]) reads the
+    * STORED artifact instead of retraining. The build is exactly
+    * reproducible — lp derives from integer usage counts only — so
+    * stored == retrain is a bit-equality check (DedupTextSpec pins
+    * it). */
   def storedUniVocab(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(materializeUniVocab(spark, dir))
-
-  /** Test hook: install an externally-trained vocabulary as `dir`'s
-    * stored sidecar, stamped fresh at the current version. A
-    * self-trained sidecar covers every character of its own corpus
-    * (segmentability floor), so the serve passes' OOV/char-fallback
-    * path is unreachable without serving under a vocab trained on a
-    * DIFFERENT corpus — which is exactly the production shape
-    * (frozen tokenizer, new shards). */
-  private[graft] def installUniVocab(
-      spark: SparkSession, vocab: DataFrame, dir: String): String = {
-    val path = uniVocabSidecarPath(dir)
-    vocab.write.mode("overwrite").parquet(path)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, s"_GRAFT_UNIVOCAB_V$UniVocabVersion"), "")
-    path
-  }
+    Fixtures.stored(spark, dir, "univocab")(uniEm2Pipeline(spark, dir)._2)
 
   /** Tokenizer SERVE pass — encode the whole corpus under the STORED
     * trained unigram vocabulary (round-14 verdict task 3: the family

@@ -724,12 +724,12 @@ class DedupTextSpec extends AnyFunSuite {
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     write(ascii, trainDir)
     write(ascii ++ shard, serveDir)
-    val vocabPathA = ops.Text.materializeUniVocab(spark, trainDir)
-    val vocabPathB = ops.Text.installUniVocab(
-      spark, spark.read.parquet(vocabPathA), serveDir)
-    val mergesPathA = ops.Text.materializeBpeMerges(spark, trainDir)
-    val mergesPathB = ops.Text.installBpeMerges(
-      spark, spark.read.parquet(mergesPathA), serveDir)
+    val vocabPathA = ops.Fixtures.sidecarPath(trainDir, "univocab")
+    val vocabPathB = ops.Fixtures.install(
+      serveDir, "univocab", ops.Text.storedUniVocab(spark, trainDir))
+    val mergesPathA = ops.Fixtures.sidecarPath(trainDir, "bpemerges")
+    val mergesPathB = ops.Fixtures.install(
+      serveDir, "bpemerges", ops.Text.storedBpeMerges(spark, trainDir))
     try {
       val bynSrc = ops.Text.qUnigramApply(spark, serveDir).collect()
         .map(r => r.getAs[String]("source") -> r).toMap
