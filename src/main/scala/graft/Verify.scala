@@ -1,6 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import scala.collection.immutable.ListMap
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -31,24 +30,14 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     val fixture = new java.io.File(sfDir).getName
-    // Local-iteration subset: SPARK_GRAFT_ONLY=q_a,q_b dumps (and pairs
-    // oracle SQL for) just those queries. Unset for driver runs.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    def keep(name: String): Boolean = only.forall(_.contains(name))
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
     val rowCounts = scala.collection.mutable.LinkedHashMap[String, Long]()
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
+    // SPARK_GRAFT_ONLY=q_a,q_b dumps (and pairs oracle SQL for) just
+    // those queries
+    Harness.queries.foreach { case (name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
@@ -65,18 +54,6 @@ object Verify {
       // a ~200-query session from accumulating executor storage
       finally spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Token substitution: {THUMBS}/{GRAPH}/... -> this run's sidecar
     // paths (written during query construction above, so they exist by
     // the time the DuckDB oracle reads them), from the one sidecar
@@ -86,25 +63,20 @@ object Verify {
     // missing dump would compare DuckDB against stale state instead of
     // reporting the Spark failure.
     val tokens = graft.ops.Fixtures.tokens(sfDir)
-    val json = SparkEntry.oracleSql
-      .filter(kv => keep(kv._1) && !failures.contains(kv._1))
+    Harness.writeJson(s"$outDir/oracle_sql.json", SparkEntry.oracleSql
+      .filter(kv => Harness.selected(kv._1) && !failures.contains(kv._1))
       .map { case (k, v) =>
-        s"${q(k)}: ${q(tokens.foldLeft(v) { case (sql, (t, p)) => sql.replace(t, p) })}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+        k -> tokens.foldLeft(v) { case (sql, (t, p)) => sql.replace(t, p) } })
     // Per-query metadata sidecar: row counts + vacuous markers +
     // Spark-side failures, for t2_local.py and the round artifacts.
     val metaRows = rowCounts.map { case (name, n) =>
       val vac = n == 0L
       val declared = declaredVacuous.get(name).exists(_.contains(fixture))
-      s"""${q(name)}: {"spark_rows": $n, "vacuous": $vac,""" +
-        s""" "declared_vacuous": $declared,""" +
-        s""" "unexpected_vacuous": ${vac && !declared}}"""
-    }.mkString("{", ",", "}")
-    val failRows = failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/verify_meta.json"),
-      s"""{"fixture": ${q(fixture)}, "queries": $metaRows, "failures": $failRows}""")
+      name -> ListMap("spark_rows" -> n, "vacuous" -> vac,
+        "declared_vacuous" -> declared, "unexpected_vacuous" -> (vac && !declared))
+    }
+    Harness.writeJson(s"$outDir/verify_meta.json",
+      ListMap("fixture" -> fixture, "queries" -> metaRows, "failures" -> failures))
     // exit 0 even with per-query failures: the driver must still read
     // the dumps that DID land (a nonzero exit could zero the whole
     // round); the failures are loud through the missing dump, the

@@ -19,12 +19,14 @@ object Main {
 
   def parseArgs(args: Seq[String],
       env: Map[String, String] = sys.env): Either[String, (ExportConfig, Map[String, String])] = {
-    var cfg = ExportConfig.fromEnv(env)
+    var cfg = ExportConfig()
     var extras = Map[String, String]("source-format" -> "jdbc")
     var schemas = Vector.empty[String]
     var i = 0
     def next(): String = { i += 1; args(i) }
     try {
+      // env/.env defaults go through the same value checks as flags
+      cfg = ExportConfig.fromEnv(env)
       while (i < args.length) {
         args(i) match {
           case "--version" => return Left(s"oracle-parquet-dumper-spark $version")

@@ -103,9 +103,11 @@ final class ParquetSink(cfg: ExportConfig) {
     * stay narrow on BOTH columns and scans filtered on either dimension
     * prune files. The complement to [[writeBucketed]]: bucketing
     * co-locates equi-joins, z-ordering co-locates range predicates.
-    * One bounded aggregate fetches the two global ranges (4 scalars to
-    * the driver); the sort is a range repartition on the z-value —
-    * fully distributed, no single-partition funnel. */
+    * One bounded aggregate fetches the two global ranges and the row
+    * count; a fixed-seed sample of the z-value places the file bounds,
+    * so the same input always yields the same files; the sort is a
+    * shuffle into those ranges — fully distributed, no
+    * single-partition funnel. */
   def writeZOrdered(df: DataFrame, schema: String, table: String,
       zCols: (String, String), files: Int): WriteStats =
     writeCurveClustered(df, schema, table, zCols, files,
@@ -120,6 +122,13 @@ final class ParquetSink(cfg: ExportConfig) {
     writeCurveClustered(df, schema, table, cCols, files,
       graft.functions.ZOrder.hilbertValue(_, _, _, _, _, _))
 
+  /** Curve values sampled per output file to place the file bounds:
+    * the budget of Spark's own range partitioner (100 points per
+    * output partition, oversampled 3x), capped like its total so the
+    * sample collected to the driver stays bounded at any file count. */
+  private val SamplePerFile = 300
+  private val MaxSample = 1000000L
+
   private def writeCurveClustered(df: DataFrame, schema: String, table: String,
       cCols: (String, String), files: Int,
       curve: (org.apache.spark.sql.Column, Double, Double,
@@ -132,12 +141,31 @@ final class ParquetSink(cfg: ExportConfig) {
     val (cx, cy) = cCols
     val r = df.agg(
       min(col(cx).cast("double")), max(col(cx).cast("double")),
-      min(col(cy).cast("double")), max(col(cy).cast("double"))).head()
-    val z = curve(
+      min(col(cy).cast("double")), max(col(cy).cast("double")),
+      count(lit(1))).head()
+    val withZ = df.withColumn("__z", curve(
       col(cx), r.getDouble(0), r.getDouble(1),
-      col(cy), r.getDouble(2), r.getDouble(3))
-    df.withColumn("__z", z)
-      .repartitionByRange(files, col("__z"))
+      col(cy), r.getDouble(2), r.getDouble(3)))
+    // File bounds: quantiles of a fixed-seed sample of the curve value.
+    // repartitionByRange seeds its sample with the RDD id, which would
+    // make the bounds, and each file's footer box, depend on the
+    // session's earlier work.
+    val budget = math.min(SamplePerFile.toLong * files, MaxSample)
+    val fraction = math.min(1.0, budget.toDouble / math.max(r.getLong(4), 1L))
+    val sample = withZ.select(col("__z")).where(col("__z").isNotNull)
+      .sample(withReplacement = false, fraction, seed = 0L)
+      .collect().map(_.getLong(0)).sorted
+    val bounds = if (sample.isEmpty) Array.emptyLongArray
+      else (1 until files).map(k => sample((k.toLong * sample.length / files).toInt))
+        .distinct.toArray
+    // file k holds the z-values in (bounds(k-1), bounds(k)], found by
+    // one binary search per row; nulls sort first, so they go to file 0
+    val fileOf = udf { (z: Long) =>
+      val i = java.util.Arrays.binarySearch(bounds, z)
+      if (i >= 0) i else -i - 1
+    }
+    withZ
+      .repartitionById(files, coalesce(fileOf(col("__z")), lit(0)))
       .sortWithinPartitions("__z")
       .select(df.columns.map(col): _*)
       .write

@@ -25,4 +25,15 @@ object GraftShims {
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
+
+  /** Blocks until every listener has seen every event posted so far
+    * (the listener bus is private[spark]); listener counters read after
+    * this are complete. A drain slower than a minute is logged and
+    * skipped: it may leave counters short but never fails the caller. */
+  def drainListeners(spark: SparkSession): Unit =
+    try spark.sparkContext.listenerBus.waitUntilEmpty(60000L)
+    catch {
+      case e: java.util.concurrent.TimeoutException =>
+        System.err.println(s"[graft] listener bus not drained: ${e.getMessage}")
+    }
 }

@@ -339,6 +339,14 @@ class CliSpec extends AnyFunSuite {
         .left.exists(_.startsWith("bad numeric value")), bad)
     assert(graft.cli.Main.parseArgs(Seq("--source-format", "parquet"))
       .left.exists(_.startsWith("missing value for --source-root")))
+    // environment defaults take the same path as flags: no exception
+    // escapes parseArgs
+    for ((k, v, prefix) <- Seq(("BATCH_SIZE", "abc", "bad numeric value"),
+        ("DATABASE_PORT", "x", "bad numeric value"),
+        ("BATCH_SIZE", "0", "bad flag value"),
+        ("ISOLATION_LEVEL", "sometimes", "bad flag value")))
+      assert(graft.cli.Main.parseArgs(Seq.empty, Map(k -> v))
+        .left.exists(_.startsWith(prefix)), s"$k=$v")
     val Right((cfg, _)) =
       graft.cli.Main.parseArgs(Seq("--password", "hunter2")): @unchecked
     assert(!graft.cli.Main.redacted(cfg).contains("hunter2"))

@@ -67,6 +67,34 @@ class ZOrderSpec extends AnyFunSuite {
     assert(zOrd < 0.75 * rrOrd, s"orderkey locality $zOrd vs $rrOrd")
   }
 
+  test("clustered write at a thousand files keeps every row and gives each file its own curve range") {
+    // the export sizes --cluster-by layouts by bytes, up to 10000 files;
+    // a row's file is found by binary search over the sampled bounds
+    val li = ops.T.lineitem(spark, sf).select($"l_orderkey", $"l_partkey")
+    val files = 1000
+    val out = freshDir()
+    val sink = new ParquetSink(ExportConfig(outputDirectory = out, overwrite = true))
+    sink.prepareRoot()
+    val stats = sink.writeHilbertOrdered(li, "s", "li_many", ("l_partkey", "l_orderkey"), files)
+
+    val back = spark.read.parquet(stats.outputDir)
+    assert(back.count() === li.count())
+    // the write's curve value, recomputed from the same global ranges
+    val r = li.agg(
+      min($"l_partkey".cast("double")), max($"l_partkey".cast("double")),
+      min($"l_orderkey".cast("double")), max($"l_orderkey".cast("double"))).head()
+    val z = functions.ZOrder.hilbertValue(
+      $"l_partkey", r.getDouble(0), r.getDouble(1),
+      $"l_orderkey", r.getDouble(2), r.getDouble(3))
+    val spans = back.select(z.as("z"), input_file_name().as("f"))
+      .groupBy($"f").agg(min($"z").as("lo"), max($"z").as("hi"))
+      .orderBy($"lo").collect().map(row => (row.getLong(1), row.getLong(2)))
+    assert(spans.length > files / 2, s"only ${spans.length} of $files files written")
+    spans.sliding(2).foreach { case Array((_, hi), (lo, _)) =>
+      assert(hi < lo, s"two files share curve values: one ends at $hi, the next starts at $lo")
+    }
+  }
+
   test("q_zorder_scan pushes both range predicates into the parquet scan") {
     // formatted mode: the simple-string plan truncates PushedFilters
     val plan = ops.ExportOps.zorderScan(spark, sf)
