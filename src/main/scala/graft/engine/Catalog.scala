@@ -174,7 +174,7 @@ final class ParquetCatalog(root: Path) extends TableCatalog {
   override def listColumns(schema: String, table: String): Seq[ColumnMeta] = {
     val spark = org.apache.spark.sql.SparkSession.active
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(tablePath(schema, table))
+    val df = ParquetTables.read(spark, tablePath(schema, table))
     df.schema.fields.zipWithIndex.toSeq.map { case (f, i) =>
       ColumnMeta(f.name, f.dataType.simpleString, i + 1)
     }

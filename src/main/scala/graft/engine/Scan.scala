@@ -31,7 +31,7 @@ final class ParquetSource(catalog: ParquetCatalog) extends TableSource {
     // (the reference likewise emits whatever physical type the driver
     // hands it, main.py:156-170).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(catalog.tablePath(schema, table))
+    val df = ParquetTables.read(spark, catalog.tablePath(schema, table))
     val projected = Projection(df, cols.map(_.name), lowercase)
     if (rowLimit >= 0) projected.limit(rowLimit.toInt) else projected
   }

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, count, lit, log, round, substring, floor}
 
+import graft.engine.ParquetTables
+
 /** Export-pipeline roundtrip registered as a t2 query: runs the Tier-A
   * Exporter (catalog discovery -> projection -> scan -> rolling sink)
   * on the fixture schema into a temp directory, reads the exported
@@ -24,7 +26,7 @@ object ExportOps extends QueryFamily {
     val catalog = new ParquetCatalog(src.getParent)
     new Exporter(cfg, catalog, new ParquetSource(catalog), new ParquetSink(cfg))
       .exportTables(spark)
-    spark.read.parquet(s"$out/${src.getFileName}/lineitem")
+    ParquetTables.read(spark, s"$out/${src.getFileName}/lineitem")
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"),
         round(sum(col("l_quantity")), 2).as("sum_qty"))
@@ -319,7 +321,7 @@ object ExportOps extends QueryFamily {
       // scale); with it each month is written by one task
       .repartition(col("om"))
       .write.mode("overwrite").partitionBy("om").parquet(out)
-    spark.read.parquet(out)
+    ParquetTables.read(spark, out)
       .filter($"om" >= "1996-01" && $"om" <= "1996-12")
   }
 
@@ -839,7 +841,7 @@ object ExportOps extends QueryFamily {
     * count. */
   def zorderScan(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    spark.read.parquet(zorderedLayout(spark, dir))
+    ParquetTables.read(spark, zorderedLayout(spark, dir))
       .filter(col("l_partkey").between(100, 300) &&
         col("l_orderkey").between(1000, 20000))
   }
@@ -891,7 +893,7 @@ object ExportOps extends QueryFamily {
     * two differentials exercise distinct selections. */
   def hilbertScan(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    spark.read.parquet(hilbertLayout(spark, dir))
+    ParquetTables.read(spark, hilbertLayout(spark, dir))
       .filter(col("l_partkey").between(50, 250) &&
         col("l_orderkey").between(5000, 30000))
   }

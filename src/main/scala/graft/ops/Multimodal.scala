@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.engine.ParquetTables
+
 /** Multimodal-column operator family (north star): treat image/audio/
   * video payloads as opaque `binary` columns with typed metadata, and
   * run decode / feature-extraction as partition-wise batch functions.
@@ -390,7 +392,7 @@ object Multimodal extends QueryFamily {
     // 0.79 -> 1.39 s with the spread (the pixel-array shuffle costs
     // more than the map work it parallelizes). The DCT pass below IS
     // spread: its two basis contractions are ~10x the map work.
-    val pxRows = spark.read.parquet(path)
+    val pxRows = ParquetTables.read(spark, path)
       .select($"doc_id", posexplode($"px").as(Seq("i", "v")))
     val mean = pxRows.groupBy($"doc_id")
       .agg((sum($"v") / lit(256.0)).as("mean"))
@@ -526,7 +528,7 @@ object Multimodal extends QueryFamily {
   private def phashDctWords(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val path = materializeThumbs(spark, dir)
-    dctWordsOf(T.spreadScan(spark, path, spark.read.parquet(path), Seq("doc_id"))
+    dctWordsOf(T.spreadScan(spark, path, Seq("doc_id"))
       .select($"doc_id", $"px"))
   }
 

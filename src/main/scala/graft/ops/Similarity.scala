@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.engine.ParquetTables
+
 /** Similarity-search operator family over the `embeddings` table
   * (ArrayType(FloatType), SURVEY.md §2 Tier B / north star).
   *
@@ -1577,10 +1579,10 @@ object Similarity extends QueryFamily {
     }
 
   def storedPqCodebook(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(materializePqIndex(spark, dir)(0))
+    ParquetTables.read(spark, materializePqIndex(spark, dir)(0))
 
   def storedPqCodes(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(materializePqIndex(spark, dir)(1))
+    ParquetTables.read(spark, materializePqIndex(spark, dir)(1))
 
   /** The stored PQ index surfaced as a query: every vector's 4 codes,
     * each tagged with its codebook centroid's 6dp mean coordinate (so
@@ -1788,8 +1790,8 @@ object Similarity extends QueryFamily {
   def qPqChurn(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val paths = materializePqBaseIndex(spark, dir)
-    val cent = spark.read.parquet(paths(0))
-    val baseCodes = spark.read.parquet(paths(1))
+    val cent = ParquetTables.read(spark, paths(0))
+    val baseCodes = ParquetTables.read(spark, paths(1))
     val deltaCodes = pqArgminCodes(
       pqEncodeAgainst(pqDeltaDims(spark, dir), cent))
     baseCodes.unionByName(deltaCodes)

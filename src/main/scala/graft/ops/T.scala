@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.engine.ParquetTables
+
 /** Table loaders for the driver-generated Parquet fixtures
   * (`/root/repo/TESTDATA.md`). One parquet directory per scale factor;
   * table name -> `{dir}/{name}.parquet`. This mirrors the reference's
@@ -11,7 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object T {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetTables.read(spark, s"$dir/$name.parquet")
 
   /** Scale-adaptive scan spread (optimization guide §2.5, "input skew:
     * one huge unsplittable file ... repartition immediately after the
@@ -31,17 +33,19 @@ object T {
     * partitioning on a real key (never round-robin, never rand-derived)
     * keeps task-retry semantics deterministic (SPARK-38388). */
   private def spread(spark: SparkSession, dir: String, name: String,
-                     df: DataFrame, keys: Seq[String]): DataFrame =
-    spreadScan(spark, s"$dir/$name.parquet", df, keys)
+                     keys: Seq[String]): DataFrame =
+    spreadScan(spark, s"$dir/$name.parquet", keys)
 
-  /** The spread for ANY path-backed relation — also used on sidecar
-    * reads (the thumbs pixel table ships as one 5000-row file, so the
-    * whole DCT pipeline serialized on one core). */
+  /** The Parquet table at `path`, spread — for ANY path-backed
+    * relation, also sidecars (the thumbs pixel table ships as one
+    * 5000-row file, so the whole DCT pipeline serialized on one core).
+    * The size comes from the read's own file listing, so a rewritten
+    * table is never judged by a stale size. */
   private[graft] def spreadScan(spark: SparkSession, path: String,
-                                df: DataFrame, keys: Seq[String]): DataFrame = {
+                                keys: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.col
     val par = spark.sparkContext.defaultParallelism
-    val bytes = tableBytes(spark, path)
+    val (df, bytes) = ParquetTables.sized(spark, path)
     // unknown-size sentinel: the ceiling-division below would overflow
     // Long.MaxValue into a negative quotient and FIRE the spread on the
     // exact path where "unknown => never spread" is the intent
@@ -50,20 +54,6 @@ object T {
     val estSplits = math.max(1L, bytes / maxSplit + (if (bytes % maxSplit == 0) 0 else 1))
     if (estSplits * 2 <= par) df.repartition(par, keys.map(col): _*) else df
   }
-
-  private val bytesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Total on-disk bytes of a parquet file or directory, via the
-    * Hadoop FS API (object-store-safe), memoized per path. */
-  private def tableBytes(spark: SparkSession, path0: String): Long =
-    bytesCache.computeIfAbsent(path0, path => {
-      try {
-        val p = new org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .getContentSummary(p).getLength
-      } catch { case _: Exception => Long.MaxValue } // unknown => never spread
-    })
 
   /** `events.ts` has shipped in two parquet physical types across fixture
     * generations: TIMESTAMP(NANOS) (which Spark's vectorized reader rejects
@@ -80,52 +70,22 @@ object T {
     * footer actually declares TIMESTAMP(NANOS) (round-8 advice: no
     * global-state mutation on every loader call — the modern
     * timestamp[us] fixture never touches session conf, so loader order
-    * cannot change unrelated reads). The footer probe is memoized per
-    * fixture directory. */
+    * cannot change unrelated reads). The footer verdict is memoized on
+    * the table's file fingerprint, so an in-place fixture rewrite that
+    * changes the physical type is probed again. */
   def eventsTs(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampType}
-    if (eventsTsIsNanos(spark, dir))
+    val path = s"$dir/events.parquet"
+    if (ParquetTables.timestampNanos(spark, path, "ts"))
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = table(spark, dir, "events")
+    val df = ParquetTables.read(spark, path)
     df.schema("ts").dataType match {
       case LongType      => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case TimestampType => df
       case _             => df.withColumn("ts", col("ts").cast(TimestampType))
     }
   }
-
-  private val tsNanosCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** True iff `{dir}/events.parquet`'s footer declares `ts` as
-    * TIMESTAMP(NANOS). Reads one footer through the Hadoop FileSystem
-    * API (object-store-safe), handling both a single parquet file and
-    * a directory of part files. */
-  private def eventsTsIsNanos(spark: SparkSession, dir: String): Boolean =
-    tsNanosCache.computeIfAbsent(dir, _ => {
-      import org.apache.hadoop.fs.Path
-      import org.apache.parquet.schema.LogicalTypeAnnotation
-      val conf = spark.sparkContext.hadoopConfiguration
-      val p = new Path(s"$dir/events.parquet")
-      val fs = p.getFileSystem(conf)
-      val file =
-        if (fs.getFileStatus(p).isDirectory)
-          fs.listStatus(p).map(_.getPath)
-            .find(_.getName.endsWith(".parquet")).getOrElse(p)
-        else p
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-      try {
-        val schema = reader.getFooter.getFileMetaData.getSchema
-        schema.containsField("ts") &&
-          (schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
-            case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-              t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
-            case _ => false
-          })
-      } finally reader.close()
-    })
 
   // Only `documents` (and the thumbs pixel sidecar, see Multimodal)
   // gets the adaptive spread — MEASURED decision, not a blanket one:
@@ -162,7 +122,7 @@ object T {
     * (q_dedup_exact measured 0.19 -> 0.69 s under a loader-level
     * spread). */
   private[graft] def documentsSpread(s: SparkSession, d: String): DataFrame =
-    spread(s, d, "documents", table(s, d, "documents"), Seq("doc_id"))
+    spread(s, d, "documents", Seq("doc_id"))
 
   /** lineitem WITH the adaptive spread, keyed on the order key — used
     * ONLY by consumers whose first operation is a `groupBy(l_orderkey)`
@@ -177,7 +137,7 @@ object T {
     * forecloses map-side combine — a collect_set by the spread key has
     * no map-side combine to lose. */
   private[graft] def lineitemSpread(s: SparkSession, d: String): DataFrame =
-    spread(s, d, "lineitem", table(s, d, "lineitem"), Seq("l_orderkey"))
+    spread(s, d, "lineitem", Seq("l_orderkey"))
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }
 
@@ -290,5 +250,5 @@ object Fixtures {
 
   /** The `kind` sidecar of `dir`, built by `build` when stale. */
   def stored(spark: SparkSession, dir: String, kind: String)(build: => DataFrame): DataFrame =
-    spark.read.parquet(materialize(dir, kind)(Seq(build)).head)
+    ParquetTables.read(spark, materialize(dir, kind)(Seq(build)).head)
 }
