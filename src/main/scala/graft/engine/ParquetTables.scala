@@ -28,8 +28,9 @@ import org.apache.spark.sql.types.StructType
   */
 object ParquetTables {
 
-  /** (path, length, mtime) of every data file of a table, sorted. */
-  private type Fingerprint = Vector[(String, Long, Long)]
+  /** (path relative to the table path, length, mtime) of every data file
+    * of a table, sorted. */
+  private[graft] type Fingerprint = Vector[(String, Long, Long)]
 
   /** Values derived from a table's files, each valid while the files'
     * fingerprint is unchanged. A miss computes outside any map lock, so a
@@ -54,18 +55,20 @@ object ParquetTables {
   /** The data files of the table at `path` (a Parquet file, or a
     * directory of part files and partition directories), skipping what
     * Spark's file index skips: any name under `path` starting with `_` or
-    * `.` (`_SUCCESS`, checksum files, sidecar markers). None when the
-    * path cannot be listed. */
-  private def fingerprint(spark: SparkSession, path: String): Option[Fingerprint] =
+    * `.` (`_SUCCESS`, checksum files, sidecar markers). Each file's path
+    * is relative to `path` ("" for a single-file table, "/part-…" under a
+    * directory). None when the path cannot be listed. The one table
+    * listing of the repo: the sidecar markers ([[graft.ops.Fixtures]])
+    * fingerprint their source tables with it too. */
+  private[graft] def fingerprint(spark: SparkSession, path: String): Option[Fingerprint] =
     try {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val root = fs.getFileStatus(p).getPath.toString
       val files = fs.listFiles(p, true)
       Some(Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
-        .filterNot(_.getPath.toString.stripPrefix(root).split('/')
-          .exists(n => n.startsWith("_") || n.startsWith(".")))
-        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        .map(f => (f.getPath.toString.stripPrefix(root), f.getLen, f.getModificationTime))
+        .filterNot(_._1.split('/').exists(n => n.startsWith("_") || n.startsWith(".")))
         .toVector.sorted)
     } catch { case _: java.io.IOException => None }
 
@@ -100,7 +103,7 @@ object ParquetTables {
         import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(fp.head._1), spark.sparkContext.hadoopConfiguration))
+            new org.apache.hadoop.fs.Path(path + fp.head._1), spark.sparkContext.hadoopConfiguration))
         try {
           val schema = reader.getFooter.getFileMetaData.getSchema
           schema.containsField(column) &&

@@ -131,6 +131,21 @@ object Dedup extends QueryFamily {
       .withColumn("j", $"ninter".cast("double") / ($"na" + $"nb" - $"ninter"))
   }
 
+  /** Candidate pairs of the df-pruned inverted index over `shx`
+    * (doc_id, sh): the distinct (a_id, b_id) pairs, a_id < b_id, that
+    * share a shingle whose document frequency is 2..10. The cap bounds
+    * every shingle's join degree regardless of corpus size; a shingle in
+    * one document pairs nothing. */
+  private def rareShingleCandidates(shx: DataFrame): DataFrame = {
+    val rare = shx.groupBy(col("sh")).agg(count(lit(1)).as("df"))
+      .filter(col("df") <= 10 && col("df") >= 2)
+    val rareShx = shx.join(rare.select(col("sh")), Seq("sh"))
+    rareShx.select(col("doc_id").as("a_id"), col("sh"))
+      .join(rareShx.select(col("doc_id").as("b_id"), col("sh")), Seq("sh"))
+      .filter(col("a_id") < col("b_id"))
+      .select(col("a_id"), col("b_id")).distinct()
+  }
+
   /** Exact shingle overlap of candidate pairs: each (a_id, b_id) pair
     * of `cand` meets both documents' shingles in `shx` (doc_id, sh) and
     * their shingle counts in `sizes` (doc_id, n). Returns (b_id, a_id,
@@ -505,14 +520,8 @@ object Dedup extends QueryFamily {
     // feeds df-pruning, two verification joins and the size table —
     // cache so the explode pipeline materializes once
     val shx = shingleRows(spark, dir, 4).cache()
-    val rare = shx.groupBy($"sh").agg(count(lit(1)).as("df")).filter($"df" <= 10 && $"df" >= 2)
-    val rareShx = shx.join(rare.select($"sh"), Seq("sh"))
-    val cand = rareShx.select($"doc_id".as("a_id"), $"sh")
-      .join(rareShx.select($"doc_id".as("b_id"), $"sh"), Seq("sh"))
-      .filter($"a_id" < $"b_id")
-      .select($"a_id", $"b_id").distinct()
     val sizes = shx.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    overlap(cand, shx, sizes)
+    overlap(rareShingleCandidates(shx), shx, sizes)
       .withColumn("j", $"ninter".cast("double") / ($"na" + $"nb" - $"ninter"))
       .filter($"j" >= 0.5)
       .select($"a_id", $"b_id", round($"j", 4).as("jaccard"))
@@ -631,14 +640,8 @@ object Dedup extends QueryFamily {
     import spark.implicits._
     // same cached relation (and cache entry) as qDedupNgramJaccard
     val shx = shingleRows(spark, dir, 4).cache()
-    val rare = shx.groupBy($"sh").agg(count(lit(1)).as("df")).filter($"df" <= 10 && $"df" >= 2)
-    val rareShx = shx.join(rare.select($"sh"), Seq("sh"))
-    val cand = rareShx.select($"doc_id".as("a_id"), $"sh")
-      .join(rareShx.select($"doc_id".as("b_id"), $"sh"), Seq("sh"))
-      .filter($"a_id" < $"b_id")
-      .select($"a_id", $"b_id").distinct()
     val sizes = shx.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    overlap(cand, shx, sizes)
+    overlap(rareShingleCandidates(shx), shx, sizes)
       .withColumn("cont_a", $"ninter".cast("double") / $"na")
       .withColumn("cont_b", $"ninter".cast("double") / $"nb")
       .filter($"cont_a" >= 0.5 || $"cont_b" >= 0.5)

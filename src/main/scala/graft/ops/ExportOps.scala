@@ -3,8 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, count, lit, log, round, substring, floor}
 
-import graft.engine.ParquetTables
-
 /** Export-pipeline roundtrip registered as a t2 query: runs the Tier-A
   * Exporter (catalog discovery -> projection -> scan -> rolling sink)
   * on the fixture schema into a temp directory, reads the exported
@@ -12,21 +10,28 @@ import graft.engine.ParquetTables
   * table — equality proves the export is lossless end-to-end. */
 object ExportOps extends QueryFamily {
 
+  /** The output directory of one builder call. Each call writes a fresh
+    * one, which Spark deletes at JVM exit. The output is written once
+    * and read once, so it is read with Spark's own reader: the
+    * [[graft.engine.ParquetTables]] schema memo could never hit on it. */
+  private def scratch(prefix: String): String =
+    org.apache.spark.sql.GraftShims.scratchDir(prefix).getAbsolutePath
+
   def qExportRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Paths
     import org.apache.spark.sql.functions._
     import graft.engine._
     val src = Paths.get(dir)
-    val out = Files.createTempDirectory("graft-export-rt")
+    val out = scratch("graft-export-rt")
     val cfg = ExportConfig(
-      outputDirectory = out.toString, overwrite = true,
+      outputDirectory = out, overwrite = true,
       schemas = Seq(src.getFileName.toString),
       tableNameIncludePattern = "^(lineitem|region)$",
       compressionMethod = "snappy")
     val catalog = new ParquetCatalog(src.getParent)
     new Exporter(cfg, catalog, new ParquetSource(catalog), new ParquetSink(cfg))
       .exportTables(spark)
-    ParquetTables.read(spark, s"$out/${src.getFileName}/lineitem")
+    spark.read.parquet(s"$out/${src.getFileName}/lineitem")
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"),
         round(sum(col("l_quantity")), 2).as("sum_qty"))
@@ -49,9 +54,8 @@ object ExportOps extends QueryFamily {
     * on the v2 rows). At 100 TB the same read path handles years of
     * schema drift without a rewrite. */
   def qSchemaMerge(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     import org.apache.spark.sql.functions._
-    val out = Files.createTempDirectory("graft-schema-merge")
+    val out = scratch("graft-schema-merge")
     val nation = T.nation(spark, dir)
     nation.filter(col("n_nationkey") % 2 === 0)
       .select(col("n_nationkey"), col("n_name"))
@@ -59,7 +63,7 @@ object ExportOps extends QueryFamily {
     nation.filter(col("n_nationkey") % 2 === 1)
       .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
       .write.mode("overwrite").parquet(s"$out/gen=2")
-    spark.read.option("mergeSchema", "true").parquet(out.toString)
+    spark.read.option("mergeSchema", "true").parquet(out)
       .agg(count(lit(1)).as("n_rows"),
         count(col("n_regionkey")).as("with_region"),
         countDistinct(col("n_name")).as("n_names"))
@@ -208,10 +212,9 @@ object ExportOps extends QueryFamily {
     * the oracle over the ORIGINAL table proves the JSON sink+source
     * pair is lossless for the text payload. */
   def qJsonlRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val out = Files.createTempDirectory("graft-jsonl-rt").toString
+    val out = scratch("graft-jsonl-rt")
     T.documents(spark, dir)
       .select($"doc_id", $"text", $"lang", $"source")
       .write.mode("overwrite").json(out)
@@ -238,10 +241,9 @@ object ExportOps extends QueryFamily {
     * hop losslessly and equality against the oracle over the ORIGINAL
     * table proves it. */
   def qCsvRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val out = Files.createTempDirectory("graft-csv-rt").toString
+    val out = scratch("graft-csv-rt")
     T.orders(spark, dir)
       .select($"o_orderkey", $"o_orderstatus", $"o_totalprice", $"o_orderpriority")
       .write.mode("overwrite").option("header", "true").csv(out)
@@ -268,10 +270,9 @@ object ExportOps extends QueryFamily {
     * groups by order month. Schema is pinned explicitly on re-read,
     * same single-scan discipline as the JSONL/CSV twins. */
   def qOrcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val out = Files.createTempDirectory("graft-orc-rt").toString
+    val out = scratch("graft-orc-rt")
     T.orders(spark, dir)
       .select($"o_orderkey", $"o_totalprice", $"o_orderdate")
       .write.mode("overwrite").option("compression", "snappy").orc(out)
@@ -309,10 +310,9 @@ object ExportOps extends QueryFamily {
 
   /** The pruned scan itself, exposed so ScaleSpec can assert its plan. */
   def prunedScan(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val out = Files.createTempDirectory("graft-part-prune").toString
+    val out = scratch("graft-part-prune")
     T.orders(spark, dir)
       .withColumn("om", date_format(date_trunc("month", $"o_orderdate"), "yyyy-MM"))
       // repartition ON the partition column first: without it every
@@ -321,7 +321,7 @@ object ExportOps extends QueryFamily {
       // scale); with it each month is written by one task
       .repartition(col("om"))
       .write.mode("overwrite").partitionBy("om").parquet(out)
-    ParquetTables.read(spark, out)
+    spark.read.parquet(out)
       .filter($"om" >= "1996-01" && $"om" <= "1996-12")
   }
 
@@ -820,10 +820,9 @@ object ExportOps extends QueryFamily {
     * .writeZOrdered]]). Written to a temp dir per call, like
     * [[prunedScan]]'s partitioned layout. */
   def zorderedLayout(spark: SparkSession, dir: String): String = {
-    import java.nio.file.Files
     import org.apache.spark.sql.functions.col
     import graft.engine.{ExportConfig, ParquetSink}
-    val out = Files.createTempDirectory("graft-zorder").toString
+    val out = scratch("graft-zorder")
     val sink = new ParquetSink(ExportConfig(outputDirectory = out, overwrite = true))
     sink.prepareRoot()
     val li = T.lineitem(spark, dir)
@@ -841,7 +840,7 @@ object ExportOps extends QueryFamily {
     * count. */
   def zorderScan(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    ParquetTables.read(spark, zorderedLayout(spark, dir))
+    spark.read.parquet(zorderedLayout(spark, dir))
       .filter(col("l_partkey").between(100, 300) &&
         col("l_orderkey").between(1000, 20000))
   }
@@ -876,10 +875,9 @@ object ExportOps extends QueryFamily {
     * longer key runs and a footer-pruning reader opens fewer files.
     */
   def hilbertLayout(spark: SparkSession, dir: String): String = {
-    import java.nio.file.Files
     import org.apache.spark.sql.functions.col
     import graft.engine.{ExportConfig, ParquetSink}
-    val out = Files.createTempDirectory("graft-hilbert").toString
+    val out = scratch("graft-hilbert")
     val sink = new ParquetSink(ExportConfig(outputDirectory = out, overwrite = true))
     sink.prepareRoot()
     val li = T.lineitem(spark, dir)
@@ -893,7 +891,7 @@ object ExportOps extends QueryFamily {
     * two differentials exercise distinct selections. */
   def hilbertScan(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    ParquetTables.read(spark, hilbertLayout(spark, dir))
+    spark.read.parquet(hilbertLayout(spark, dir))
       .filter(col("l_partkey").between(50, 250) &&
         col("l_orderkey").between(5000, 30000))
   }

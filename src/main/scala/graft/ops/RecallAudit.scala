@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * generator in this repo ships with. A hit is a (probe, item) row in
   * both sides, so a found row outside the truth never counts; a probe
   * or pool with no hit reports 0 hits and recall 0.0, never null.
-  * Recall is rounded to 4 dp. */
+  * Recall is rounded to 4 dp. The rank audits (NDCG, MAP, MRR) share
+  * the per-probe universe and rounding through [[rankAudit]]. */
 object RecallAudit {
 
   /** Per-probe recall: `truth` and `found` share the `key` (probe) and
@@ -24,6 +25,25 @@ object RecallAudit {
         coalesce(col("n_hits"), lit(0L)).as("n_hits"),
         round(coalesce(col("n_hits"), lit(0L)).cast("double") / col("n_true"), 4)
           .as("recall"))
+  }
+
+  /** The tail shared by the rank audits (NDCG, MAP, MRR): one row per
+    * key of `truth`, carrying the per-key `metric` column of `scores`
+    * rounded to 4 dp. A key without a `scores` row gets 0.0, as
+    * [[perKey]] gives a probe without a hit. With `mean`, the mean of the
+    * metric over all keys is broadcast back onto every row as column
+    * `mean`, rounded likewise; the per-key rows are checkpointed once and
+    * feed both the rows and the mean. */
+  def rankAudit(truth: DataFrame, scores: DataFrame, key: String, metric: String,
+                mean: Option[String] = None): DataFrame = {
+    val rows = truth.select(col(key)).distinct()
+      .join(scores, Seq(key), "left")
+      .select(col(key), coalesce(col(metric), lit(0.0)).as(metric))
+    mean.fold(rows.select(col(key), round(col(metric), 4).as(metric))) { m =>
+      val kept = rows.ckpt()
+      kept.crossJoin(broadcast(kept.agg(avg(col(metric)).as(m))))
+        .select(col(key), round(col(metric), 4).as(metric), round(col(m), 4).as(m))
+    }
   }
 
   /** Pooled recall over every probe at once, matching on the `on`

@@ -73,14 +73,34 @@ object Similarity extends QueryFamily {
       .withColumn("sg", signBits(16))
       .withColumn("bucket", expr("substring(sg, 1, bits)"))
 
-  /** Exact brute-force top-5 cosine neighbors for probe vectors
-    * (vec_id < 10) against the whole corpus. The probe set is tiny, so
-    * a plain per-probe ranking window would drag every scored corpus row
+  /** THE per-probe cosine ranking order: cosine descending, ties broken
+    * by `n_id`. Within one probe it is a total order, so the top k of a
+    * ranking by it is the first k rows of any deeper ranking. */
+  private def byCos: Seq[Column] = Seq(desc("cos"), asc("n_id"))
+
+  /** Per-probe top-`k` by [[byCos]] through one plain ranking window
+    * partitioned by `by`, keeping the 1-based rank as column `rank`. For
+    * candidate sets that are bounded per probe; unbounded ones go through
+    * [[Skew.twoPhaseTopK]] with the same order. */
+  private def topByCos(df: DataFrame, k: Int, rank: String = "rank",
+      by: Seq[Column] = Seq(col("q_id"))): DataFrame =
+    df.withColumn(rank, row_number().over(Window.partitionBy(by: _*).orderBy(byCos: _*)))
+      .filter(col(rank) <= k)
+
+  /** THE exact ground truth of the family: the top-`k` cosine neighbours
+    * (q_id, rank, n_id, cos) of the probe vectors (vec_id < 10) over the
+    * whole corpus, unordered and unrounded. The probe set is tiny, so a
+    * plain per-probe ranking window would drag every scored corpus row
     * into |probes| tasks; instead the scored stream (pruned to 3 narrow
     * columns — the vectors never shuffle) goes through
-    * [[Skew.twoPhaseTopK]]: local top-5 per input split, final window
-    * over <= 5 x splits survivors per probe. */
-  def qSimBruteforce(spark: SparkSession, dir: String): DataFrame = {
+    * [[Skew.twoPhaseTopK]]: local top-k per input split, final window
+    * over <= k x splits survivors per probe.
+    *
+    * Unordered, because a global sort under a `ckpt()` is a sampling job
+    * and a shuffle that no consumer reads. Uncached, because each query
+    * pays for its own truth: a warm run measures the query, not a
+    * leftover cache entry. */
+  private[graft] def exactTop(spark: SparkSession, dir: String, k: Int): DataFrame = {
     import spark.implicits._
     val e = T.embeddings(spark, dir)
     val probes = e.filter($"vec_id" < 10)
@@ -88,8 +108,15 @@ object Similarity extends QueryFamily {
     val corpus = e.select($"vec_id".as("n_id"), $"embedding".as("v"))
     val scored = corpus.join(broadcast(probes), $"q_id" =!= $"n_id")
       .select($"q_id", $"n_id", cos.as("cos"))
-    Skew.twoPhaseTopK(scored, Seq($"q_id"),
-        Seq(desc("cos"), asc("n_id")), k = 5, rankName = "rank")
+    Skew.twoPhaseTopK(scored, Seq($"q_id"), byCos, k, rankName = "rank")
+      .select($"q_id", $"rank", $"n_id", $"cos")
+  }
+
+  /** Exact brute-force top-5 cosine neighbors: [[exactTop]], rounded
+    * and ordered. */
+  def qSimBruteforce(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    exactTop(spark, dir, 5)
       .select($"q_id", $"rank", $"n_id", round($"cos", 4).as("cos"))
       .orderBy($"q_id", $"rank")
   }
@@ -125,9 +152,7 @@ object Similarity extends QueryFamily {
     val scored = corpus.join(broadcast(probes), Seq("bucket"))
       .filter($"q_id" =!= $"n_id")
       .select($"q_id", $"n_id", cos.as("cos"))
-    val w = Window.partitionBy($"q_id").orderBy(desc("cos"), asc("n_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= 3)
+    topByCos(scored, 3)
       .select($"q_id", $"rank", $"n_id", round($"cos", 4).as("cos"))
       .orderBy($"q_id", $"rank")
   }
@@ -169,9 +194,7 @@ object Similarity extends QueryFamily {
     val scored = corpus.join(broadcast(probes), Seq("probe_bucket"))
       .filter($"q_id" =!= $"n_id")
       .select($"q_id", $"n_id", cos.as("cos"))
-    val w = Window.partitionBy($"q_id").orderBy(desc("cos"), asc("n_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= 3)
+    topByCos(scored, 3)
       .select($"q_id", $"rank", $"n_id", round($"cos", 4).as("cos"))
       .orderBy($"q_id", $"rank")
   }
@@ -212,9 +235,7 @@ object Similarity extends QueryFamily {
     val scored = corpus.join(broadcast(probes), Seq("label"))
       .filter($"q_id" =!= $"n_id")
       .select($"q_id", $"n_id", cos.as("cos"))
-    val w = Window.partitionBy($"q_id").orderBy(desc("cos"), asc("n_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= 3)
+    topByCos(scored, 3)
       .select($"q_id", $"rank", $"n_id", round($"cos", 4).as("cos"))
       .orderBy($"q_id", $"rank")
   }
@@ -263,9 +284,7 @@ object Similarity extends QueryFamily {
     val scored = corpus.join(broadcast(probeCells), Seq("label"))
       .filter($"q_id" =!= $"n_id")
       .select($"q_id", $"n_id", cos.as("cos"))
-    val w = Window.partitionBy($"q_id").orderBy(desc("cos"), asc("n_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= 3)
+    topByCos(scored, 3)
       .select($"q_id", $"rank", $"n_id", round($"cos", 4).as("cos"))
       .orderBy($"q_id", $"rank")
   }
@@ -304,8 +323,7 @@ object Similarity extends QueryFamily {
     * asserts it). */
   def qSimIvfProbe2Recall(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val exact = qSimBruteforce(spark, dir).filter($"rank" <= 3)
-      .select($"q_id", $"n_id")
+    val exact = exactTop(spark, dir, 3).select($"q_id", $"n_id")
     val approx = qSimIvfProbe2(spark, dir).select($"q_id", $"n_id")
     RecallAudit.perKey(exact, approx, "q_id", "n_id").orderBy($"q_id")
   }
@@ -366,10 +384,9 @@ object Similarity extends QueryFamily {
       .filter($"q_id" =!= $"n_id")
       .select($"q_id", $"n_id", $"cell_rank", cos.as("cos"))
       .ckpt()
-    val wq = Window.partitionBy($"q_id", $"stage").orderBy(desc("cos"), asc("n_id"))
-    val tops = cand
-      .join(broadcast(Seq(1, 2, 3, 4).toDF("stage")), $"cell_rank" <= $"stage")
-      .withColumn("rank", row_number().over(wq)).filter($"rank" <= 3)
+    val tops = topByCos(cand
+      .join(broadcast(Seq(1, 2, 3, 4).toDF("stage")), $"cell_rank" <= $"stage"),
+        3, by = Seq($"q_id", $"stage"))
       .select($"q_id", $"n_id", $"stage")
       .ckpt()
     val cnts = tops.groupBy($"q_id", $"stage").agg(count(lit(1)).as("n"))
@@ -396,8 +413,7 @@ object Similarity extends QueryFamily {
     // truth are independent — overlap their materializations (§2.6)
     val Seq(partsA, exactA) = inParallel[Any](
       () => probeAdaptiveParts(spark, dir),
-      () => qSimBruteforce(spark, dir).filter($"rank" <= 3)
-        .select($"q_id", $"n_id")
+      () => exactTop(spark, dir, 3).select($"q_id", $"n_id")
         .ckpt()) // two recall consumers, one ground-truth pass
     val (cand, tops, probesUsed) =
       partsA.asInstanceOf[(DataFrame, DataFrame, DataFrame)]
@@ -544,7 +560,6 @@ object Similarity extends QueryFamily {
           $"recall", lit(gt).as("ground_truth"))
     val g0 = storedKnnGraph(spark, dir) // idempotent sidecar load, once
     val eVec = e0.select($"vec_id", $"embedding").cache()
-    val wq = Window.partitionBy($"q_id").orderBy(desc("cos"), asc("n_id"))
     // The five eager chains below (exact pass, four candidate
     // generations) are mutually independent — submit them from
     // concurrent driver threads so their materialization jobs overlap
@@ -561,11 +576,9 @@ object Similarity extends QueryFamily {
           (($"label" % 3) === 0).as("pass"))
         val xScored = xCorpus.join(broadcast(probes), $"q_id" =!= $"n_id")
           .select($"q_id", $"n_id", $"pass", cos.as("cos")).ckpt()
-        val exact = Skew.twoPhaseTopK(xScored, Seq($"q_id"),
-            Seq(desc("cos"), asc("n_id")), 3, "r")
+        val exact = Skew.twoPhaseTopK(xScored, Seq($"q_id"), byCos, 3, "r")
           .select($"q_id", $"n_id").ckpt()
-        val exactF = Skew.twoPhaseTopK(xScored.filter($"pass"), Seq($"q_id"),
-            Seq(desc("cos"), asc("n_id")), 3, "r")
+        val exactF = Skew.twoPhaseTopK(xScored.filter($"pass"), Seq($"q_id"), byCos, 3, "r")
           .select($"q_id", $"n_id").ckpt()
         Seq(exact, exactF)
       },
@@ -604,9 +617,7 @@ object Similarity extends QueryFamily {
               .join(broadcast(bProbes), Seq("probe_bucket"))
               .filter($"q_id" =!= $"n_id")
               .select($"q_id", $"n_id", cos.as("cos")).ckpt()
-            val wE = Window.partitionBy($"q_id").orderBy(desc("cos"), asc("n_id"))
-            val entries = coarse.withColumn("er", row_number().over(wE))
-              .filter($"er" <= 4).select($"q_id", $"n_id")
+            val entries = topByCos(coarse, 4, "er").select($"q_id", $"n_id")
             Seq(g, coarse, searchWalk(g, eVec, probes, beam = 3, entries))
           },
           () => {
@@ -618,8 +629,7 @@ object Similarity extends QueryFamily {
           })
         val Seq(gC, coarseC, visitedC) = cPart
         val upC = uPart.head
-        val hierEntries = upC.withColumn("r", row_number().over(wq))
-          .filter($"r" <= 2).select($"q_id", $"n_id")
+        val hierEntries = topByCos(upC, 2, "r").select($"q_id", $"n_id")
         Seq(gC, coarseC, visitedC, upC,
           searchWalk(gC, eVec, probes, beam = 3, hierEntries))
       },
@@ -641,8 +651,7 @@ object Similarity extends QueryFamily {
     val Seq(_, coarse, visited, upVisited, hierVisited) = ceLeg
     val Seq(fCand) = filtLeg
     // ---- a ----
-    val lTop = Skew.twoPhaseTopK(lCand, Seq($"q_id"),
-        Seq(desc("cos"), asc("n_id")), 3, "r").select($"q_id", $"n_id")
+    val lTop = Skew.twoPhaseTopK(lCand, Seq($"q_id"), byCos, 3, "r").select($"q_id", $"n_id")
     val aRow = row("a_lsh_multiprobe", lTop, exact,
       lCand.agg(count(lit(1)).as("n_candidates")), "overall_top3")
     // ---- b ----
@@ -653,22 +662,19 @@ object Similarity extends QueryFamily {
       .agg(count(lit(1)).as("n_candidates"))
     val bRow = row("b_ivf_adaptive", aSel, exact, aCount, "overall_top3")
     // ---- c ----
-    val gTop = visited.filter($"q_id" =!= $"n_id")
-      .withColumn("r", row_number().over(wq)).filter($"r" <= 3)
+    val gTop = topByCos(visited.filter($"q_id" =!= $"n_id"), 3, "r")
       .select($"q_id", $"n_id")
     val gCount = coarse.agg(count(lit(1)).as("nc"))
       .crossJoin(visited.agg(count(lit(1)).as("nv")))
       .select(($"nc" + $"nv").as("n_candidates"))
     val cRow = row("c_graph_walk_e4", gTop, exact, gCount, "overall_top3")
     // ---- d ----
-    val fTop = Skew.twoPhaseTopK(fCand, Seq($"q_id"),
-        Seq(desc("cos"), asc("n_id")), 3, "r").select($"q_id", $"n_id")
+    val fTop = Skew.twoPhaseTopK(fCand, Seq($"q_id"), byCos, 3, "r").select($"q_id", $"n_id")
     val dRow = row("d_filtered_prefilter", fTop, exactF,
       fCand.agg(count(lit(1)).as("n_candidates")), "filtered_top3")
     // ---- e: base walk seeded at the upper walk's top-2 (the walk
     // itself ran inside the c+e branch above) ----
-    val hTop = hierVisited.filter($"q_id" =!= $"n_id")
-      .withColumn("r", row_number().over(wq)).filter($"r" <= 3)
+    val hTop = topByCos(hierVisited.filter($"q_id" =!= $"n_id"), 3, "r")
       .select($"q_id", $"n_id")
     val hCount = upVisited.agg(count(lit(1)).as("nu"))
       .crossJoin(hierVisited.agg(count(lit(1)).as("nv")))
@@ -923,8 +929,7 @@ object Similarity extends QueryFamily {
     * (q_id, n_id), |probes|·k rows. */
   def qSimLshRecall(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val exact = qSimBruteforce(spark, dir).filter($"rank" <= 3)
-      .select($"q_id", $"n_id")
+    val exact = exactTop(spark, dir, 3).select($"q_id", $"n_id")
     val approx = qSimLsh(spark, dir).select($"q_id", $"n_id")
     RecallAudit.perKey(exact, approx, "q_id", "n_id").orderBy($"q_id")
   }
@@ -945,8 +950,7 @@ object Similarity extends QueryFamily {
     * quantifies what searching only the probe's own cell loses. */
   def qSimIvfRecall(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val exact = qSimBruteforce(spark, dir).filter($"rank" <= 3)
-      .select($"q_id", $"n_id")
+    val exact = exactTop(spark, dir, 3).select($"q_id", $"n_id")
     val approx = qSimIvf(spark, dir).select($"q_id", $"n_id")
     RecallAudit.perKey(exact, approx, "q_id", "n_id").orderBy($"q_id")
   }
@@ -991,20 +995,17 @@ object Similarity extends QueryFamily {
       .filter($"q_id" =!= $"n_id")
       .select($"q_id", $"n_id", $"pass", cos.as("cos"))
       .cache()
-    val wq = Window.partitionBy($"q_id").orderBy(desc("cos"), asc("n_id"))
     val truth = corpus.filter($"pass")
       .join(broadcast(probes.select($"q_id", $"qv")), $"q_id" =!= $"n_id")
       .select($"q_id", $"n_id", cos.as("cos"))
-    val truthTop = Skew.twoPhaseTopK(truth, Seq($"q_id"),
-        Seq(desc("cos"), asc("n_id")), 3, "rank")
+    val truthTop = Skew.twoPhaseTopK(truth, Seq($"q_id"), byCos, 3, "rank")
       .select($"q_id", $"n_id")
-    val pre = cand.filter($"pass")
-      .withColumn("rank", row_number().over(wq)).filter($"rank" <= 3)
+    val pre = topByCos(cand.filter($"pass"), 3)
       .select(lit("a_prefilter").as("strategy"), $"q_id", $"n_id")
-    val ranked = cand.withColumn("rank", row_number().over(wq))
+    val ranked = cand.withColumn("rank",
+      row_number().over(Window.partitionBy($"q_id").orderBy(byCos: _*)))
     val posts = Seq(1, 2, 4).map { f =>
-      ranked.filter($"rank" <= 3 * f && $"pass")
-        .withColumn("rank2", row_number().over(wq)).filter($"rank2" <= 3)
+      topByCos(ranked.filter($"rank" <= 3 * f && $"pass"), 3, "rank2")
         .select(lit(s"b_postfilter_x$f").as("strategy"), $"q_id", $"n_id")
     }
     val retrieved = (pre +: posts).reduce(_ union _)
@@ -1198,19 +1199,15 @@ object Similarity extends QueryFamily {
     * normalizer is the same closed-form literal on both engines. */
   def qSimNdcg(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val exact = qSimBruteforce(spark, dir)
+    val exact = exactTop(spark, dir, 5)
       .select($"q_id", $"n_id", (lit(6) - $"rank").cast("double").as("rel"))
     val approx = qSimLsh(spark, dir).select($"q_id", $"rank".as("pos"), $"n_id")
-    val dcg = approx.join(exact, Seq("q_id", "n_id"), "left")
-      .groupBy($"q_id")
-      .agg(sum(coalesce($"rel", lit(0.0)) / log2($"pos" + 1)).as("dcg"))
     val idcg = lit(5.0) / log2(lit(2.0)) + lit(4.0) / log2(lit(3.0)) +
       lit(3.0) / log2(lit(4.0))
-    exact.select($"q_id").distinct()
-      .join(dcg, Seq("q_id"), "left")
-      .select($"q_id",
-        round(coalesce($"dcg", lit(0.0)) / idcg, 4).as("ndcg"))
-      .orderBy($"q_id")
+    val ndcg = approx.join(exact, Seq("q_id", "n_id"), "left")
+      .groupBy($"q_id")
+      .agg((sum(coalesce($"rel", lit(0.0)) / log2($"pos" + 1)) / idcg).as("ndcg"))
+    RecallAudit.rankAudit(exact, ndcg, "q_id", "ndcg").orderBy($"q_id")
   }
 
   val qSimNdcgSql: String =
@@ -1240,7 +1237,7 @@ object Similarity extends QueryFamily {
     * the corpus — audit cost is O(probes · k) at any SF. */
   def qMapAtK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val exact = qSimBruteforce(spark, dir).select($"q_id", $"n_id", lit(1).as("rel"))
+    val exact = exactTop(spark, dir, 5).select($"q_id", $"n_id", lit(1).as("rel"))
     val approx = qSimLsh(spark, dir).select($"q_id", $"rank".as("pos"), $"n_id")
     val w = Window.partitionBy($"q_id").orderBy($"pos")
       .rowsBetween(Window.unboundedPreceding, 0)
@@ -1249,14 +1246,7 @@ object Similarity extends QueryFamily {
       .withColumn("cumhit", sum($"hit").over(w))
       .groupBy($"q_id")
       .agg((sum($"hit" * $"cumhit" / $"pos") / 3.0).as("ap"))
-    val perQ = exact.select($"q_id").distinct()
-      .join(ap, Seq("q_id"), "left")
-      .select($"q_id", coalesce($"ap", lit(0.0)).as("ap"))
-      .ckpt()
-    val map = perQ.agg(avg($"ap").as("map"))
-    perQ.crossJoin(broadcast(map))
-      .select($"q_id", round($"ap", 4).as("ap"), round($"map", 4).as("map"))
-      .orderBy($"q_id")
+    RecallAudit.rankAudit(exact, ap, "q_id", "ap", mean = Some("map")).orderBy($"q_id")
   }
 
   val qMapAtKSql: String =
@@ -1365,18 +1355,11 @@ object Similarity extends QueryFamily {
     * SF. */
   def qSimMrr(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val exact = qSimBruteforce(spark, dir).select($"q_id", $"n_id")
+    val exact = exactTop(spark, dir, 5).select($"q_id", $"n_id")
     val approx = qSimLsh(spark, dir).select($"q_id", $"rank".as("pos"), $"n_id")
-    val firstHit = approx.join(exact, Seq("q_id", "n_id"))
-      .groupBy($"q_id").agg(min($"pos").as("fp"))
-    val perQ = exact.select($"q_id").distinct()
-      .join(firstHit, Seq("q_id"), "left")
-      .select($"q_id", coalesce(lit(1.0) / $"fp", lit(0.0)).as("rr"))
-      .ckpt()
-    val mrr = perQ.agg(avg($"rr").as("mrr"))
-    perQ.crossJoin(broadcast(mrr))
-      .select($"q_id", round($"rr", 4).as("rr"), round($"mrr", 4).as("mrr"))
-      .orderBy($"q_id")
+    val rr = approx.join(exact, Seq("q_id", "n_id"))
+      .groupBy($"q_id").agg((lit(1.0) / min($"pos")).as("rr"))
+    RecallAudit.rankAudit(exact, rr, "q_id", "rr", mean = Some("mrr")).orderBy($"q_id")
   }
 
   val qSimMrrSql: String =
@@ -1401,15 +1384,13 @@ object Similarity extends QueryFamily {
   private def rerankAudit(spark: SparkSession, dir: String,
       shortlist: DataFrame): DataFrame = {
     import spark.implicits._
-    val exact = qSimBruteforce(spark, dir).filter($"rank" <= 3)
-      .select($"q_id", $"n_id")
+    val exact = exactTop(spark, dir, 3).select($"q_id", $"n_id")
     val e = T.embeddings(spark, dir)
     val pv = e.select($"vec_id".as("q_id"), $"embedding".as("qv"))
     val cv = e.select($"vec_id".as("n_id"), $"embedding".as("v"))
     val rescored = shortlist.join(pv, Seq("q_id")).join(cv, Seq("n_id"))
       .select($"q_id", $"n_id", cos.as("cos"))
-    val rr3 = Skew.twoPhaseTopK(rescored, Seq($"q_id"),
-        Seq(desc("cos"), asc("n_id")), k = 3, rankName = "rank")
+    val rr3 = Skew.twoPhaseTopK(rescored, Seq($"q_id"), byCos, k = 3, rankName = "rank")
       .select($"q_id", $"n_id")
     RecallAudit.perKey(exact, shortlist, "q_id", "n_id")
       .select($"q_id", $"recall".as("recall_shortlist"))
@@ -1469,8 +1450,7 @@ object Similarity extends QueryFamily {
     val corpus = e16.select($"vec_id".as("n_id"), $"emb".as("v"))
     val scored = corpus.join(broadcast(probes), $"q_id" =!= $"n_id")
       .select($"q_id", $"n_id", cos.as("cos"))
-    val short = Skew.twoPhaseTopK(scored, Seq($"q_id"),
-        Seq(desc("cos"), asc("n_id")), k = 64, rankName = "rank")
+    val short = Skew.twoPhaseTopK(scored, Seq($"q_id"), byCos, k = 64, rankName = "rank")
       .select($"q_id", $"n_id")
     rerankAudit(spark, dir, short)
   }
@@ -1570,7 +1550,7 @@ object Similarity extends QueryFamily {
     * never per query ([[Fixtures]] lifecycle). `q_pq_persist` proves
     * stored == retrain. */
   private def materializePqIndex(spark: SparkSession, dir: String): Seq[String] =
-    Fixtures.materialize(dir, "pqcodebook", "pqcodes") {
+    Fixtures.materialize(spark, dir, "pqcodebook", "pqcodes") {
       import spark.implicits._
       val d = pqDims(spark, dir)
       val cent = d.groupBy($"label".as("c"), $"sub", $"i").agg(avg($"x").as("cx"))
@@ -1763,7 +1743,7 @@ object Similarity extends QueryFamily {
     * re-encode of training data. Sidecars `pqcodebook_base` and
     * `pqcodes_base`. */
   private def materializePqBaseIndex(spark: SparkSession, dir: String): Seq[String] =
-    Fixtures.materialize(dir, "pqcodebook_base", "pqcodes_base") {
+    Fixtures.materialize(spark, dir, "pqcodebook_base", "pqcodes_base") {
       import spark.implicits._
       val n = T.embeddings(spark, dir).agg(count(lit(1)).as("n_all"))
       val d = pqDims(spark, dir).crossJoin(broadcast(n))
@@ -2978,8 +2958,7 @@ object Similarity extends QueryFamily {
       .join(broadcast(probes), Seq("probe_bucket"))
       .filter($"n_id" =!= $"q_id" && $"label" =!= $"q_label")
       .select($"q_id", $"n_id", kernel.as("cos"))
-    val wn = Window.partitionBy($"q_id").orderBy(desc("cos"), asc("n_id"))
-    val neg1 = cand.withColumn("r", row_number().over(wn)).filter($"r" === 1)
+    val neg1 = topByCos(cand, 1, "r")
       .select($"q_id", $"n_id".as("neg_id"), round($"cos", 4).as("neg_cos"))
     pos1.join(neg1, Seq("q_id"), "left")
       .select($"q_id", $"pos_id", $"pos_cos", $"neg_id", $"neg_cos")
@@ -3038,7 +3017,7 @@ object Similarity extends QueryFamily {
     * sources. */
   def qKnnGraphRecall(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val exact = qSimBruteforce(spark, dir).filter($"rank" <= 3)
+    val exact = exactTop(spark, dir, 3)
       .select($"q_id".as("src_id"), $"n_id".as("nbr_id"))
     // audits the artifact actually SERVED: the stored sidecar (==
     // rebuild by q_index_persist), not a fresh inline build
@@ -3126,13 +3105,11 @@ object Similarity extends QueryFamily {
     val e = T.embeddings(spark, dir).select($"vec_id", $"embedding").cache()
     val probes = e.filter($"vec_id" < 10)
       .select($"vec_id".as("q_id"), $"embedding".as("qv"))
-    val w = Window.partitionBy($"q_id").orderBy(desc("cos"), asc("n_id"))
     // rank cast to long so the dtype matches DuckDB's BIGINT
     // row_number exactly (round-11 verdict task 6: values matched,
     // int32 vs int64 warned)
-    searchWalk(g, e, probes, beam = 3, fixedEntry(e, probes))
-      .filter($"q_id" =!= $"n_id")
-      .withColumn("rank", row_number().over(w)).filter($"rank" <= 3)
+    topByCos(searchWalk(g, e, probes, beam = 3, fixedEntry(e, probes))
+        .filter($"q_id" =!= $"n_id"), 3)
       .select($"q_id", $"rank".cast("long").as("rank"), $"n_id",
         round($"cos", 4).as("cos"))
       .orderBy($"q_id", $"rank")
@@ -3189,9 +3166,7 @@ object Similarity extends QueryFamily {
       // (per-hop anti-join, final ranking) re-scan <= 4 tiny RDD leaves
       // instead of paying one more eager materialization job per hop
       visited = visited.unionByName(scored)
-      val wq = Window.partitionBy($"q_id").orderBy(desc("cos"), asc("n_id"))
-      frontier = scored.withColumn("r", row_number().over(wq))
-        .filter($"r" <= beam).select($"q_id", $"n_id")
+      frontier = topByCos(scored, beam, "r").select($"q_id", $"n_id")
     }
     visited
   }
@@ -3223,14 +3198,10 @@ object Similarity extends QueryFamily {
           () => searchWalk(g, e, probes, 3, fixedEntry(e, probes)),
           () => searchWalk(g, e, probes, 6, fixedEntry(e, probes)))
       },
-      () => Seq(qSimBruteforce(spark, dir).filter($"rank" <= 3)
-        .select($"q_id", $"n_id").ckpt()))
+      () => Seq(exactTop(spark, dir, 3).select($"q_id", $"n_id").ckpt()))
     val exact = exactPack.head
     def row(beam: Int, visited: DataFrame): DataFrame = {
-      val w = Window.partitionBy($"q_id").orderBy(desc("cos"), asc("n_id"))
-      val got = visited
-        .filter($"q_id" =!= $"n_id")
-        .withColumn("rank", row_number().over(w)).filter($"rank" <= 3)
+      val got = topByCos(visited.filter($"q_id" =!= $"n_id"), 3)
         .select($"q_id", $"n_id")
       RecallAudit.pooled(exact, got, Seq("q_id", "n_id"))
         .select(lit(beam).as("beam"), $"n_hits", $"n_true", $"recall")
@@ -3379,7 +3350,6 @@ object Similarity extends QueryFamily {
       .filter($"q_id" =!= $"n_id")
       .select($"q_id", $"n_id",
         graft.functions.F.cosineSimilarity($"qv", $"v").as("cos"))
-    val wE = Window.partitionBy($"q_id").orderBy(desc("cos"), asc("n_id"))
     // the exact ground truth is consumed only by the final recall rows,
     // never by a walk — run it concurrently with the WHOLE walk tree
     // (guide §2.6) instead of as a serial prefix on the walks' critical
@@ -3389,8 +3359,7 @@ object Similarity extends QueryFamily {
       () => {
         val Seq(gP, reP) = inParallel(
           () => Seq(g0.select($"src_id", $"nbr_id").ckpt()),
-          () => Seq(coarse.withColumn("er", row_number().over(wE))
-            .filter($"er" <= 4).select($"q_id", $"n_id", $"er")
+          () => Seq(topByCos(coarse, 4, "er").select($"q_id", $"n_id", $"er")
             .ckpt())) // <= |probes| x 4 rows
         val g = gP.head; val rankedEntries = reP.head
         def walk(nEntries: Int): DataFrame =
@@ -3398,14 +3367,10 @@ object Similarity extends QueryFamily {
             rankedEntries.filter($"er" <= nEntries).select($"q_id", $"n_id"))
         inParallel(() => walk(1), () => walk(2), () => walk(4))
       },
-      () => Seq(qSimBruteforce(spark, dir).filter($"rank" <= 3)
-        .select($"q_id", $"n_id").ckpt()))
+      () => Seq(exactTop(spark, dir, 3).select($"q_id", $"n_id").ckpt()))
     val exact = exactPack.head
     def row(nEntries: Int, visited: DataFrame): DataFrame = {
-      val w = Window.partitionBy($"q_id").orderBy(desc("cos"), asc("n_id"))
-      val got = visited
-        .filter($"q_id" =!= $"n_id")
-        .withColumn("rank", row_number().over(w)).filter($"rank" <= 3)
+      val got = topByCos(visited.filter($"q_id" =!= $"n_id"), 3)
         .select($"q_id", $"n_id")
       RecallAudit.pooled(exact, got, Seq("q_id", "n_id"))
         .select(lit(nEntries).as("entries"), $"n_hits", $"n_true", $"recall")
@@ -3490,7 +3455,6 @@ object Similarity extends QueryFamily {
     val e = T.embeddings(spark, dir).select($"vec_id", $"embedding").cache()
     val probes = e.filter($"vec_id" < 10)
       .select($"vec_id".as("q_id"), $"embedding".as("qv"))
-    val wq = Window.partitionBy($"q_id").orderBy(desc("cos"), asc("n_id"))
     val upEntry = probes.select($"q_id").crossJoin(broadcast(
       e.filter($"vec_id" % 32 === 0).agg(min($"vec_id").as("n_id"))))
     // the exact ground truth is consumed only by the final recall rows,
@@ -3513,19 +3477,16 @@ object Similarity extends QueryFamily {
           // sampled id), then the base walk seeded at the upper top-2
           () => {
             val upper = searchWalk(gu, e, probes, beam = 3, upEntry)
-            val baseEntries = upper.withColumn("r", row_number().over(wq))
-              .filter($"r" <= 2).select($"q_id", $"n_id")
+            val baseEntries = topByCos(upper, 2, "r").select($"q_id", $"n_id")
             Seq(upper, searchWalk(g, e, probes, beam = 3, baseEntries))
           })
         flatLeg ++ hierLeg
       },
-      () => Seq(qSimBruteforce(spark, dir).filter($"rank" <= 3)
-        .select($"q_id", $"n_id").ckpt()))
+      () => Seq(exactTop(spark, dir, 3).select($"q_id", $"n_id").ckpt()))
     val Seq(flat, upper, hier) = walkPack
     val exact = exactPack.head
     def row(name: String, visited: DataFrame, cand: DataFrame, hops: Int): DataFrame = {
-      val got = visited.filter($"q_id" =!= $"n_id")
-        .withColumn("r", row_number().over(wq)).filter($"r" <= 3)
+      val got = topByCos(visited.filter($"q_id" =!= $"n_id"), 3, "r")
         .select($"q_id", $"n_id")
       cand.crossJoin(broadcast(RecallAudit.pooled(exact, got, Seq("q_id", "n_id"))))
         .select(lit(name).as("strategy"), lit(hops.toLong).as("hops"),
@@ -3679,8 +3640,7 @@ object Similarity extends QueryFamily {
     * floor a measured number instead of a hope. */
   def qKnnSearchRecall(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val exact = qSimBruteforce(spark, dir).filter($"rank" <= 3)
-      .select($"q_id", $"n_id")
+    val exact = exactTop(spark, dir, 3).select($"q_id", $"n_id")
     val got = qKnnSearch(spark, dir).select($"q_id", $"n_id")
     RecallAudit.perKey(exact, got, "q_id", "n_id").orderBy($"q_id")
   }
@@ -3795,8 +3755,7 @@ object Similarity extends QueryFamily {
     * the point of the codec. */
   def qSqRecall(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val exact = qSimBruteforce(spark, dir).filter($"rank" <= 3)
-      .select($"q_id", $"n_id")
+    val exact = exactTop(spark, dir, 3).select($"q_id", $"n_id")
     val dq = sqDequantized(spark, dir)
     val probes = dq.filter($"vec_id" < 10)
       .select($"vec_id".as("q_id"), $"e".as("qv"))
@@ -3807,8 +3766,7 @@ object Similarity extends QueryFamily {
         expr("aggregate(qv, 0D, (acc, x) -> acc + x * x)").as("qn"),
         expr("aggregate(v, 0D, (acc, x) -> acc + x * x)").as("nn"))
       .select($"q_id", $"n_id", ($"dot" / sqrt($"qn" * $"nn")).as("cos"))
-    val approx = Skew.twoPhaseTopK(scored, Seq($"q_id"),
-        Seq(desc("cos"), asc("n_id")), k = 3, rankName = "rank")
+    val approx = Skew.twoPhaseTopK(scored, Seq($"q_id"), byCos, k = 3, rankName = "rank")
       .select($"q_id", $"n_id")
     RecallAudit.perKey(exact, approx, "q_id", "n_id").orderBy($"q_id")
   }

@@ -156,7 +156,8 @@ object T {
   *    Verify substitutes from [[tokens]].
   *  - WHEN: a sidecar is fresh iff its marker file records the current
   *    [[Version]] and the fingerprint (relative path, size, mtime of
-  *    every file) of the fixture table it derives from. Anything else —
+  *    every data file, from the [[ParquetTables]] listing) of the
+  *    fixture table it derives from. Anything else —
   *    older code, an in-place fixture edit, a missing marker, or the
   *    forced-rebuild switch read in [[fresh]] (the compaction path) —
   *    rebuilds. */
@@ -198,32 +199,30 @@ object Fixtures {
     registry.toSeq.map { case (kind, (token, _)) =>
       s"{$token}" -> sidecarPath(dir, kind) }
 
-  /** Bumped whenever a stored artifact's DEFINITION changes, so a
-    * sidecar built by older code rebuilds instead of serving. */
-  private[graft] val Version = 2
+  /** Bumped whenever a stored artifact's DEFINITION or the marker's
+    * format changes, so a sidecar built by older code rebuilds instead
+    * of serving. */
+  private[graft] val Version = 3
 
   /** Freshness marker written inside each sidecar directory (Spark's
     * reader skips `_`-prefixed files; DuckDB reads `*.parquet`). */
   private[graft] val Marker = "_GRAFT_SIDECAR"
 
   /** The marker's contents: [[Version]], then one `path size mtime` line
-    * per file of the source fixture table, paths relative to `dir`. */
-  private def stamp(dir: String, kind: String): String = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val base = Paths.get(dir)
-    val files = scala.util.Using.resource(
-      Files.walk(base.resolve(s"${registry(kind)._2}.parquet")))(
-      _.iterator.asScala.filter(Files.isRegularFile(_)).toList)
-    (s"v$Version" +: files.map(f =>
-      s"${base.relativize(f)} ${Files.size(f)} ${Files.getLastModifiedTime(f).toMillis}")
-      .sorted).mkString("", "\n", "\n")
+    * per data file of the source fixture table, paths relative to `dir`.
+    * The files are the [[ParquetTables]] listing, so a checksum file or
+    * `_SUCCESS` is not part of the table here either. */
+  private def stamp(spark: SparkSession, dir: String, kind: String): String = {
+    val table = s"${registry(kind)._2}.parquet"
+    val files = ParquetTables.fingerprint(spark, s"$dir/$table").getOrElse(Vector.empty)
+    (s"v$Version" +: files.map { case (path, size, mtime) => s"$table$path $size $mtime" })
+      .mkString("", "\n", "\n")
   }
 
-  private def fresh(dir: String, kind: String): Boolean = {
+  private def fresh(spark: SparkSession, dir: String, kind: String): Boolean = {
     val marker = new java.io.File(sidecarPath(dir, kind), Marker)
     !sys.env.get("SPARK_GRAFT_REBUILD_INDEX").contains("1") && marker.isFile &&
-      java.nio.file.Files.readString(marker.toPath) == stamp(dir, kind)
+      java.nio.file.Files.readString(marker.toPath) == stamp(spark, dir, kind)
   }
 
   /** Write `df` as `dir`'s `kind` sidecar and stamp it fresh — the
@@ -234,7 +233,7 @@ object Fixtures {
     val path = sidecarPath(dir, kind)
     df.write.mode("overwrite").parquet(path)
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, Marker), stamp(dir, kind))
+      java.nio.file.Paths.get(path, Marker), stamp(df.sparkSession, dir, kind))
     path
   }
 
@@ -242,13 +241,14 @@ object Fixtures {
     * fresh, evaluate `build` (one relation per kind, written in order,
     * so one build can feed several artifacts) and [[install]] each.
     * Returns the paths, in `kinds` order. */
-  def materialize(dir: String, kinds: String*)(build: => Seq[DataFrame]): Seq[String] = {
-    if (!kinds.forall(fresh(dir, _)))
+  def materialize(spark: SparkSession, dir: String, kinds: String*)(
+      build: => Seq[DataFrame]): Seq[String] = {
+    if (!kinds.forall(fresh(spark, dir, _)))
       kinds.zip(build).foreach { case (kind, df) => install(dir, kind, df) }
     kinds.map(sidecarPath(dir, _))
   }
 
   /** The `kind` sidecar of `dir`, built by `build` when stale. */
   def stored(spark: SparkSession, dir: String, kind: String)(build: => DataFrame): DataFrame =
-    ParquetTables.read(spark, materialize(dir, kind)(Seq(build)).head)
+    ParquetTables.read(spark, materialize(spark, dir, kind)(Seq(build)).head)
 }

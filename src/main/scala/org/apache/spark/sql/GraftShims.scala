@@ -26,6 +26,20 @@ object GraftShims {
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
 
+  /** A fresh directory under `java.io.tmpdir`, named `prefix-<uuid>`,
+    * that Spark's shutdown hook deletes with everything under it when the
+    * JVM exits (`Utils` is private[spark]). */
+  def scratchDir(prefix: String): java.io.File =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix)
+
+  /** True iff `dir`, or a directory above it, is registered with Spark's
+    * shutdown-delete hook. */
+  def deletedAtExit(dir: java.io.File): Boolean = {
+    import org.apache.spark.util.ShutdownHookManager
+    ShutdownHookManager.hasShutdownDeleteDir(dir) ||
+      ShutdownHookManager.hasRootAsShutdownDeleteDir(dir)
+  }
+
   /** Blocks until every listener has seen every event posted so far
     * (the listener bus is private[spark]); listener counters read after
     * this are complete. A drain slower than a minute is logged and

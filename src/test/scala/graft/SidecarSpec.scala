@@ -73,4 +73,32 @@ class SidecarSpec extends AnyFunSuite {
       assert(builds === 2, "an installed sidecar must be fresh")
     } finally { paths.foreach(rm); rm(dir) }
   }
+
+  test("touching only a checksum file or _SUCCESS keeps the sidecar fresh") {
+    val session = spark
+    import session.implicits._
+    val dir = Files.createTempDirectory("graft-sidecar-crc").toString
+    val path = ops.Fixtures.sidecarPath(dir, "univocab")
+    try {
+      Seq((0L, "a b")).toDF("doc_id", "text")
+        .write.parquet(s"$dir/documents.parquet")
+      var builds = 0
+      def read() = ops.Fixtures.stored(spark, dir, "univocab") {
+        builds += 1; Seq(builds).toDF("x") }.as[Int].collect().toSeq
+      assert(read() === Seq(1))
+      val table = Paths.get(dir, "documents.parquet")
+      val touched = Files.list(table).toArray.map(_.asInstanceOf[Path])
+        .filter(p => p.getFileName.toString.startsWith(".") ||
+          p.getFileName.toString == "_SUCCESS")
+      assert(touched.exists(_.getFileName.toString.endsWith(".crc")))
+      assert(touched.exists(_.getFileName.toString == "_SUCCESS"))
+      val later = java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 60000L)
+      touched.foreach { p =>
+        Files.write(p, Array[Byte](0), java.nio.file.StandardOpenOption.APPEND)
+        Files.setLastModifiedTime(p, later)
+      }
+      assert(read() === Seq(1))
+      assert(builds === 1, "a checksum or _SUCCESS touch rebuilt the sidecar")
+    } finally { rm(path); rm(dir) }
+  }
 }

@@ -9,6 +9,53 @@ class SimilaritySpec extends AnyFunSuite {
     df.filter(s"rank <= $k").select("q_id", "n_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
+  /** The physical plans Spark executed while `f` ran, adaptive stages
+    * included (a `localCheckpoint` reports its plan as an action). */
+  private def executedPlans(f: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe.executedPlan)
+      override def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => s +: nodes(s.plan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    org.apache.spark.sql.GraftShims.drainListeners(spark)
+    spark.listenerManager.register(listener)
+    try { f; org.apache.spark.sql.GraftShims.drainListeners(spark) }
+    finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq.flatMap(nodes)
+  }
+
+  test("exactTop: the k=3 truth is the ranked top 3, and a checkpointed truth plans no global sort") {
+    import ops._
+    val top3 = ops.Similarity.exactTop(spark, sf, 3).select("q_id", "n_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(top3.size === 30)
+    assert(top3 === pairs(ops.Similarity.qSimBruteforce(spark, sf), 3))
+    def globalSorts(plans: Seq[org.apache.spark.sql.execution.SparkPlan]) = plans.filter {
+      case s: org.apache.spark.sql.execution.SortExec => s.global
+      case x: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+        x.outputPartitioning.isInstanceOf[
+          org.apache.spark.sql.catalyst.plans.physical.RangePartitioning]
+      case _ => false
+    }
+    // the detector sees the ordered form's sort ...
+    assert(globalSorts(executedPlans(
+      ops.Similarity.qSimBruteforce(spark, sf).select("q_id", "n_id").ckpt())).nonEmpty)
+    // ... and the truth the recall audits checkpoint has none
+    val plans = executedPlans(ops.Similarity.exactTop(spark, sf, 3).select("q_id", "n_id").ckpt())
+    assert(plans.nonEmpty, "the checkpoint ran no plan")
+    assert(globalSorts(plans).isEmpty, plans.mkString("\n"))
+  }
+
   test("multi-probe LSH recall dominates single-bucket LSH") {
     val exact = pairs(ops.Similarity.qSimBruteforce(spark, sf), 3)
     val single = pairs(ops.Similarity.qSimLsh(spark, sf), 3)
