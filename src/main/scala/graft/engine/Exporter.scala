@@ -76,26 +76,16 @@ final class Exporter(
       // rows come from the sink's observe() metric on the write job —
       // one scan per table, no re-read of the output. With --cluster-by
       // and both curve columns present (numeric, by contract), the
-      // table instead takes the curve-clustered layout path: one
-      // sizing pass (count + row-width sample) derives the file count
+      // table instead takes the curve-clustered layout path, whose
+      // bounds aggregate also counts the rows that size the file count
       // for the byte target, then the range-partitioned curve sort
-      // writes — the extra pass is the documented price of the opt-in
-      // layout optimization (clustered writes must know their file
-      // count up front; the reference has no counterpart flag).
+      // writes — the extra passes are the documented price of the
+      // opt-in layout optimization (clustered writes must know their
+      // file count up front; the reference has no counterpart flag).
       val colNames = df.columns.toSet
       val stats = cfg.clusterBy match {
         case Some(cs) if colNames.contains(cs.x) && colNames.contains(cs.y) =>
-          val nRows = df.count()
-          if (nRows == 0L) sink.writeTable(df, schema, table)
-          else {
-            val rpf = sink.estimateRecordsPerFile(df)
-            val files = math.max(1L, math.min(10000L, (nRows + rpf - 1) / rpf)).toInt
-            val ws =
-              if (cs.curve == "hilbert")
-                sink.writeHilbertOrdered(df, schema, table, (cs.x, cs.y), files)
-              else sink.writeZOrdered(df, schema, table, (cs.x, cs.y), files)
-            ws.copy(rows = nRows)
-          }
+          sink.writeClustered(df, schema, table, cs)
         // tables without the curve columns keep the plain layout —
         // --cluster-by targets the fact tables that carry them
         case _ => sink.writeTable(df, schema, table)

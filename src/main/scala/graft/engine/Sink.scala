@@ -110,7 +110,7 @@ final class ParquetSink(cfg: ExportConfig) {
     * single-partition funnel. */
   def writeZOrdered(df: DataFrame, schema: String, table: String,
       zCols: (String, String), files: Int): WriteStats =
-    writeCurveClustered(df, schema, table, zCols, files,
+    writeCurveClustered(df, schema, table, zCols, _ => Some(files),
       graft.functions.ZOrder.zValue(_, _, _, _, _, _))
 
   /** [[writeZOrdered]] on the Hilbert curve — same scaling, same
@@ -119,8 +119,31 @@ final class ParquetSink(cfg: ExportConfig) {
     * tighter; ZOrderSpec measures the difference). */
   def writeHilbertOrdered(df: DataFrame, schema: String, table: String,
       cCols: (String, String), files: Int): WriteStats =
-    writeCurveClustered(df, schema, table, cCols, files,
+    writeCurveClustered(df, schema, table, cCols, _ => Some(files),
       graft.functions.ZOrder.hilbertValue(_, _, _, _, _, _))
+
+  /** The `--cluster-by` export write: `spec`'s curve layout with the
+    * file count sized to the byte target — the row count of the bounds
+    * aggregate over [[estimateRecordsPerFile]], at most 10,000 files —
+    * so the table is counted once, by the aggregate the layout needs
+    * anyway. An empty table takes the plain [[writeTable]] layout. */
+  def writeClustered(df: DataFrame, schema: String, table: String,
+      spec: ClusterSpec): WriteStats = {
+    val files = (n: Long) =>
+      if (n == 0L) None
+      else {
+        val rpf = estimateRecordsPerFile(df)
+        Some(math.max(1L, math.min(10000L, (n + rpf - 1) / rpf)).toInt)
+      }
+    val curve: Curve =
+      if (spec.curve == "hilbert") graft.functions.ZOrder.hilbertValue(_, _, _, _, _, _)
+      else graft.functions.ZOrder.zValue(_, _, _, _, _, _)
+    writeCurveClustered(df, schema, table, (spec.x, spec.y), files, curve)
+  }
+
+  /** A curve key over two columns, each with its global (min, max). */
+  private type Curve = (org.apache.spark.sql.Column, Double, Double,
+    org.apache.spark.sql.Column, Double, Double) => org.apache.spark.sql.Column
 
   /** Curve values sampled per output file to place the file bounds:
     * the budget of Spark's own range partitioner (100 points per
@@ -129,11 +152,12 @@ final class ParquetSink(cfg: ExportConfig) {
   private val SamplePerFile = 300
   private val MaxSample = 1000000L
 
+  /** The curve layout behind the clustered writes. `filesFor` maps the
+    * table's row count, from the bounds aggregate, to the file count;
+    * `None` writes the plain [[writeTable]] layout instead. */
   private def writeCurveClustered(df: DataFrame, schema: String, table: String,
-      cCols: (String, String), files: Int,
-      curve: (org.apache.spark.sql.Column, Double, Double,
-              org.apache.spark.sql.Column, Double, Double)
-        => org.apache.spark.sql.Column): WriteStats = {
+      cCols: (String, String), filesFor: Long => Option[Int],
+      curve: Curve): WriteStats = {
     import org.apache.spark.sql.functions._
     val s = Projection.objectName(schema, cfg.lowercaseObjectNames)
     val t = Projection.objectName(table, cfg.lowercaseObjectNames)
@@ -143,6 +167,11 @@ final class ParquetSink(cfg: ExportConfig) {
       min(col(cx).cast("double")), max(col(cx).cast("double")),
       min(col(cy).cast("double")), max(col(cy).cast("double")),
       count(lit(1))).head()
+    val rows = r.getLong(4)
+    val files = filesFor(rows) match {
+      case Some(k) => k
+      case None => return writeTable(df, schema, table)
+    }
     val withZ = df.withColumn("__z", curve(
       col(cx), r.getDouble(0), r.getDouble(1),
       col(cy), r.getDouble(2), r.getDouble(3)))
@@ -151,7 +180,7 @@ final class ParquetSink(cfg: ExportConfig) {
     // make the bounds, and each file's footer box, depend on the
     // session's earlier work.
     val budget = math.min(SamplePerFile.toLong * files, MaxSample)
-    val fraction = math.min(1.0, budget.toDouble / math.max(r.getLong(4), 1L))
+    val fraction = math.min(1.0, budget.toDouble / math.max(rows, 1L))
     val sample = withZ.select(col("__z")).where(col("__z").isNotNull)
       .sample(withReplacement = false, fraction, seed = 0L)
       .collect().map(_.getLong(0)).sorted
@@ -173,7 +202,7 @@ final class ParquetSink(cfg: ExportConfig) {
       .option("compression", cfg.compressionMethod.replace("none", "uncompressed"))
       .options(rowGroupOpts)
       .parquet(dir.toString)
-    WriteStats(rows = -1L, files = files, outputDir = dir.toString)
+    WriteStats(rows = rows, files = files, outputDir = dir.toString)
   }
 
   /** Write one table under `{out}/{schema}/{table}/` (names lowercased

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -122,8 +122,7 @@ object Curation extends QueryFamily {
       round(lit(1.0) - size(array_distinct($"w")).cast("double") / size($"w"), 4)
         .as("dup_token_ratio"))
     val bigrams = toks
-      .select($"doc_id", $"w", explode(expr(
-        "CASE WHEN size(w) >= 2 THEN sequence(1, size(w) - 1) ELSE array() END")).as("i"))
+      .select($"doc_id", $"w", explode(wordStarts(2)).as("i"))
       .select($"doc_id",
         concat_ws(" ", expr("element_at(w, i)"), expr("element_at(w, i + 1)")).as("g"))
     val bigramStats = bigrams
@@ -151,19 +150,6 @@ object Curation extends QueryFamily {
       |FROM ts JOIN bstat b ON b.doc_id = ts.doc_id
       |ORDER BY ts.doc_id""".stripMargin
 
-  /** Distinct 8-word shingles as (doc_id, g) rows — same codegen'd
-    * element_at construction as Dedup.shingleRows, wider n. */
-  private def gramRows(spark: SparkSession, dir: String, n: Int): DataFrame = {
-    import spark.implicits._
-    val parts = (0 until n).map(k => expr(s"element_at(w, i + $k)"))
-    T.documentsSpread(spark, dir)
-      .select($"doc_id", split($"text", " ").as("w"))
-      .select($"doc_id", $"w", explode(expr(
-        s"CASE WHEN size(w) >= $n THEN sequence(1, size(w) - ${n - 1}) ELSE array() END")).as("i"))
-      .select($"doc_id", concat_ws(" ", parts: _*).as("g"))
-      .distinct()
-  }
-
   /** Benchmark decontamination: training docs sharing any 8-gram with
     * the held-out eval split (here: doc_id % 20 == 0 stands in for the
     * benchmark set). The eval gram set is |eval docs| x grams — tiny
@@ -173,11 +159,11 @@ object Curation extends QueryFamily {
     * check at 100 TB is exactly this plan with a bigger left side. */
   def qContamination(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val grams = gramRows(spark, dir, 8)
-    val evalGrams = grams.filter($"doc_id" % 20 === 0).select($"g").distinct()
+    val grams = Dedup.shingleRows(spark, dir, 8)
+    val evalGrams = grams.filter($"doc_id" % 20 === 0).select($"sh").distinct()
     val train = grams.filter($"doc_id" % 20 =!= 0)
     val perDoc = train.groupBy($"doc_id").agg(count(lit(1)).as("n_grams"))
-    val hits = train.join(evalGrams, Seq("g"), "left_semi")
+    val hits = train.join(evalGrams, Seq("sh"), "left_semi")
       .groupBy($"doc_id").agg(count(lit(1)).as("n_hits"))
     hits.join(perDoc, Seq("doc_id"))
       .select($"doc_id", $"n_grams", $"n_hits",
@@ -213,14 +199,14 @@ object Curation extends QueryFamily {
     * false-positive audit — any FP breaks the hash equality. */
   def qContaminationBloom(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val grams = gramRows(spark, dir, 8)
+    val grams = Dedup.shingleRows(spark, dir, 8)
     val bloom = grams.filter($"doc_id" % 20 === 0)
-      .select(xxhash64($"g").as("h"))
+      .select(xxhash64($"sh").as("h"))
       .agg(graft.functions.Aggregators.bloomSketch(1 << 24, 5)($"h").as("bloom"))
     val train = grams.filter($"doc_id" % 20 =!= 0)
     val perDoc = train.groupBy($"doc_id").agg(count(lit(1)).as("n_grams"))
     val hits = train.crossJoin(broadcast(bloom))
-      .filter(graft.functions.F.bloomMightContain($"bloom", xxhash64($"g"), 5))
+      .filter(graft.functions.F.bloomMightContain($"bloom", xxhash64($"sh"), 5))
       .groupBy($"doc_id").agg(count(lit(1)).as("n_hits"))
     hits.join(perDoc, Seq("doc_id"))
       .select($"doc_id", $"n_grams", $"n_hits",
@@ -243,28 +229,27 @@ object Curation extends QueryFamily {
     * measured FPR next to the analytic (1−(1−1/m)^{kn})^k. */
   def qBloomFprAudit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val grams = gramRows(spark, dir, 8)
-    val evalG = grams.filter($"doc_id" % 20 === 0).select($"g").distinct().cache()
-    val trainG = grams.filter($"doc_id" % 20 =!= 0).select($"g").distinct().cache()
+    val grams = Dedup.shingleRows(spark, dir, 8)
+    val evalG = grams.filter($"doc_id" % 20 === 0).select($"sh").distinct().cache()
+    val trainG = grams.filter($"doc_id" % 20 =!= 0).select($"sh").distinct().cache()
     val mRow = evalG.agg(count(lit(1)).as("n_eval"))
       .select($"n_eval", ($"n_eval" * 4).as("m"))
-    val hash = expr(
-      "cast(conv(substring(md5(cast(concat(gx, '#', cast(ix as string)) as binary)), 1, 12), 16, 10) AS bigint)")
+    val hash = md5Hash(concat($"gx", lit("#"), $"ix".cast("string")), 12)
     val ks = explode(expr("sequence(1, 5)")).as("ix")
     val bits = evalG.crossJoin(broadcast(mRow))
-      .select($"g".as("gx"), $"m", ks)
+      .select($"sh".as("gx"), $"m", ks)
       .select((hash % $"m").as("b"))
       .distinct()
     val probes = trainG.crossJoin(broadcast(mRow))
-      .select($"g".as("gx"), $"m", ks)
+      .select($"sh".as("gx"), $"m", ks)
       .select($"gx", (hash % $"m").as("b"))
     val flagged = probes.join(bits, Seq("b"), "left_semi")
       .groupBy($"gx").agg(count(lit(1)).as("nb"))
       .filter($"nb" === 5)
-      .select($"gx".as("g"))
-    val fp = flagged.join(evalG, Seq("g"), "left_anti")
+      .select($"gx".as("sh"))
+    val fp = flagged.join(evalG, Seq("sh"), "left_anti")
       .agg(count(lit(1)).as("n_fp"))
-    val nonMembers = trainG.join(evalG, Seq("g"), "left_anti")
+    val nonMembers = trainG.join(evalG, Seq("sh"), "left_anti")
       .agg(count(lit(1)).as("n_nonmember"))
     fp.crossJoin(broadcast(nonMembers)).crossJoin(broadcast(mRow))
       .select($"n_eval", $"n_nonmember", $"n_fp",
@@ -693,6 +678,15 @@ object Curation extends QueryFamily {
       |  CAST(ceil(any_value(tot.total_tokens)::DOUBLE / l) AS BIGINT) AS lb_windows
       |FROM fin, tot GROUP BY l ORDER BY ctx_len""".stripMargin
 
+  /** The content-hash split of a document with text `text`: its first
+    * two md5 nibbles bucket into 256 cells, cells 0-229 train, 230-242
+    * val, 243-255 test. [[qSplitAssign]] assigns it and
+    * [[qSplitLeakage]] audits it, so both read this one rule. */
+  private def contentSplit(text: Column): Column = {
+    val cell = md5Hash(text, 2).cast("int")
+    when(cell < 230, "train").when(cell < 243, "val").otherwise("test")
+  }
+
   /** Deterministic train/val/test split assignment: the first two md5
     * nibbles of the document CONTENT (not the id — re-keyed corpora
     * keep their assignment) bucket into 256 cells, carved 90/5/5.
@@ -702,10 +696,8 @@ object Curation extends QueryFamily {
     * different ids. Zero-shuffle assignment; one aggregate for audit. */
   def qSplitAssign(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val cell = conv(substring(md5($"text".cast("binary")), 1, 2), 16, 10).cast("int")
     T.documents(spark, dir)
-      .withColumn("split",
-        when(cell < 230, "train").when(cell < 243, "val").otherwise("test"))
+      .withColumn("split", contentSplit($"text"))
       .groupBy($"split")
       .agg(count(lit(1)).as("n_docs"),
         sum($"n_chars").as("sum_chars"))
@@ -803,9 +795,7 @@ object Curation extends QueryFamily {
       .select($"source", $"target_tokens", $"e")
     val expanded = docs
       .join(broadcast(epochs), Seq("source"))
-      .withColumn("u",
-        expr("cast(conv(substring(md5(cast(text as binary)), 1, 12), 16, 10) AS bigint)")
-          .cast("double") / lit(math.pow(16.0, 12)))
+      .withColumn("u", md5Unit($"text"))
       .withColumn("n_copies",
         (floor($"e") + when($"u" < $"e" - floor($"e"), 1L).otherwise(0L)).cast("long"))
       .filter($"n_copies" >= 1)
@@ -872,9 +862,7 @@ object Curation extends QueryFamily {
       .withColumn("rate", $"floor_tokens" / $"n_tokens")
       .select($"source", $"rate")
     docs
-      .withColumn("u",
-        expr("cast(conv(substring(md5(cast(text as binary)), 1, 12), 16, 10) AS bigint)")
-          .cast("double") / lit(math.pow(16.0, 12)))
+      .withColumn("u", md5Unit($"text"))
       .join(broadcast(rates), Seq("source"))
       .where($"u" < $"rate")
       .groupBy($"source")
@@ -945,11 +933,11 @@ object Curation extends QueryFamily {
     // the gram relation feeds three consumers (per-doc totals, the
     // df>1 filter, and the join-back); cache it so the corpus scan +
     // shingle explosion runs once, not three times
-    val grams = gramRows(spark, dir, 8).cache()
+    val grams = Dedup.shingleRows(spark, dir, 8).cache()
     val perDoc = grams.groupBy($"doc_id").agg(count(lit(1)).as("n_grams"))
-    val dup = grams.groupBy($"g").agg(count(lit(1)).as("df"))
-      .filter($"df" > 1).select($"g")
-    val dupHits = grams.join(dup, Seq("g"), "left_semi")
+    val dup = grams.groupBy($"sh").agg(count(lit(1)).as("df"))
+      .filter($"df" > 1).select($"sh")
+    val dupHits = grams.join(dup, Seq("sh"), "left_semi")
       .groupBy($"doc_id").agg(count(lit(1)).as("n_dup"))
     perDoc.join(dupHits, Seq("doc_id"), "left")
       .select($"doc_id", $"n_grams",
@@ -989,9 +977,7 @@ object Curation extends QueryFamily {
     // single conditional per-source aggregate (sample columns see only
     // in-sample rows via CASE/null-skipping aggregates); everything
     // downstream runs on the checkpointed |sources|-row relation
-    val sampChars = when(
-      expr("cast(conv(substring(md5(cast(text as binary)), 1, 12), 16, 10) AS bigint)")
-        .cast("double") / lit(math.pow(16.0, 12)) < 0.1, $"n_chars")
+    val sampChars = when(md5Unit($"text") < 0.1, $"n_chars")
     val strata = T.documents(spark, dir)
       .select($"source", $"n_chars", sampChars.as("samp_chars"))
       .groupBy($"source")
@@ -1210,8 +1196,7 @@ object Curation extends QueryFamily {
     val keyed = T.documents(spark, dir)
       .filter($"n_chars" > 0)
       .select($"lang", $"doc_id", $"n_chars",
-        (expr("cast(conv(substring(md5(cast(text as binary)), 1, 12), 16, 10) AS bigint)")
-          .cast("double") / lit(math.pow(16.0, 12))).as("u"))
+        md5Unit($"text").as("u"))
       .withColumn("k", -log($"u") / $"n_chars".cast("double"))
     Skew.twoPhaseTopK(keyed, Seq($"lang"), Seq($"k".asc, $"doc_id".asc), 5, "rk")
       .select($"lang", $"rk".cast("long").as("rk"), $"doc_id", $"n_chars")
@@ -1246,12 +1231,9 @@ object Curation extends QueryFamily {
     val docs = T.documents(spark, dir)
     val grams = docs
       .select($"source", $"doc_id", split($"text", " ").as("w"))
-      .select($"source", $"doc_id", explode(expr(
-        """CASE WHEN size(w) >= 5 THEN
-          |  transform(sequence(1, size(w) - 4), i ->
-          |    concat_ws(' ', element_at(w, i), element_at(w, i + 1),
-          |      element_at(w, i + 2), element_at(w, i + 3), element_at(w, i + 4)))
-          |ELSE array() END""".stripMargin)).as("g"))
+      .select($"source", $"doc_id", explode(transform(wordStarts(5), i =>
+        concat_ws(" ", element_at($"w", i), element_at($"w", i + 1),
+          element_at($"w", i + 2), element_at($"w", i + 3), element_at($"w", i + 4)))).as("g"))
       .distinct()
     val nDocs = docs.agg(count(lit(1)).cast("double").as("n_total"))
     grams.groupBy($"g")
@@ -1343,9 +1325,7 @@ object Curation extends QueryFamily {
     * |docs|-row split relation — no new corpus scan shape at 100 TB. */
   def qSplitLeakage(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val cell = conv(substring(md5($"text".cast("binary")), 1, 2), 16, 10).cast("int")
-    val splits = T.documents(spark, dir).select($"doc_id",
-      when(cell < 230, "train").when(cell < 243, "val").otherwise("test").as("split"))
+    val splits = T.documents(spark, dir).select($"doc_id", contentSplit($"text").as("split"))
     Dedup.qDedupMinhash(spark, dir)
       .join(splits.select($"doc_id".as("a_id"), $"split".as("split_a")), Seq("a_id"))
       .join(splits.select($"doc_id".as("b_id"), $"split".as("split_b")), Seq("b_id"))
@@ -1393,13 +1373,13 @@ object Curation extends QueryFamily {
   def qDsirSelect(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val B = 4096L
+    // (h + 0.5) / 16^12 as written, not md5Unit + 0.5 / 16^12: the two
+    // can differ in the last ulp, and the oracle computes this one
     val toks = T.documents(spark, dir)
       .select($"doc_id", $"lang",
-        ((expr("cast(conv(substring(md5(cast(text as binary)), 1, 12), 16, 10) AS bigint)")
-          .cast("double") + lit(0.5)) / lit(math.pow(16.0, 12))).as("u"),
+        ((md5Hash($"text", 12).cast("double") + lit(0.5)) / lit(md5Range)).as("u"),
         explode(split($"text", " ")).as("tok"))
-      .withColumn("b",
-        expr("cast(conv(substring(md5(cast(tok as binary)), 1, 12), 16, 10) AS bigint)") % lit(B))
+      .withColumn("b", md5Hash($"tok", 12) % lit(B))
       .cache()
     val counts = toks.groupBy($"b")
       .agg(sum(when($"lang" === "en", 1L).otherwise(0L)).as("ct"),
@@ -1536,7 +1516,7 @@ object Curation extends QueryFamily {
     val srcIdx = params
       .select(posexplode(map_keys($"mix")))
       .select($"pos".cast("long").as("src_idx"), $"col".as("source"))
-    val cell = conv(substring(md5($"text".cast("binary")), 1, 4), 16, 10).cast("long")
+    val cell = md5Hash($"text", 4)
     val k = greatest(lit(1L), floor($"s" / $"n_src").cast("long"))
     val assigned = docs.select($"source", cell.as("cell"))
       .join(broadcast(srcIdx), Seq("source"))

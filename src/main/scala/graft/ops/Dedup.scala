@@ -26,21 +26,34 @@ import org.apache.spark.sql.functions._
   */
 object Dedup extends QueryFamily {
 
-  /** Distinct n-word shingles as (doc_id, sh) rows. Built by exploding
-    * positions and concatenating via element_at — every expression on
-    * the hot path is codegen'd (a `transform` lambda would evaluate
-    * interpreted and gets re-evaluated in every join branch that reuses
-    * the shingle relation). */
-  private def shingleRows(spark: SparkSession, dir: String, n: Int): DataFrame = {
+  /** Distinct n-word shingles as (doc_id, sh) rows: the one word
+    * n-gram relation of the near-dup and curation families. Built by
+    * exploding positions and concatenating via element_at — every
+    * expression on the hot path is codegen'd (a `transform` lambda
+    * would evaluate interpreted and gets re-evaluated in every join
+    * branch that reuses the shingle relation). Every caller builds the
+    * same plan for the same n, so one caller's `.cache()` serves the
+    * others through Spark's plan-keyed cache. */
+  private[graft] def shingleRows(spark: SparkSession, dir: String, n: Int): DataFrame = {
     import spark.implicits._
     val parts = (0 until n).map(k => expr(s"element_at(w, i + $k)"))
     T.documentsSpread(spark, dir)
       .select($"doc_id", split($"text", " ").as("w"))
-      .select($"doc_id", $"w", explode(expr(
-        s"CASE WHEN size(w) >= $n THEN sequence(1, size(w) - ${n - 1}) ELSE array() END")).as("i"))
+      .select($"doc_id", $"w", explode(wordStarts(n)).as("i"))
       .select($"doc_id", concat_ws(" ", parts: _*).as("sh"))
       .distinct()
   }
+
+  /** MinHash signatures (doc_id, sig) of a (doc_id, sh) shingle
+    * relation: one md5 per shingle, its 48-bit prefix reduced mod
+    * 2^31-1, then [[SigComponents]] affine permutations folded by the
+    * one-pass signature UDAF — map-side partial reduce means the
+    * shuffle carries one 16-long buffer per doc per partition, not 16
+    * rows per shingle (graft.functions.Aggregators.MinHashSig). */
+  private def minhashSigs(shx: DataFrame): DataFrame =
+    shx.withColumn("h", md5Hash(col("sh"), 12) % 2147483647L)
+      .groupBy(col("doc_id"))
+      .agg(graft.functions.Aggregators.minhashSig(SigComponents)(col("h")).as("sig"))
 
   /** Signature width: 16 minhash components per doc (16 longs shuffled
     * per doc, not the shingle set — the scale contract). */
@@ -104,20 +117,12 @@ object Dedup extends QueryFamily {
   private def minhashPairs(spark: SparkSession, dir: String,
       boundary: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val p = 2147483647L
     // the shingle relation feeds signature hashing, candidate
     // verification (twice) and the size side-tables; cache it so the
     // explode+md5 pipeline runs once per invocation (and Spark's
     // plan-keyed cache shares it across queries in one session)
     val shx = shingleRows(spark, dir, 3).cache()
-    val hashed = shx
-      .withColumn("h", expr("cast(conv(substring(md5(sh), 1, 12), 16, 10) AS bigint)") % p)
-    // one-pass signature UDAF: map-side partial reduce means the shuffle
-    // carries one 16-long buffer per doc per partition, not 16 rows per
-    // shingle (graft.functions.Aggregators.MinHashSig)
-    val sigs = hashed.groupBy($"doc_id")
-      .agg(graft.functions.Aggregators.minhashSig(SigComponents)($"h").as("sig"))
-    val bands = bandExplode(sigs, ProductionBands)
+    val bands = bandExplode(minhashSigs(shx), ProductionBands)
     val (bandsA, bandsB) = boundary match {
       case Some(cut) => (bands.filter($"doc_id" < cut), bands.filter($"doc_id" >= cut))
       case None => (bands, bands)
@@ -126,8 +131,7 @@ object Dedup extends QueryFamily {
       .join(bandsB.select($"doc_id".as("b_id"), $"b", $"bandsig"), Seq("b", "bandsig"))
       .filter($"a_id" < $"b_id")
       .select($"a_id", $"b_id").distinct()
-    val sizes = shx.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    overlap(cand, shx, sizes)
+    overlap(cand, shx)
       .withColumn("j", $"ninter".cast("double") / ($"na" + $"nb" - $"ninter"))
   }
 
@@ -146,18 +150,24 @@ object Dedup extends QueryFamily {
       .select(col("a_id"), col("b_id")).distinct()
   }
 
+  /** Shingle count per document of `shx` (doc_id, sh), as (doc_id, n). */
+  private def shingleSizes(shx: DataFrame): DataFrame =
+    shx.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+
   /** Exact shingle overlap of candidate pairs: each (a_id, b_id) pair
     * of `cand` meets both documents' shingles in `shx` (doc_id, sh) and
-    * their shingle counts in `sizes` (doc_id, n). Returns (b_id, a_id,
-    * ninter, na, nb). The caller owns `shx` and `sizes`, and decides
-    * whether they are cached or checkpointed. */
-  private def overlap(cand: DataFrame, shx: DataFrame, sizes: DataFrame): DataFrame =
+    * their [[shingleSizes]]. Returns (b_id, a_id, ninter, na, nb). The
+    * caller owns `shx`, and decides whether it is cached or
+    * checkpointed. */
+  private def overlap(cand: DataFrame, shx: DataFrame): DataFrame = {
+    val sizes = shingleSizes(shx)
     cand
       .join(shx.select(col("doc_id").as("a_id"), col("sh")), Seq("a_id"))
       .join(shx.select(col("doc_id").as("b_id"), col("sh")), Seq("b_id", "sh"))
       .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("ninter"))
       .join(sizes.select(col("doc_id").as("a_id"), col("n").as("na")), Seq("a_id"))
       .join(sizes.select(col("doc_id").as("b_id"), col("n").as("nb")), Seq("b_id"))
+  }
 
   def qDedupMinhash(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -171,15 +181,8 @@ object Dedup extends QueryFamily {
     * 16-component signature banded 4x4. Shared with StreamingOps'
     * online near-dup admission, which keys ingest state by these
     * exact band signatures. */
-  private[graft] def docBands(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val p = 2147483647L
-    val sigs = shingleRows(spark, dir, 3)
-      .withColumn("h", expr("cast(conv(substring(md5(sh), 1, 12), 16, 10) AS bigint)") % p)
-      .groupBy($"doc_id")
-      .agg(graft.functions.Aggregators.minhashSig(SigComponents)($"h").as("sig"))
-    bandExplode(sigs, ProductionBands)
-  }
+  private[graft] def docBands(spark: SparkSession, dir: String): DataFrame =
+    bandExplode(minhashSigs(shingleRows(spark, dir, 3)), ProductionBands)
 
   /** Shared CTE prefix replicating the exact MinHash pipeline in DuckDB
     * (same 48-bit md5 prefix -> same affine permutations -> same bands). */
@@ -224,11 +227,7 @@ object Dedup extends QueryFamily {
     * max) a pipeline owner reads before raising the LSH threshold. */
   def qMinhashEstAudit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val p = 2147483647L
-    val sigs = shingleRows(spark, dir, 3)
-      .withColumn("h", expr("cast(conv(substring(md5(sh), 1, 12), 16, 10) AS bigint)") % p)
-      .groupBy($"doc_id")
-      .agg(graft.functions.Aggregators.minhashSig(SigComponents)($"h").as("sig"))
+    val sigs = minhashSigs(shingleRows(spark, dir, 3))
     val est = minhashPairs(spark, dir)
       .join(sigs.select($"doc_id".as("a_id"), $"sig".as("sa")), Seq("a_id"))
       .join(sigs.select($"doc_id".as("b_id"), $"sig".as("sb")), Seq("b_id"))
@@ -264,19 +263,13 @@ object Dedup extends QueryFamily {
     * production (4×4) config uses. */
   def qLshBandSweep(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val p = 2147483647L
     // eager ckpt (not lazy cache): the three layouts each consume shx
     // twice and sigs once — materializing both up front truncates the
     // shared lineage, so no layout re-derives the shingle/signature
     // pipeline during its own planning or a cache miss (the round-10
     // idle-drift finding on this query: 2.7 -> 3.8 s with lazy caches)
     val shx = shingleRows(spark, dir, 3).ckpt()
-    val sigs = shx
-      .withColumn("h", expr("cast(conv(substring(md5(sh), 1, 12), 16, 10) AS bigint)") % p)
-      .groupBy($"doc_id")
-      .agg(graft.functions.Aggregators.minhashSig(SigComponents)($"h").as("sig"))
-      .ckpt()
-    val sizes = shx.groupBy($"doc_id").agg(count(lit(1)).as("n"))
+    val sigs = minhashSigs(shx).ckpt()
     def layout(nBands: Int): DataFrame = {
       val rows = SigComponents / nBands
       val bands = bandExplode(sigs, nBands)
@@ -284,7 +277,7 @@ object Dedup extends QueryFamily {
         .join(bands.select($"doc_id".as("b_id"), $"b", $"bandsig"), Seq("b", "bandsig"))
         .filter($"a_id" < $"b_id")
         .select($"a_id", $"b_id").distinct()
-      val verified = overlap(cand, shx, sizes)
+      val verified = overlap(cand, shx)
         .withColumn("j", $"ninter".cast("double") / ($"na" + $"nb" - $"ninter"))
       cand.agg(count(lit(1)).as("n_candidates")).crossJoin(
           verified.filter($"j" >= 0.8).agg(count(lit(1)).as("n_verified")))
@@ -443,7 +436,7 @@ object Dedup extends QueryFamily {
     import spark.implicits._
     T.documentsSpread(spark, dir)
       .select($"doc_id", explode(split($"text", " ")).as("t"))
-      .withColumn("h", expr("cast(conv(substring(md5(t), 1, 8), 16, 10) AS bigint)"))
+      .withColumn("h", md5Hash($"t", 8))
       .groupBy($"doc_id")
       .agg(graft.functions.Aggregators.simhashSig($"h").as("simhash"))
   }
@@ -520,8 +513,7 @@ object Dedup extends QueryFamily {
     // feeds df-pruning, two verification joins and the size table —
     // cache so the explode pipeline materializes once
     val shx = shingleRows(spark, dir, 4).cache()
-    val sizes = shx.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    overlap(rareShingleCandidates(shx), shx, sizes)
+    overlap(rareShingleCandidates(shx), shx)
       .withColumn("j", $"ninter".cast("double") / ($"na" + $"nb" - $"ninter"))
       .filter($"j" >= 0.5)
       .select($"a_id", $"b_id", round($"j", 4).as("jaccard"))
@@ -552,13 +544,9 @@ object Dedup extends QueryFamily {
     * (unhashable ndarray), and the string form is equally portable. */
   def qDedupMinhashSigs(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val p = 2147483647L
-    shingleRows(spark, dir, 3)
-      .withColumn("h", expr("cast(conv(substring(md5(sh), 1, 12), 16, 10) AS bigint)") % p)
-      .groupBy($"doc_id")
-      .agg(graft.functions.Aggregators.minhashSig(SigComponents)($"h").as("sig_arr"))
+    minhashSigs(shingleRows(spark, dir, 3))
       .select($"doc_id",
-        expr("array_join(transform(sig_arr, x -> cast(x AS string)), ',')").as("sig"))
+        expr("array_join(transform(sig, x -> cast(x AS string)), ',')").as("sig"))
       .orderBy($"doc_id")
   }
 
@@ -640,8 +628,7 @@ object Dedup extends QueryFamily {
     import spark.implicits._
     // same cached relation (and cache entry) as qDedupNgramJaccard
     val shx = shingleRows(spark, dir, 4).cache()
-    val sizes = shx.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    overlap(rareShingleCandidates(shx), shx, sizes)
+    overlap(rareShingleCandidates(shx), shx)
       .withColumn("cont_a", $"ninter".cast("double") / $"na")
       .withColumn("cont_b", $"ninter".cast("double") / $"nb")
       .filter($"cont_a" >= 0.5 || $"cont_b" >= 0.5)
@@ -785,11 +772,10 @@ object Dedup extends QueryFamily {
     import spark.implicits._
     val W = 8
     val parts = (0 until W).map(k => expr(s"element_at(w, pos + $k)"))
-    // keep per-window POSITION (unlike gramRows): islands need it
+    // keep per-window POSITION (unlike shingleRows): islands need it
     val grams = T.documentsSpread(spark, dir)
       .select($"doc_id", split($"text", " ").as("w"))
-      .select($"doc_id", size($"w").as("n_tok"), $"w", explode(expr(
-        s"CASE WHEN size(w) >= $W THEN sequence(1, size(w) - ${W - 1}) ELSE array() END")).as("pos"))
+      .select($"doc_id", size($"w").as("n_tok"), $"w", explode(wordStarts(W)).as("pos"))
       .select($"doc_id", $"n_tok", $"pos",
         substring(md5(concat_ws(" ", parts: _*).cast("binary")), 1, 16).as("g"))
       .cache()
@@ -849,9 +835,7 @@ object Dedup extends QueryFamily {
     val parts = (0 until W).map(k => expr(s"element_at(w, pos + $k)"))
     val grams = T.documents(spark, dir)
       .select($"doc_id", split($"text", " ").as("w"))
-      .select($"doc_id", explode(expr(
-        s"CASE WHEN size(w) >= $W THEN sequence(1, size(w) - ${W - 1}) ELSE array() END")).as("pos"),
-        $"w")
+      .select($"doc_id", explode(wordStarts(W)).as("pos"), $"w")
       .select($"doc_id", $"pos",
         substring(md5(concat_ws(" ", parts: _*).cast("binary")), 1, 16).as("g"))
       .cache()
@@ -918,8 +902,7 @@ object Dedup extends QueryFamily {
     val parts = (0 until K).map(k => expr(s"element_at(w, pos + $k)"))
     val grams = T.documents(spark, dir)
       .select($"doc_id", $"source", split($"text", " ").as("w"))
-      .select($"doc_id", $"source", $"w", size($"w").as("n_w"), explode(expr(
-        s"CASE WHEN size(w) >= $K THEN sequence(1, size(w) - ${K - 1}) ELSE array() END")).as("pos"))
+      .select($"doc_id", $"source", $"w", size($"w").as("n_w"), explode(wordStarts(K)).as("pos"))
       .select($"doc_id", $"source", ($"n_w" - lit(K - 1)).as("n_g"), $"pos",
         substring(md5(concat_ws(" ", parts: _*).cast("binary")), 1, 16).as("g"))
     val wSel = Window.partitionBy($"doc_id").orderBy($"pos")
@@ -1074,7 +1057,7 @@ object Dedup extends QueryFamily {
     // keyed the same way share one pass)
     val tok = T.documentsSpread(spark, dir)
       .select($"doc_id", explode(split($"text", " ")).as("t"))
-      .withColumn("h", expr("cast(conv(substring(md5(t), 1, 8), 16, 10) AS bigint)"))
+      .withColumn("h", md5Hash($"t", 8))
       .cache()
     // each strategy's per-doc key relation is SELF-JOINED for its
     // candidate pairs, and the two join sides are alias-renamed
@@ -1123,7 +1106,7 @@ object Dedup extends QueryFamily {
     // cached: the 5000-row size table feeds two broadcasts whose
     // projections differ (a_id / b_id rename), so without the cache
     // each broadcast re-aggregated the 2M-row shingle relation
-    val sizes = shx.groupBy($"doc_id").agg(count(lit(1)).as("n")).cache()
+    val sizes = shingleSizes(shx).cache()
     // the probe side is bounded (ServingProbeDocs docs' shingles, ~25k
     // rows) — broadcast it so the corpus shingle relation is NOT
     // exchanged by its string key (guide §3.1: the size ESTIMATE of a

@@ -172,8 +172,7 @@ object ExportOps extends QueryFamily {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     def sum48(df: DataFrame, name: String, rowStr: org.apache.spark.sql.Column) =
-      df.select(conv(substring(md5(rowStr.cast("binary")), 1, 12), 16, 10)
-          .cast("long").as("fp"))
+      df.select(md5Hash(rowStr, 12).as("fp"))
         .agg(count(lit(1)).as("n_rows"), expr("bit_xor(fp)").as("checksum"))
         .select(lit(name).as("table_name"), $"n_rows", $"checksum")
     val orders = sum48(T.orders(spark, dir), "orders",
@@ -643,8 +642,7 @@ object ExportOps extends QueryFamily {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val (_, baseLive, _, deltaLatest, merged) = cdcState(spark, dir, 500)
-    val fp = conv(substring(md5(concat_ws("|", $"user_id", $"last_scn")
-        .cast("binary")), 1, 12), 16, 10).cast("long")
+    val fp = md5Hash(concat_ws("|", $"user_id", $"last_scn"), 12)
     def psum(df: DataFrame, nName: String, csName: String): DataFrame =
       df.select(($"user_id" % 256).as("pt"), fp.as("fp"))
         .groupBy($"pt")

@@ -1436,8 +1436,7 @@ object Mining extends QueryFamily {
       .ckpt()
     def bucketed(df: DataFrame): DataFrame = df
       .select($"t", $"cnt", explode(expr("sequence(0, 3)")).as("r"))
-      .withColumn("b", expr(
-        s"cast(conv(substring(md5(concat(r, '|', t)), 1, 12), 16, 10) AS bigint) % $w"))
+      .withColumn("b", md5Hash(concat($"r", lit("|"), $"t"), 12) % w)
     val counters = bucketed(cnt)
       .groupBy($"r", $"b").agg(sum($"cnt").as("c"))
     val top = cnt.orderBy(desc("cnt"), asc("t")).limit(10)
@@ -1534,9 +1533,7 @@ object Mining extends QueryFamily {
       .groupBy($"o_custkey")
       .agg(max(when($"yr" === 1995, 1).otherwise(0)).as("in_a"),
         max(when($"yr" === 1996, 1).otherwise(0)).as("in_b"))
-      .withColumn("u",
-        expr("cast(conv(substring(md5(cast(o_custkey as string)), 1, 12), 16, 10) AS bigint)")
-          .cast("double") / lit(math.pow(16.0, 12)))
+      .withColumn("u", md5Unit($"o_custkey".cast("string")))
       .ckpt()
     val bottom = m.orderBy($"u", $"o_custkey").limit(k)
     val sketch = bottom.agg(max($"u").as("uk"),
@@ -1589,10 +1586,7 @@ object Mining extends QueryFamily {
     val docs = T.documents(spark, dir).select($"doc_id", $"n_chars")
     val m = docs
       .select($"doc_id", $"n_chars", explode(expr("sequence(0, 31)")).as("b"))
-      .withColumn("u",
-        expr("""cast(conv(substring(md5(cast(concat(cast(doc_id AS string), '|',
-               |cast(b AS string)) AS binary)), 1, 12), 16, 10) AS bigint)""".stripMargin)
-          .cast("double") / lit(math.pow(16.0, 12)))
+      .withColumn("u", md5Unit(concat($"doc_id".cast("string"), lit("|"), $"b".cast("string"))))
       .withColumn("wt",
         when($"u" < 0.36787944117144233, 0)
           .when($"u" < 0.7357588823428847, 1)

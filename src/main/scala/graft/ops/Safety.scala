@@ -310,8 +310,7 @@ object Safety extends QueryFamily {
       .withColumn("n", sum($"c").over(
         Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
       .cache()
-    val uni = expr("cast(conv(substring(md5(cast(v as string)), 1, 12), 16, 10) AS bigint)")
-      .cast("double") / lit(math.pow(16.0, 12))
+    val uni = md5Unit($"v".cast("string"))
     val scored = cum
       .withColumn("u", -abs($"cum" - $"n" / lit(2.0)))
       .withColumn("g", -log(-log(uni)))
@@ -348,8 +347,7 @@ object Safety extends QueryFamily {
   def qDpHistogram(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val eps = 1.0
-    val u = expr("cast(conv(substring(md5(cast(lang as binary)), 1, 12), 16, 10) AS bigint)")
-      .cast("double") / lit(math.pow(16.0, 12))
+    val u = md5Unit($"lang")
     T.documents(spark, dir)
       .groupBy($"lang").agg(count(lit(1)).as("n"))
       .withColumn("u", u)
@@ -452,9 +450,7 @@ object Safety extends QueryFamily {
     import spark.implicits._
     val eps = 1.0
     val cap = 500.0
-    def u(salt: String) =
-      expr(s"cast(conv(substring(md5(cast(concat(lang, '$salt') as binary)), 1, 12), 16, 10) AS bigint)")
-        .cast("double") / lit(math.pow(16.0, 12))
+    def u(salt: String) = md5Unit(concat($"lang", lit(salt)))
     def lap(uu: Column, scale: Double): Column =
       -lit(scale) * signum(uu - 0.5) * log(lit(1.0) - lit(2.0) * abs(uu - 0.5))
     T.documents(spark, dir)

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 
 import graft.engine.ParquetTables
 
@@ -77,6 +77,11 @@ object Similarity extends QueryFamily {
     * by `n_id`. Within one probe it is a total order, so the top k of a
     * ranking by it is the first k rows of any deeper ranking. */
   private def byCos: Seq[Column] = Seq(desc("cos"), asc("n_id"))
+
+  /** The per-probe L2 twin of [[byCos]], as a ranking window: squared
+    * distance column `d2` ascending, ties broken by `n_id`. */
+  private def byL2(d2: String): WindowSpec =
+    Window.partitionBy(col("q_id")).orderBy(asc(d2), asc("n_id"))
 
   /** Per-probe top-`k` by [[byCos]] through one plain ranking window
     * partitioned by `by`, keeping the 1-based rank as column `rank`. For
@@ -1810,7 +1815,7 @@ object Similarity extends QueryFamily {
     val adc = codes.join(broadcast(qt),
         $"sub" === $"q_sub" && $"code" === $"c" && $"n_id" =!= $"q_id")
       .groupBy($"q_id", $"n_id").agg(sum($"qd2").as("ad2"))
-    val wAdc = Window.partitionBy($"q_id").orderBy(asc("ad2"), asc("n_id"))
+    val wAdc = byL2("ad2")
     val shortlist = adc.withColumn("srank", row_number().over(wAdc))
       .filter($"srank" <= 64)
       .select($"q_id", $"n_id", $"ad2")
@@ -1820,7 +1825,7 @@ object Similarity extends QueryFamily {
     val ed = $"qx" - $"nx"
     val exact = shortlist.join(nv, Seq("n_id")).join(broadcast(qv), Seq("q_id", "i"))
       .groupBy($"q_id", $"n_id").agg(sum(ed * ed).as("d2"), max($"ad2").as("ad2"))
-    val w = Window.partitionBy($"q_id").orderBy(asc("d2"), asc("n_id"))
+    val w = byL2("d2")
     exact.withColumn("rank", row_number().over(w)).filter($"rank" <= 3)
       .select($"q_id", $"rank".cast("long").as("rank"), $"n_id",
         round($"d2", 4).as("d2"), round($"ad2", 4).as("pq_d2"))
@@ -1900,7 +1905,7 @@ object Similarity extends QueryFamily {
     val adc = candidates.join(broadcast(qt),
         $"cq_id" === $"q_id" && $"sub" === $"q_sub" && $"code" === $"c")
       .groupBy($"q_id", $"n_id").agg(sum($"qd2").as("ad2"))
-    val wAdc = Window.partitionBy($"q_id").orderBy(asc("ad2"), asc("n_id"))
+    val wAdc = byL2("ad2")
     val shortlist = adc.withColumn("srank", row_number().over(wAdc))
       .filter($"srank" <= 16)
       .select($"q_id", $"n_id", $"ad2")
@@ -1909,7 +1914,7 @@ object Similarity extends QueryFamily {
     val ed = $"qx" - $"nx"
     val exact = shortlist.join(nv, Seq("n_id")).join(broadcast(qv), Seq("q_id", "i"))
       .groupBy($"q_id", $"n_id").agg(sum(ed * ed).as("d2"), max($"ad2").as("ad2"))
-    val w = Window.partitionBy($"q_id").orderBy(asc("d2"), asc("n_id"))
+    val w = byL2("d2")
     exact.withColumn("rank", row_number().over(w)).filter($"rank" <= 3)
       .select($"q_id", $"rank".cast("long").as("rank"), $"n_id",
         round($"d2", 4).as("d2"), round($"ad2", 4).as("pq_d2"))
@@ -1955,7 +1960,7 @@ object Similarity extends QueryFamily {
     val exact = d.join(broadcast(probes), Seq("i"))
       .filter($"vec_id" =!= $"q_id")
       .groupBy($"q_id", $"vec_id".as("n_id")).agg(sum(dd * dd).as("d2"))
-    val w = Window.partitionBy($"q_id").orderBy(asc("d2"), asc("n_id"))
+    val w = byL2("d2")
     val exactTop = exact.withColumn("rn", row_number().over(w)).filter($"rn" <= 3)
       .select($"q_id", $"n_id")
     val approx = qSimPq(spark, dir).select($"q_id", $"n_id")

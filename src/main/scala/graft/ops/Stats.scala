@@ -604,7 +604,7 @@ object Stats extends QueryFamily {
     * never a partitionless window over the calibration rows. */
   def qConformalThreshold(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val cell = conv(substring(md5($"text".cast("binary")), 1, 2), 16, 10).cast("int")
+    val cell = md5Hash($"text", 2).cast("int")
     val docs = T.documents(spark, dir)
       .select($"doc_id", $"n_chars".as("x"),
         size(split($"text", " ")).cast("long").as("y"),
@@ -1083,8 +1083,7 @@ object Stats extends QueryFamily {
     * combined aggregate. */
   def qSrmCheck(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val cell = conv(substring(md5($"o_orderkey".cast("string").cast("binary")), 1, 2), 16, 10)
-      .cast("int")
+    val cell = md5Hash($"o_orderkey".cast("string"), 2).cast("int")
     T.orders(spark, dir)
       .select(when(cell < 128, "a").otherwise("b").as("arm"))
       .agg(count(lit(1)).as("n"),

@@ -363,8 +363,7 @@ object Text extends QueryFamily {
     val parts = (0 until n).map(k => expr(s"element_at(w, i + $k)"))
     val sh = T.documents(spark, dir)
       .select($"doc_id", split($"text", " ").as("w"))
-      .select($"doc_id", $"w", explode(expr(
-        s"CASE WHEN size(w) >= $n THEN sequence(1, size(w) - ${n - 1}) ELSE array() END")).as("i"))
+      .select($"doc_id", $"w", explode(wordStarts(n)).as("i"))
       .select($"doc_id", concat_ws(" ", parts: _*).as("g"))
     val tf = sh.groupBy($"doc_id", $"g").agg(count(lit(1)).as("tf"))
     val nDocs = T.documents(spark, dir).agg(count(lit(1)).cast("double").as("n_docs"))
@@ -418,8 +417,7 @@ object Text extends QueryFamily {
     val toks = T.documents(spark, dir)
       .select($"doc_id", split($"text", " ").as("w"))
     val big = toks
-      .select($"doc_id", explode(expr(
-        "CASE WHEN size(w) >= 2 THEN sequence(1, size(w) - 1) ELSE array() END")).as("i"), $"w")
+      .select($"doc_id", explode(wordStarts(2)).as("i"), $"w")
       .select($"doc_id", expr("element_at(w, i)").as("w1"),
         expr("element_at(w, i + 1)").as("w2"))
       .cache()
@@ -1776,7 +1774,7 @@ object Text extends QueryFamily {
       .select(explode(split($"text", " ")).as("tok"))
       .distinct()
       .select($"tok",
-        expr("cast(conv(substring(md5(cast(tok as binary)), 1, 12), 16, 10) AS bigint)").as("h"))
+        md5Hash($"tok", 12).as("h"))
       .cache()
     Seq(10, 12, 14).map { k =>
       hashed.select(pmod($"h", lit(1L << k)).as("b"))
@@ -2167,8 +2165,7 @@ object Text extends QueryFamily {
     import spark.implicits._
     val counts = T.documents(spark, dir)
       .select(split($"text", " ").as("w"))
-      .select($"w", explode(expr(
-        "CASE WHEN size(w) >= 3 THEN sequence(1, size(w) - 2) ELSE array() END")).as("i"))
+      .select($"w", explode(wordStarts(3)).as("i"))
       .select(concat_ws(" ", expr("element_at(w, i)"),
         expr("element_at(w, i + 1)"), expr("element_at(w, i + 2)")).as("t"))
       .groupBy($"t").agg(count(lit(1)).as("r"))

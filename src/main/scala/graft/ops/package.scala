@@ -1,8 +1,31 @@
 package graft
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Column, Dataset}
+import org.apache.spark.sql.functions.{conv, expr, lit, md5, substring}
 
 package object ops {
+
+  /** The first `hexDigits` hex digits of `md5(c)` read as a bigint: the
+    * one hash behind every md5-derived bucket, cell, permutation and
+    * uniform in this package. A string `c` hashes as its UTF-8 bytes.
+    * The DuckDB twins spell the same number as a sum of nibbles over
+    * `substr(md5(x), i, 1)`, so both engines agree hash for hash. */
+  def md5Hash(c: Column, hexDigits: Int): Column =
+    conv(substring(md5(c), 1, hexDigits), 16, 10).cast("bigint")
+
+  /** 16^12, the size of the range of `md5Hash(c, 12)`. */
+  def md5Range: Double = math.pow(16.0, 12)
+
+  /** `md5Hash(c, 12)` scaled to a uniform in [0, 1). */
+  def md5Unit(c: Column): Column = md5Hash(c, 12).cast("double") / lit(md5Range)
+
+  /** Start positions 1 .. size(w) - n + 1 of the n-word windows of the
+    * word-array column `w`; empty when `w` has fewer than n words
+    * (unguarded, `sequence(1, 0)` would count down and emit windows
+    * that run past the end). Window i's k-th word is
+    * `element_at(w, i + k)`. */
+  def wordStarts(n: Int): Column =
+    expr(s"CASE WHEN size(w) >= $n THEN sequence(1, size(w) - ${n - 1}) ELSE array() END")
 
   /** Lineage-truncation switch for the iterative operator family.
     *

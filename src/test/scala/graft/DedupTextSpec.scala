@@ -21,6 +21,24 @@ class DedupTextSpec extends AnyFunSuite {
     assert(survivors === total - dropped)
   }
 
+  test("md5Hash and md5Unit read the md5 hex prefix the DuckDB twins compute") {
+    // md5("abc") = 900150983cd24fb0...
+    val r = spark.range(1).select(ops.md5Hash(lit("abc"), 12), ops.md5Hash(lit("abc"), 2),
+      ops.md5Unit(lit("abc"))).head()
+    assert(r.getLong(0) === 158335321521362L)
+    assert(r.getLong(1) === 144L)
+    assert(r.getDouble(2) === 158335321521362L / math.pow(16.0, 12))
+  }
+
+  test("word n-grams: a doc shorter than n has none, a doc of exactly n words has one") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ngram").toString
+    spark.createDataFrame(Seq((1L, "a b"), (2L, "a b c"))).toDF("doc_id", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    val grams = ops.Dedup.shingleRows(spark, dir, 3).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("sh"))
+    assert(grams.toSeq === Seq(2L -> "a b c"))
+  }
+
   test("simhash is 32 binary chars and deterministic") {
     val df = ops.Dedup.qDedupSimhash(spark, sf)
     val s1 = df.collect().map(_.getString(1))

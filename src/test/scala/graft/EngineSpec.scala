@@ -220,6 +220,19 @@ class SinkExporterSpec extends AnyFunSuite {
       assert(spans.sum / spans.length < global,
         s"clustered per-file spans $spans not narrower than global $global")
     }
+    // an empty table (rowLimit = 0) reports 0 rows and is written in
+    // the plain layout, whose reported files are the files on disk
+    import scala.jdk.CollectionConverters._
+    val outEmpty = freshDir()
+    val cfgEmpty = cfg.copy(outputDirectory = outEmpty, rowLimit = 0L)
+    val empty = new Exporter(cfgEmpty, catalog, new ParquetSource(catalog),
+      new ParquetSink(cfgEmpty)).exportTables(spark)
+    assert(empty.totalRows === 0)
+    val emptyDir = Paths.get(outEmpty, "sf0.001", "lineitem")
+    val emptyParts = Files.list(emptyDir).iterator().asScala
+      .count(_.getFileName.toString.endsWith(".parquet"))
+    assert(empty.tables.head.files === emptyParts)
+    assert(spark.read.parquet(emptyDir.toString).count() === 0)
   }
 
   test("parallel export equals sequential export") {
