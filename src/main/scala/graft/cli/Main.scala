@@ -12,6 +12,9 @@ import graft.engine._
   * `--source-format parquet --source-root DIR` runs the pipeline from
   * staged Parquet (testable offline); `--source-format jdbc` scans
   * Oracle with optional `AS OF SCN` pinning per the isolation level.
+  * `--export-parallelism N` sets how many tables are in flight; without
+  * it the [[Exporter]] runs two ([[Exporter.DefaultLanes]]). The report goes
+  * to stdout as JSON lines ([[reportLines]]).
   */
 object Main {
 
@@ -81,6 +84,21 @@ object Main {
   def redacted(cfg: ExportConfig): String =
     cfg.copy(password = if (cfg.password.isEmpty) "" else "(redacted)").toString
 
+  /** The run's structured records, one JSON object per line: one per
+    * exported table (schema, table, rows, files, bytes, seconds), then
+    * one for the run (tables, rows, bytes, seconds, lanes, and the
+    * pinned SCN or null). */
+  def reportLines(report: ExportReport, scn: Option[Long]): Seq[String] = {
+    import graft.Harness.json
+    import scala.collection.immutable.ListMap
+    report.tables.map { t =>
+      json.writeValueAsString(ListMap("schema" -> t.schema, "table" -> t.table,
+        "rows" -> t.rows, "files" -> t.files, "bytes" -> t.bytes, "seconds" -> t.seconds))
+    } :+ json.writeValueAsString(ListMap("tables" -> report.tables.size,
+      "rows" -> report.totalRows, "bytes" -> report.totalBytes,
+      "seconds" -> report.seconds, "lanes" -> report.lanes, "scn" -> scn))
+  }
+
   def main(args: Array[String]): Unit = parseArgs(args.toSeq) match {
     case Left(msg) =>
       println(msg)
@@ -97,12 +115,12 @@ object Main {
       spark.sparkContext.setLogLevel(cfg.logLevel)
       println(s"[export] config: ${redacted(cfg)}")
       val sink = new ParquetSink(cfg)
-      val par = extras.getOrElse("export-parallelism", "1").toInt
-      val report = extras("source-format") match {
+      val lanes = extras.get("export-parallelism").map(_.toInt)
+      val (report, scn) = extras("source-format") match {
         case "parquet" =>
           val catalog = new ParquetCatalog(java.nio.file.Paths.get(extras("source-root")))
-          new Exporter(cfg, catalog, new ParquetSource(catalog), sink, par)
-            .exportTables(spark)
+          (new Exporter(cfg, catalog, new ParquetSource(catalog), sink, lanes)
+            .exportTables(spark), None)
         case "jdbc" =>
           // --jdbc-url overrides the Oracle URL built from config parts
           // (e.g. an embedded Derby for offline runs); catalog discovery
@@ -115,16 +133,12 @@ object Main {
           val scn = JdbcSource.pinScn(cfg.isolationLevel, jdbcUrl,
             () => JdbcSource.fetchCurrentScn(jdbcUrl, cfg.username, cfg.password))
           scn.foreach(n => println(s"[export] pinned AS OF SCN $n for the run"))
-          new Exporter(cfg, catalog,
-            new JdbcSource(cfg, scn, urlOverride = override_), sink, par)
-            .exportTables(spark)
+          (new Exporter(cfg, catalog,
+            new JdbcSource(cfg, scn, urlOverride = override_), sink, lanes)
+            .exportTables(spark), scn)
         case other => sys.error(s"unknown source format: $other")
       }
-      report.tables.foreach { t =>
-        println(f"[export] ${t.schema}.${t.table}: ${t.rows} rows, " +
-          f"${t.files} files, ${t.seconds}%.3fs")
-      }
-      println(f"[export] total ${report.totalRows} rows in ${report.seconds}%.3fs")
+      reportLines(report, scn).foreach(println)
       spark.stop()
   }
 }

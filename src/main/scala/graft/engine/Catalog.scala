@@ -17,6 +17,10 @@ import scala.util.matching.Regex
   * (SURVEY.md §5.4). Note the reference's exclude-pattern SQL is
   * malformed — the clause is appended after ORDER BY (main.py:201,
   * 205-207); we generate the *intended* SQL (exclude before ORDER BY).
+  *
+  * A [[ColumnMeta]] of a text or binary column carries in `precision`
+  * the byte width the sink sizes files by: the declared length (JDBC
+  * `COLUMN_SIZE`), or a Parquet table's footer bytes per value.
   */
 final case class ColumnMeta(name: String, dataType: String, position: Int,
     precision: Option[Int] = None, scale: Option[Int] = None)
@@ -171,12 +175,21 @@ final class ParquetCatalog(root: Path) extends TableCatalog {
     }
   }
 
+  /** The table's columns in file order; text and binary columns carry
+    * their footer width ([[ParquetTables.valueWidths]]) as `precision`. */
   override def listColumns(schema: String, table: String): Seq[ColumnMeta] = {
+    import org.apache.spark.sql.types.{BinaryType, StringType}
     val spark = org.apache.spark.sql.SparkSession.active
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = ParquetTables.read(spark, tablePath(schema, table))
+    val path = tablePath(schema, table)
+    val df = ParquetTables.read(spark, path)
+    lazy val widths = ParquetTables.valueWidths(spark, path)
     df.schema.fields.zipWithIndex.toSeq.map { case (f, i) =>
-      ColumnMeta(f.name, f.dataType.simpleString, i + 1)
+      val width = f.dataType match {
+        case StringType | BinaryType => widths.get(f.name)
+        case _ => None
+      }
+      ColumnMeta(f.name, f.dataType.simpleString, i + 1, precision = width)
     }
   }
 

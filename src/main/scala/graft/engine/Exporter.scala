@@ -1,22 +1,27 @@
 package graft.engine
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 import scala.util.matching.Regex
 
 /** Orchestration (reference A17-A18): schema loop -> table loop ->
   * discover columns -> project -> scan -> sink, with per-scope timing.
   *
   * Where the reference is strictly sequential over one connection
-  * (main.py:219-263), each table here is an independent Spark job:
-  * intra-table parallelism comes from source partitioning and tables
-  * can be submitted concurrently on one SparkSession from a thread
-  * pool at cluster scale. Sequential submission is kept as the default
-  * for deterministic logs, matching the reference's observable order.
+  * (main.py:219-263), each table here is an independent Spark job, and
+  * `lanes` tables are in flight at once on one SparkSession: the
+  * `tableParallelism` given (`--export-parallelism`), else
+  * [[Exporter.DefaultLanes]], never more than there are tables. Each
+  * lane is one source session (one Oracle connection per partition of
+  * its scan), so the default stays at the value measured, not at one
+  * derived from the session's cores. Reports come back sorted by
+  * (schema, table), whatever order the tables finished in.
   */
 final case class TableReport(schema: String, table: String, rows: Long,
-    files: Int, seconds: Double)
-final case class ExportReport(tables: Seq[TableReport], seconds: Double) {
+    files: Int, bytes: Long, seconds: Double)
+final case class ExportReport(tables: Seq[TableReport], seconds: Double, lanes: Int) {
   def totalRows: Long = tables.map(_.rows).sum
+  def totalBytes: Long = tables.map(_.bytes).sum
 }
 
 final class Exporter(
@@ -24,47 +29,73 @@ final class Exporter(
     catalog: TableCatalog,
     source: TableSource,
     sink: ParquetSink,
-    tableParallelism: Int = 1) {
+    tableParallelism: Option[Int] = None) {
 
   private val include: Regex = cfg.tableNameIncludePattern.r
   private val exclude: Option[Regex] = cfg.tableNameExcludePattern.map(_.r)
 
   def exportTables(spark: SparkSession): ExportReport = {
     val t0 = System.nanoTime()
-    // session-wide, BEFORE any (possibly concurrent) per-table work:
-    // schema inference of a TIMESTAMP(NANOS) table must not race the
-    // first ParquetSource.read that would otherwise set this
+    // session-wide, BEFORE any concurrent per-table work: schema
+    // inference of a TIMESTAMP(NANOS) table must not race the first
+    // ParquetSource.read that would otherwise set this
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     sink.prepareRoot()
     val targets = for {
       schema <- cfg.schemas
       table <- catalog.listTables(schema, include, exclude)
     } yield (schema, table)
-    // Spark jobs are thread-safe on one session: with parallelism > 1,
-    // per-table jobs overlap scheduling/IO (the reference is strictly
-    // sequential over one connection, main.py:239-263). Reports come
-    // back in deterministic (schema, table) order either way.
-    val reports =
-      if (tableParallelism <= 1) targets.flatMap { case (s, t) => exportTable(spark, s, t) }
-      else {
-        import java.util.concurrent.Executors
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = Executors.newFixedThreadPool(tableParallelism)
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        try {
-          val fs = targets.map { case (s, t) => Future(exportTable(spark, s, t)) }
-          Await.result(Future.sequence(fs), Duration.Inf).flatten
-        } finally pool.shutdown()
-      }
-    ExportReport(reports.sortBy(r => (r.schema, r.table)),
-      (System.nanoTime() - t0) / 1e9)
+    val lanes = math.max(1, math.min(targets.size,
+      tableParallelism.getOrElse(Exporter.DefaultLanes)))
+    ExportReport(inLanes(spark, targets, lanes).sortBy(r => (r.schema, r.table)),
+      (System.nanoTime() - t0) / 1e9, lanes)
+  }
+
+  /** Exports `targets` on `lanes` pool threads. The first table to fail
+    * stops the run: no queued table starts, the Spark jobs then running
+    * for the tables in flight are cancelled, a table in flight that has
+    * not reached its write skips it, and once every lane has returned
+    * the failure is rethrown naming its table. The cancel is best
+    * effort: a sibling between two of its jobs at that moment (in
+    * `listColumns`, or between the bounds aggregate, the sample and the
+    * write of a clustered table) runs its next job to the end. A fatal
+    * error is not caught here: it fails its own lane only. */
+  private def inLanes(spark: SparkSession, targets: Seq[(String, String)],
+      lanes: Int): Seq[TableReport] = {
+    import java.util.concurrent.{Callable, Executors, TimeUnit}
+    import java.util.concurrent.atomic.AtomicReference
+    val sc = spark.sparkContext
+    val tag = s"graft-export-${java.util.UUID.randomUUID()}"
+    val failure = new AtomicReference[Throwable]()
+    val pool = Executors.newFixedThreadPool(lanes)
+    val reports = try targets.map { case (s, t) =>
+      pool.submit(new Callable[Option[TableReport]] { def call() =
+        if (failure.get() != null) None
+        else {
+          sc.addJobTag(tag)
+          try exportTable(spark, s, t, live = () => failure.get() == null)
+          catch {
+            case NonFatal(e) =>
+              if (failure.compareAndSet(null,
+                  new RuntimeException(s"export of $s.$t failed: $e", e)))
+                sc.cancelJobsWithTag(tag, s"export of $s.$t failed")
+              None
+          } finally sc.removeJobTag(tag)
+        }
+      })
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
+    Option(failure.get()).foreach(e => throw e)
+    reports.flatMap(_.get())
   }
 
   /** One table end-to-end; `None` when every column is excluded (the
-    * reference logs a warning and skips, main.py:140-142). */
-  def exportTable(spark: SparkSession, schema: String,
-      table: String): Option[TableReport] = {
+    * reference logs a warning and skips, main.py:140-142), or when
+    * `live` turns false before the write. */
+  private def exportTable(spark: SparkSession, schema: String, table: String,
+      live: () => Boolean): Option[TableReport] = {
     val t0 = System.nanoTime()
     val cols = catalog.listColumns(schema, table)
       .filter(c => Catalog.isExportableType(c.dataType))
@@ -83,15 +114,25 @@ final class Exporter(
       // opt-in layout optimization (clustered writes must know their
       // file count up front; the reference has no counterpart flag).
       val colNames = df.columns.toSet
-      val stats = cfg.clusterBy match {
-        case Some(cs) if colNames.contains(cs.x) && colNames.contains(cs.y) =>
-          sink.writeClustered(df, schema, table, cs)
-        // tables without the curve columns keep the plain layout —
-        // --cluster-by targets the fact tables that carry them
-        case _ => sink.writeTable(df, schema, table)
+      // a failed sibling has stopped the run: no write job is started
+      Option.when(live()) {
+        val stats = cfg.clusterBy match {
+          case Some(cs) if colNames.contains(cs.x) && colNames.contains(cs.y) =>
+            sink.writeClustered(df, schema, table, cs, cols)
+          // tables without the curve columns keep the plain layout —
+          // --cluster-by targets the fact tables that carry them
+          case _ => sink.writeTable(df, schema, table, cols)
+        }
+        TableReport(schema, table, stats.rows, stats.files, stats.bytes,
+          (System.nanoTime() - t0) / 1e9)
       }
-      Some(TableReport(schema, table, stats.rows, stats.files,
-        (System.nanoTime() - t0) / 1e9))
     }
   }
+}
+
+object Exporter {
+  /** Tables in flight when `--export-parallelism` is not given: the lane
+    * count measured on a 4-core local session, where 2 lanes halved the
+    * export pass and 4 lanes doubled a small table's own time. */
+  val DefaultLanes: Int = 2
 }

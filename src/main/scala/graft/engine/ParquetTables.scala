@@ -51,6 +51,7 @@ object ParquetTables {
 
   private val schemas = new Memo[(String, Seq[(String, String)]), StructType]
   private val nanosColumns = new Memo[(String, String), Boolean]
+  private val widths = new Memo[String, Map[String, Int]]
 
   /** The data files of the table at `path` (a Parquet file, or a
     * directory of part files and partition directories), skipping what
@@ -101,16 +102,40 @@ object ParquetTables {
     fingerprint(spark, path).filter(_.nonEmpty).exists(fp =>
       nanosColumns((path, column), fp) {
         import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(path + fp.head._1), spark.sparkContext.hadoopConfiguration))
-        try {
-          val schema = reader.getFooter.getFileMetaData.getSchema
+        firstFooter(spark, path, fp) { footer =>
+          val schema = footer.getFileMetaData.getSchema
           schema.containsField(column) &&
             (schema.getType(schema.getFieldIndex(column)).getLogicalTypeAnnotation match {
               case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
               case _ => false
             })
-        } finally reader.close()
+        }
       })
+
+  /** Bytes per value of each top-level column of the table, from the
+    * footer of its first data file: the column chunks' uncompressed
+    * (encoded, not yet compressed) bytes over the file's row count,
+    * rounded up. Empty when that file holds no rows. Reads one footer on
+    * the driver (no Spark job), memoized on the same fingerprint. */
+  def valueWidths(spark: SparkSession, path: String): Map[String, Int] =
+    fingerprint(spark, path).filter(_.nonEmpty).map(fp =>
+      widths(path, fp) {
+        import scala.jdk.CollectionConverters._
+        firstFooter(spark, path, fp) { footer =>
+          val blocks = footer.getBlocks.asScala.toSeq
+          val rows = blocks.map(_.getRowCount).sum
+          if (rows == 0L) Map.empty[String, Int]
+          else blocks.flatMap(_.getColumns.asScala).filter(_.getPath.size == 1)
+            .groupMapReduce(_.getPath.toDotString)(_.getTotalUncompressedSize)(_ + _)
+            .map { case (c, bytes) => c -> math.min(Int.MaxValue, (bytes + rows - 1) / rows).toInt }
+        }
+      }).getOrElse(Map.empty)
+
+  private def firstFooter[A](spark: SparkSession, path: String, fp: Fingerprint)(
+      f: org.apache.parquet.hadoop.metadata.ParquetMetadata => A): A = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path + fp.head._1), spark.sparkContext.hadoopConfiguration))
+    try f(reader.getFooter) finally reader.close()
+  }
 }

@@ -2,6 +2,7 @@ package graft.engine
 
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
+import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
@@ -13,11 +14,55 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   * The reference rolls to a new file when accumulated *uncompressed
   * in-memory* bytes exceed the target — documented as approximate
   * (main.py:174-183, 446-455). Spark splits by `maxRecordsPerFile`, so
-  * the byte target is converted to a record budget from a sampled
-  * average row width: the same "close, not guaranteed" contract at the
-  * same granularity the reference offers, with no custom committer.
+  * the byte target is converted to a record budget from the scan
+  * schema's UnsafeRow width ([[ParquetSink.rowWidth]]), with no Spark
+  * job and no custom committer. Text and binary columns count at the
+  * catalog's width where it gives one (`ColumnMeta.precision`):
+  *  - JDBC: the declared length, an upper bound, so files land at or
+  *    under `--parquet-max-file-size` (for single-byte text), at the
+  *    price of more, smaller files when the columns run well below
+  *    their declared lengths;
+  *  - Parquet: the source footer's encoded bytes per value, so long
+  *    text sizes by its real width. A dictionary-encoded column counts
+  *    at its encoded width, which the written file shares, so the file
+  *    on disk stays near the target while its rows decode to more.
+  * Columns without a width count at Catalyst's default size, the same
+  * "close, not guaranteed" contract the reference offers.
   */
-final case class WriteStats(rows: Long, files: Int, outputDir: String)
+final case class WriteStats(rows: Long, files: Int, bytes: Long, outputDir: String)
+
+object ParquetSink {
+  import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+  import org.apache.spark.sql.types._
+
+  private def roundUp8(n: Long): Long = (n + 7L) / 8L * 8L
+
+  /** UnsafeRow width of a row of `schema`: one 8-byte slot per field,
+    * the null-bitset words, and each variable-length field's bytes
+    * rounded up to a word. Strings and binaries take the catalog width
+    * of the same-named column in `cols` when the catalog gives one,
+    * else Catalyst's `defaultSize`. In-memory row width stands in for
+    * uncompressed Arrow batch bytes — the same estimator family as the
+    * reference's `Table.nbytes`. */
+  def rowWidth(schema: StructType, cols: Seq[ColumnMeta]): Long = {
+    val declared = cols.flatMap(c =>
+      c.precision.filter(_ > 0).map(c.name.toLowerCase -> _)).toMap
+    val varBytes = schema.fields.filterNot(f => UnsafeRow.isFixedLength(f.dataType))
+      .map { f =>
+        val bytes = f.dataType match {
+          case _: StringType | BinaryType =>
+            declared.getOrElse(f.name.toLowerCase, f.dataType.defaultSize)
+          case dt => dt.defaultSize
+        }
+        roundUp8(bytes.toLong)
+      }.sum
+    8L * schema.length + 8L * ((schema.length + 63) / 64) + varBytes
+  }
+
+  /** Records per file that keep a file's in-memory bytes at the target. */
+  def recordsPerFile(schema: StructType, cols: Seq[ColumnMeta], targetBytes: Long): Long =
+    math.max(1L, targetBytes / math.max(1L, rowWidth(schema, cols)))
+}
 
 final class ParquetSink(cfg: ExportConfig) {
 
@@ -40,20 +85,13 @@ final class ParquetSink(cfg: ExportConfig) {
     Using.resource(Files.walk(p))(_.sorted(Comparator.reverseOrder[Path]())
       .forEach(f => Files.delete(f)))
 
-  /** Records-per-file budget hitting the byte target: sample up to
-    * `sampleRows` rows, measure their average UnsafeRow width, divide.
-    * In-memory row width stands in for uncompressed Arrow batch bytes —
-    * the same estimator family as the reference's `Table.nbytes`. */
-  def estimateRecordsPerFile(df: DataFrame, sampleRows: Int = 1000): Long = {
-    val sample = df.limit(sampleRows)
-      .queryExecution.toRdd.map(_.asInstanceOf[org.apache.spark.sql.catalyst.expressions.UnsafeRow].getSizeInBytes.toLong)
-      .collect()
-    if (sample.isEmpty) Long.MaxValue
-    else {
-      val avg = math.max(1L, sample.sum / sample.length)
-      math.max(1L, cfg.parquetMaxFileSize / avg)
+  /** Parquet files and their total bytes under a written table dir. */
+  private def committed(dir: Path): (Int, Long) =
+    Using.resource(Files.list(dir)) { ps =>
+      val sizes = ps.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).map(Files.size).toSeq
+      (sizes.length, sizes.sum)
     }
-  }
 
   /** Hive-style partitioned write (`{dir}/{col}={value}/...`): exports
     * laid out for partition pruning, so downstream scans touching a
@@ -72,7 +110,7 @@ final class ParquetSink(cfg: ExportConfig) {
       .options(rowGroupOpts)
       .partitionBy(partitionCols: _*)
       .parquet(dir.toString)
-    WriteStats(rows = -1L, files = -1, outputDir = dir.toString)
+    WriteStats(rows = -1L, files = -1, bytes = -1L, outputDir = dir.toString)
   }
 
   /** Bucketed + sorted table write: co-locates future joins/aggregations
@@ -124,17 +162,15 @@ final class ParquetSink(cfg: ExportConfig) {
 
   /** The `--cluster-by` export write: `spec`'s curve layout with the
     * file count sized to the byte target — the row count of the bounds
-    * aggregate over [[estimateRecordsPerFile]], at most 10,000 files —
+    * aggregate over the schema's records per file, at most 10,000 files —
     * so the table is counted once, by the aggregate the layout needs
     * anyway. An empty table takes the plain [[writeTable]] layout. */
   def writeClustered(df: DataFrame, schema: String, table: String,
-      spec: ClusterSpec): WriteStats = {
+      spec: ClusterSpec, cols: Seq[ColumnMeta]): WriteStats = {
+    val rpf = ParquetSink.recordsPerFile(df.schema, cols, cfg.parquetMaxFileSize)
     val files = (n: Long) =>
       if (n == 0L) None
-      else {
-        val rpf = estimateRecordsPerFile(df)
-        Some(math.max(1L, math.min(10000L, (n + rpf - 1) / rpf)).toInt)
-      }
+      else Some(math.max(1L, math.min(10000L, (n + rpf - 1) / rpf)).toInt)
     val curve: Curve =
       if (spec.curve == "hilbert") graft.functions.ZOrder.hilbertValue(_, _, _, _, _, _)
       else graft.functions.ZOrder.zValue(_, _, _, _, _, _)
@@ -202,17 +238,10 @@ final class ParquetSink(cfg: ExportConfig) {
       .option("compression", cfg.compressionMethod.replace("none", "uncompressed"))
       .options(rowGroupOpts)
       .parquet(dir.toString)
-    WriteStats(rows = rows, files = files, outputDir = dir.toString)
+    val (n, bytes) = committed(dir)
+    WriteStats(rows = rows, files = n, bytes = bytes, outputDir = dir.toString)
   }
 
-  /** Write one table under `{out}/{schema}/{table}/` (names lowercased
-    * when configured, like the reference's path casing main.py:245-253).
-    *
-    * The row count piggybacks on the write job itself via `observe()` —
-    * re-reading the written output for a count would be a second full
-    * scan of the table (at 100 TB, another 100 TB of IO). The observe
-    * node is attached AFTER the records-per-file estimator, whose
-    * bounded sample action would otherwise latch the observation first. */
   /** Row-group size control (reference A12: one row group per fetch
     * batch, main.py:172 with the batch-size flag at main.py:414-421).
     * Spark's writer options land in the task-side Hadoop conf, so
@@ -222,23 +251,31 @@ final class ParquetSink(cfg: ExportConfig) {
     cfg.parquetRowGroupSize
       .map(b => Map("parquet.block.size" -> b.toString)).getOrElse(Map.empty)
 
-  def writeTable(df: DataFrame, schema: String, table: String): WriteStats = {
+  /** Write one table under `{out}/{schema}/{table}/` (names lowercased
+    * when configured, like the reference's path casing main.py:245-253).
+    *
+    * The row count piggybacks on the write job itself via `observe()` —
+    * re-reading the written output for a count would be a second full
+    * scan of the table (at 100 TB, another 100 TB of IO) — so the write
+    * is the table's one Spark job. `cols` are the table's catalog
+    * columns, whose text widths size the files. */
+  def writeTable(df: DataFrame, schema: String, table: String,
+      cols: Seq[ColumnMeta] = Nil): WriteStats = {
     val s = Projection.objectName(schema, cfg.lowercaseObjectNames)
     val t = Projection.objectName(table, cfg.lowercaseObjectNames)
     val dir = root.resolve(s).resolve(t)
-    val recordsPerFile = estimateRecordsPerFile(df)
     val obs = new org.apache.spark.sql.Observation(s"export_${s}_$t")
     df.observe(obs, org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("rows"))
       .write
       .mode(SaveMode.Overwrite)
       .option("compression", cfg.compressionMethod.replace("none", "uncompressed"))
-      .option("maxRecordsPerFile", recordsPerFile)
+      .option("maxRecordsPerFile",
+        ParquetSink.recordsPerFile(df.schema, cols, cfg.parquetMaxFileSize))
       .options(rowGroupOpts)
       .parquet(dir.toString)
-    val n = Using.resource(Files.list(dir))(
-      _.filter(p => p.getFileName.toString.endsWith(".parquet")).count().toInt)
-    WriteStats(rows = obs.get("rows").asInstanceOf[Long], files = n,
+    val (n, bytes) = committed(dir)
+    WriteStats(rows = obs.get("rows").asInstanceOf[Long], files = n, bytes = bytes,
       outputDir = dir.toString)
   }
 }

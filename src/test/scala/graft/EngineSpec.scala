@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.GraftShims
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine._
@@ -76,8 +77,8 @@ class SinkExporterSpec extends AnyFunSuite {
   import SparkTestSession._
 
   private def freshDir(): String = {
-    val p = Files.createTempDirectory("graft-sink")
-    Files.delete(p)
+    val p = GraftShims.scratchDir("graft-sink")
+    Files.delete(p.toPath)
     p.toString
   }
 
@@ -150,8 +151,89 @@ class SinkExporterSpec extends AnyFunSuite {
       "expected multiple row groups per file under the 64 KB target")
   }
 
+  test("a plain table write is one Spark job: the file sizing runs no job") {
+    val out = freshDir()
+    val sink = new ParquetSink(ExportConfig(outputDirectory = out, overwrite = true))
+    sink.prepareRoot()
+    val df = spark.read.parquet(s"$sf/lineitem.parquet")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    GraftShims.drainListeners(spark)
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      val stats = sink.writeTable(df, "m", "li")
+      GraftShims.drainListeners(spark)
+      assert(jobs.get() === 1)
+      assert(stats.rows === df.count())
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
+  test("records per file come from the schema: 8 B slots, null-bitset words, declared text lengths") {
+    import org.apache.spark.sql.types._
+    val money = DecimalType(15, 2)
+    // lineitem as the lowercase projection names it
+    val lineitem = StructType(Seq(
+      "l_orderkey" -> LongType, "l_partkey" -> LongType, "l_suppkey" -> LongType,
+      "l_linenumber" -> IntegerType, "l_quantity" -> money, "l_extendedprice" -> money,
+      "l_discount" -> money, "l_tax" -> money, "l_returnflag" -> StringType,
+      "l_linestatus" -> StringType, "l_shipdate" -> DateType, "l_commitdate" -> DateType,
+      "l_receiptdate" -> DateType, "l_shipinstruct" -> StringType,
+      "l_shipmode" -> StringType, "l_comment" -> StringType)
+      .map { case (n, t) => StructField(n, t) })
+    // the catalog's upper-case names and TPC-H's declared text lengths;
+    // a numeric column's precision is no byte length and is ignored
+    val declared = Seq("L_ORDERKEY" -> 19, "L_RETURNFLAG" -> 1, "L_LINESTATUS" -> 1,
+      "L_SHIPINSTRUCT" -> 25, "L_SHIPMODE" -> 10, "L_COMMENT" -> 44)
+      .zipWithIndex.map { case ((n, len), i) => ColumnMeta(n, "VARCHAR", i + 1, Some(len)) }
+    // 16 slots + 1 bitset word = 136 B; text 8 + 8 + 32 + 16 + 48
+    assert(ParquetSink.rowWidth(lineitem, declared) === 248L)
+    // undeclared text counts at Catalyst's 20 B default, rounded to 24
+    assert(ParquetSink.rowWidth(lineitem, Nil) === 136L + 5 * 24L)
+    assert(ParquetSink.recordsPerFile(lineitem, declared, 200000000L) === 200000000L / 248)
+    assert(ParquetSink.recordsPerFile(lineitem, Nil, 200000000L) === 200000000L / 256)
+    // all fixed width: the slots and bitset alone, a second bitset word past 64 fields
+    val fixed = StructType(Seq(LongType, IntegerType, DoubleType, DateType,
+      TimestampType, DecimalType(18, 4), BooleanType, ShortType)
+      .zipWithIndex.map { case (t, i) => StructField(s"c$i", t) })
+    assert(ParquetSink.rowWidth(fixed, Nil) === 72L)
+    assert(ParquetSink.recordsPerFile(fixed, Nil, 720L) === 10L)
+    val wide = StructType((0 until 70).map(i => StructField(s"c$i", LongType)))
+    assert(ParquetSink.rowWidth(wide, Nil) === 70 * 8L + 16L)
+    // a row wider than the target still writes one record per file
+    assert(ParquetSink.recordsPerFile(wide, Nil, 100L) === 1L)
+  }
+
+  test("a long-text Parquet table sizes its files from the footer widths, each under the target") {
+    import org.apache.spark.sql.functions.{col, concat, concat_ws, lit, sha2}
+    // 2,000 rows of 2,048-char hex text: ~4 MB, one part file
+    val root = GraftShims.scratchDir("graft-longtext").toPath
+    val text = concat_ws("", (0 until 32).map(k =>
+      sha2(concat(col("id").cast("string"), lit(s"-$k")), 256)): _*)
+    spark.range(2000).select(col("id"), text.as("body")).coalesce(1)
+      .write.parquet(root.resolve("long").resolve("docs").toString)
+    val catalog = new ParquetCatalog(root)
+    val body = catalog.listColumns("long", "docs").find(_.name == "body").get
+    assert(body.precision.exists(w => w >= 2048 && w < 2100), body)
+    val target = 256L * 1024
+    // uncompressed, so each file's bytes are its encoded rows
+    val cfg = ExportConfig(outputDirectory = freshDir(), overwrite = true,
+      schemas = Seq("long"), parquetMaxFileSize = target, compressionMethod = "none")
+    val report = new Exporter(cfg, catalog, new ParquetSource(catalog),
+      new ParquetSink(cfg)).exportTables(spark)
+    val t = report.tables.head
+    assert(t.rows === 2000L)
+    assert(t.files > 1, s"one ${t.bytes} B file for a ${target} B target")
+    val sizes = Paths.get(cfg.outputDirectory, "long", "docs").toFile.listFiles().toSeq
+      .filter(_.getName.endsWith(".parquet")).map(_.length)
+    assert(sizes.length === t.files && sizes.sum === t.bytes)
+    assert(sizes.forall(_ <= target), s"files over the $target B target: $sizes")
+  }
+
   test("dotenv file backfills config under env precedence (A19 parity)") {
-    val dir = Files.createTempDirectory("graft-dotenv")
+    val dir = GraftShims.scratchDir("graft-dotenv").toPath
     val f = dir.resolve(".env")
     Files.writeString(f,
       """# comment
@@ -244,13 +326,77 @@ class SinkExporterSpec extends AnyFunSuite {
       val cfg = ExportConfig(outputDirectory = out, overwrite = true,
         schemas = Seq("sf0.001"), tableNameIncludePattern = "^(region|nation|supplier|part|events)$")
       new Exporter(cfg, catalog, new ParquetSource(catalog),
-        new ParquetSink(cfg), tableParallelism = par).exportTables(SparkTestSession.spark)
+        new ParquetSink(cfg), tableParallelism = Some(par)).exportTables(SparkTestSession.spark)
     }
     val seq = run(outSeq, 1)
     val par = run(outPar, 4)
     assert(par.tables.map(t => (t.schema, t.table, t.rows)) ===
       seq.tables.map(t => (t.schema, t.table, t.rows)))
     assert(par.totalRows === 1240) // 5 + 25 + 10 + 200 + 1000 events
+  }
+
+  /** Parquet-catalog source that hands each read to `before` first. */
+  private def watched(catalog: ParquetCatalog)(before: String => Unit): TableSource =
+    new TableSource {
+      private val inner = new ParquetSource(catalog)
+      override def read(spark: org.apache.spark.sql.SparkSession, schema: String,
+          table: String, cols: Seq[ColumnMeta], lowercase: Boolean,
+          rowLimit: Long): org.apache.spark.sql.DataFrame = {
+        before(table)
+        inner.read(spark, schema, table, cols, lowercase, rowLimit)
+      }
+    }
+
+  test("default lanes keep two tables in flight at once, whatever the core count") {
+    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+    val catalog = new ParquetCatalog(Paths.get(sf).getParent)
+    // each read waits until a second table's read has begun: that only
+    // happens when two table exports overlap
+    val both = new CountDownLatch(2)
+    val met = new ConcurrentHashMap[String, Boolean]()
+    val src = watched(catalog) { t =>
+      both.countDown()
+      met.put(t, both.await(10, TimeUnit.SECONDS))
+    }
+    val out = freshDir()
+    val cfg = ExportConfig(outputDirectory = out, overwrite = true,
+      schemas = Seq("sf0.001"), tableNameIncludePattern = "^(region|nation|supplier)$")
+    val report = new Exporter(cfg, catalog, src, new ParquetSink(cfg)).exportTables(spark)
+    assert(report.lanes === Exporter.DefaultLanes && Exporter.DefaultLanes === 2)
+    assert(report.tables.map(_.table) === Seq("nation", "region", "supplier"))
+    assert(met.size === 3 && !met.containsValue(false), s"reads that waited alone: $met")
+    // lanes never outnumber the tables
+    val one = cfg.copy(outputDirectory = freshDir(), tableNameIncludePattern = "^region$")
+    assert(new Exporter(one, catalog, new ParquetSource(catalog), new ParquetSink(one))
+      .exportTables(spark).lanes === 1)
+  }
+
+  test("a failed table starts no queued table, leaves no job running and names itself") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    val catalog = new ParquetCatalog(Paths.get(sf).getParent)
+    val events = new ConcurrentLinkedQueue[String]()
+    val siblingStarted = new CountDownLatch(1)
+    val src = watched(catalog) { t =>
+      events.add(s"start $t")
+      if (t != "customer") siblingStarted.countDown()
+      else {
+        // fail once the other lane holds a table, so one is in flight
+        siblingStarted.await(10, TimeUnit.SECONDS)
+        events.add("fail")
+        throw new IllegalStateException("source lost")
+      }
+    }
+    val cfg = ExportConfig(outputDirectory = freshDir(), overwrite = true,
+      schemas = Seq("sf0.001"),
+      tableNameIncludePattern = "^(customer|nation|orders|part|region|supplier)$")
+    val e = intercept[RuntimeException](new Exporter(cfg, catalog, src,
+      new ParquetSink(cfg), tableParallelism = Some(2)).exportTables(spark))
+    assert(e.getMessage.contains("sf0.001.customer"), e.getMessage)
+    GraftShims.drainListeners(spark)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    val seen = events.toArray.toSeq.map(_.toString)
+    assert(seen.take(3).toSet === Set("start customer", "start nation", "fail"), seen)
+    assert(seen.dropWhile(_ != "fail").tail.isEmpty, s"tables started after the failure: $seen")
   }
 
   test("partition bounds SQL pins the same SCN as the scan") {
@@ -309,6 +455,27 @@ class CliSpec extends AnyFunSuite {
     assert(cfg.isolationLevel === IsolationLevel.ReadCommitted)
     assert(extras("source-format") === "parquet")
     assert(extras("export-parallelism") === "3")
+  }
+
+  test("the run report is one JSON record per table and one for the run") {
+    val report = ExportReport(Seq(
+      TableReport("S", "A", rows = 3L, files = 1, bytes = 700L, seconds = 0.25),
+      TableReport("S", "B", rows = 5L, files = 2, bytes = 900L, seconds = 0.5)),
+      seconds = 0.75, lanes = 2)
+    val lines = graft.cli.Main.reportLines(report, scn = Some(42L))
+      .map(graft.Harness.json.readTree(_))
+    assert(lines.length === 3)
+    val a = lines.head
+    assert(a.get("schema").asText === "S" && a.get("table").asText === "A")
+    assert(a.get("rows").asLong === 3L && a.get("files").asInt === 1)
+    assert(a.get("bytes").asLong === 700L && a.get("seconds").asDouble === 0.25)
+    val run = lines.last
+    assert(run.get("tables").asInt === 2 && run.get("rows").asLong === 8L)
+    assert(run.get("bytes").asLong === 1600L && run.get("seconds").asDouble === 0.75)
+    assert(run.get("lanes").asInt === 2 && run.get("scn").asLong === 42L)
+    val unpinned = graft.Harness.json.readTree(
+      graft.cli.Main.reportLines(report, scn = None).last)
+    assert(unpinned.get("scn").isNull)
   }
 
   test("cluster-by flag: parses cols + curve, defaults to morton, rejects malformed specs") {

@@ -101,7 +101,7 @@ class JdbcLiveSpec extends AnyFunSuite {
       st.execute("""INSERT INTO "APP2"."SKIP_ME" VALUES (1)""")
     } finally conn.close()
 
-    val out = java.nio.file.Files.createTempDirectory("graft-jdbc-export").toString
+    val out = org.apache.spark.sql.GraftShims.scratchDir("graft-jdbc-export").toString
     val cfg = ExportConfig(outputDirectory = out, overwrite = true,
       schemas = Seq("APP2"), tableNameExcludePattern = Some("^SKIP"),
       lowercaseObjectNames = true)
