@@ -123,8 +123,7 @@ object Curation extends QueryFamily {
         .as("dup_token_ratio"))
     val bigrams = toks
       .select($"doc_id", $"w", explode(wordStarts(2)).as("i"))
-      .select($"doc_id",
-        concat_ws(" ", expr("element_at(w, i)"), expr("element_at(w, i + 1)")).as("g"))
+      .select($"doc_id", wordWindow(2, "i").as("g"))
     val bigramStats = bigrams
       .groupBy($"doc_id", $"g").agg(count(lit(1)).as("n"))
       .groupBy($"doc_id")
@@ -1231,9 +1230,8 @@ object Curation extends QueryFamily {
     val docs = T.documents(spark, dir)
     val grams = docs
       .select($"source", $"doc_id", split($"text", " ").as("w"))
-      .select($"source", $"doc_id", explode(transform(wordStarts(5), i =>
-        concat_ws(" ", element_at($"w", i), element_at($"w", i + 1),
-          element_at($"w", i + 2), element_at($"w", i + 3), element_at($"w", i + 4)))).as("g"))
+      .select($"source", $"doc_id", $"w", explode(wordStarts(5)).as("i"))
+      .select($"source", $"doc_id", wordWindow(5, "i").as("g"))
       .distinct()
     val nDocs = docs.agg(count(lit(1)).cast("double").as("n_total"))
     grams.groupBy($"g")

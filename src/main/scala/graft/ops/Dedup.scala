@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -36,13 +36,18 @@ object Dedup extends QueryFamily {
     * others through Spark's plan-keyed cache. */
   private[graft] def shingleRows(spark: SparkSession, dir: String, n: Int): DataFrame = {
     import spark.implicits._
-    val parts = (0 until n).map(k => expr(s"element_at(w, i + $k)"))
     T.documentsSpread(spark, dir)
       .select($"doc_id", split($"text", " ").as("w"))
       .select($"doc_id", $"w", explode(wordStarts(n)).as("i"))
-      .select($"doc_id", concat_ws(" ", parts: _*).as("sh"))
+      .select($"doc_id", wordWindow(n, "i").as("sh"))
       .distinct()
   }
+
+  /** The positioned twin of [[shingleRows]]'s shingle: the first 16 hex
+    * digits of the md5 of the n-word window at position column `pos`,
+    * the gram key of the passage, coverage and winnowing operators. */
+  private def windowKey(n: Int): Column =
+    substring(md5(wordWindow(n, "pos").cast("binary")), 1, 16)
 
   /** MinHash signatures (doc_id, sig) of a (doc_id, sh) shingle
     * relation: one md5 per shingle, its 48-bit prefix reduced mod
@@ -771,13 +776,12 @@ object Dedup extends QueryFamily {
   def qDupPassages(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val W = 8
-    val parts = (0 until W).map(k => expr(s"element_at(w, pos + $k)"))
     // keep per-window POSITION (unlike shingleRows): islands need it
     val grams = T.documentsSpread(spark, dir)
       .select($"doc_id", split($"text", " ").as("w"))
       .select($"doc_id", size($"w").as("n_tok"), $"w", explode(wordStarts(W)).as("pos"))
       .select($"doc_id", $"n_tok", $"pos",
-        substring(md5(concat_ws(" ", parts: _*).cast("binary")), 1, 16).as("g"))
+        windowKey(W).as("g"))
       .cache()
     val shared = grams.groupBy($"g")
       .agg(countDistinct($"doc_id").as("df")).filter($"df" > 1).select($"g")
@@ -832,12 +836,11 @@ object Dedup extends QueryFamily {
   def qDupNgramCoverage(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val W = 8
-    val parts = (0 until W).map(k => expr(s"element_at(w, pos + $k)"))
     val grams = T.documents(spark, dir)
       .select($"doc_id", split($"text", " ").as("w"))
       .select($"doc_id", explode(wordStarts(W)).as("pos"), $"w")
       .select($"doc_id", $"pos",
-        substring(md5(concat_ws(" ", parts: _*).cast("binary")), 1, 16).as("g"))
+        windowKey(W).as("g"))
       .cache()
     val shared = grams.groupBy($"g")
       .agg(countDistinct($"doc_id").as("df")).filter($"df" > 1).select($"g")
@@ -899,12 +902,11 @@ object Dedup extends QueryFamily {
   def qWinnowing(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val K = 4; val W = 4
-    val parts = (0 until K).map(k => expr(s"element_at(w, pos + $k)"))
     val grams = T.documents(spark, dir)
       .select($"doc_id", $"source", split($"text", " ").as("w"))
       .select($"doc_id", $"source", $"w", size($"w").as("n_w"), explode(wordStarts(K)).as("pos"))
       .select($"doc_id", $"source", ($"n_w" - lit(K - 1)).as("n_g"), $"pos",
-        substring(md5(concat_ws(" ", parts: _*).cast("binary")), 1, 16).as("g"))
+        windowKey(K).as("g"))
     val wSel = Window.partitionBy($"doc_id").orderBy($"pos")
       .rowsBetween(Window.currentRow, W - 1)
     val sel = grams

@@ -508,12 +508,16 @@ object Graph extends QueryFamily {
     * O(orders), never O(parts²)). k is DATA-DERIVED — ceil of the
     * unpeeled graph's mean degree — so the peel bites at any SF (a
     * fixed constant saturates as density grows with scale: measured
-    * mean degree ~116 at sf0.01, ~120 at sf0.1). Each round drops
+    * mean degree ~116 at sf0.01, ~120 at sf0.1); it is read to the
+    * driver once and enters every round as a literal. Each round drops
     * nodes with degree < k and keeps only edges between survivors —
-    * one degree aggregate plus two endpoint semi-joins, all keyed on
-    * the node, the Pregel shape that scales to web graphs. The edge
-    * relation is localCheckpoint-ed per round (each round reads it
-    * three times; lineage stays linear). Output: per-round node/edge
+    * two endpoint semi-joins against one broadcast keep set plus one
+    * degree aggregate, all keyed on the node, the Pregel shape that
+    * scales to web graphs. Every relation is checkpointed lazily: the
+    * job that first reads it keeps it, so a round launches the keep
+    * set's broadcast and the degree shuffle and nothing else, and the
+    * round's edge relation (read by the degree aggregate and by the
+    * next round) is kept by the degree job. Output: per-round node/edge
     * counts — the peeling curve — which the oracle reproduces by
     * unrolling the identical three rounds. */
   def qKcorePeel(spark: SparkSession, dir: String): DataFrame = {
@@ -524,36 +528,32 @@ object Graph extends QueryFamily {
     // self-join that scanned lineitem twice and re-fanned baskets n×n
     var edges = Mining.basketPairsExploded(Mining.orderBaskets(spark, dir))
       .select($"part_a".as("pa"), $"part_b".as("pb")).distinct()
-      .ckpt()
+      .ckpt(eager = false)
     def degrees(ed: DataFrame): DataFrame =
       ed.select($"pa".as("t")).union(ed.select($"pb".as("t")))
         .groupBy($"t").agg(count(lit(1)).as("d"))
-    // ONE node-sized degree relation per round, checkpointed, serves
-    // BOTH consumers that used to aggregate the edge relation twice
-    // (guide §2.4): the next round's `keep` filter read degrees(edges)
-    // and the final job re-derived every round's stats row with an
-    // explode + countDistinct over the full edge relation (a 2-phase
-    // distinct per round). From the degree relation both are trivial:
-    // n_nodes = row count, n_edges = sum(d)/2 (each edge contributes 2
-    // to total degree) — the identical integers, no edge re-scan.
-    var deg = degrees(edges).ckpt()
-    // 1-row threshold, checkpointed once: it is broadcast into every
-    // peel round, and without the ckpt each round's eager job
-    // re-aggregated the degree relation just to rebuild k
-    val kRow = deg.agg(ceil(avg($"d")).cast("long").as("k")).ckpt()
+    // ONE node-sized degree relation per round serves both consumers:
+    // the next round's keep set and the stats row, where n_nodes = row
+    // count and n_edges = sum(d)/2 (each edge adds 2 to the total
+    // degree) — no edge re-scan
+    var deg = degrees(edges).ckpt(eager = false)
+    // an empty graph has no mean and no keep set, so its stand-in 0
+    // changes nothing
+    val k = deg.agg(coalesce(ceil(avg($"d")).cast("long"), lit(0L)))
+      .head().getLong(0)
     def stats(round: Int, dg: DataFrame): DataFrame =
       dg.agg(lit(round).as("peel_round"),
         count(lit(1)).as("n_nodes"),
         (coalesce(sum($"d"), lit(0L)) / 2).cast("long").as("n_edges"))
     var out = stats(0, deg)
     for (r <- 1 to 3) {
-      val keep = deg.crossJoin(broadcast(kRow))
-        .filter($"d" >= $"k").select($"t")
+      // both semi-joins read this one relation, so it is broadcast once
+      val keep = deg.filter($"d" >= k).select($"t".as("kt"))
       edges = edges
-        .join(keep.withColumnRenamed("t", "pa"), Seq("pa"), "left_semi")
-        .join(keep.withColumnRenamed("t", "pb"), Seq("pb"), "left_semi")
-        .ckpt()
-      deg = degrees(edges).ckpt()
+        .join(keep, $"pa" === $"kt", "left_semi")
+        .join(keep, $"pb" === $"kt", "left_semi")
+        .ckpt(eager = false)
+      deg = degrees(edges).ckpt(eager = false)
       out = out.unionByName(stats(r, deg))
     }
     out.orderBy($"peel_round")

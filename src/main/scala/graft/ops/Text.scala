@@ -360,11 +360,10 @@ object Text extends QueryFamily {
     import spark.implicits._
     val n = 3
     val maxDf = 50
-    val parts = (0 until n).map(k => expr(s"element_at(w, i + $k)"))
     val sh = T.documents(spark, dir)
       .select($"doc_id", split($"text", " ").as("w"))
       .select($"doc_id", $"w", explode(wordStarts(n)).as("i"))
-      .select($"doc_id", concat_ws(" ", parts: _*).as("g"))
+      .select($"doc_id", wordWindow(n, "i").as("g"))
     val tf = sh.groupBy($"doc_id", $"g").agg(count(lit(1)).as("tf"))
     val nDocs = T.documents(spark, dir).agg(count(lit(1)).cast("double").as("n_docs"))
     val dfG = tf.groupBy($"g").agg(count(lit(1)).as("df"))
@@ -2166,8 +2165,7 @@ object Text extends QueryFamily {
     val counts = T.documents(spark, dir)
       .select(split($"text", " ").as("w"))
       .select($"w", explode(wordStarts(3)).as("i"))
-      .select(concat_ws(" ", expr("element_at(w, i)"),
-        expr("element_at(w, i + 1)"), expr("element_at(w, i + 2)")).as("t"))
+      .select(wordWindow(3, "i").as("t"))
       .groupBy($"t").agg(count(lit(1)).as("r"))
     val fof = counts.groupBy($"r").agg(count(lit(1)).as("n_r")).cache()
     val tot = counts.agg(sum($"r").cast("double").as("n"))

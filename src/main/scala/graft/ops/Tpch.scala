@@ -448,24 +448,25 @@ object Tpch extends QueryFamily {
       |  AND l_quantity < (SELECT 0.5 * avg(l2.l_quantity)
       |                    FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""".stripMargin
 
-  /** TPC-H Q18 shape: large-volume orders — IN against a grouped-HAVING
-    * subquery becomes a left-semi join on orderkey; the outer re-joins
-    * lineitem to re-aggregate quantities per surviving order. */
+  /** TPC-H Q18 shape: large-volume orders — the grouped-HAVING
+    * subquery's per-order `sum(l_quantity)` is the output's `sum_qty`.
+    * It relies on the TPC-H primary keys: `o_orderkey` is the key of
+    * orders and `c_custkey` the key of customer, so each (customer,
+    * order) group of the SQL twin is exactly one order and its
+    * re-aggregated sum equals the HAVING sum. Lineitem is therefore
+    * scanned and aggregated once, and the surviving orders join
+    * orders and customer. */
   def q18LargeVolume(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val big = T.lineitem(spark, dir)
-      .groupBy($"l_orderkey".as("big_orderkey"))
-      .agg(sum($"l_quantity").as("big_qty"))
-      .filter($"big_qty" > 140.0)
-      .select($"big_orderkey")
-    T.orders(spark, dir)
-      .join(big, $"o_orderkey" === $"big_orderkey", "left_semi")
-      .join(T.customer(spark, dir), $"o_custkey" === $"c_custkey")
-      .join(T.lineitem(spark, dir), $"o_orderkey" === $"l_orderkey")
-      .groupBy($"c_name", $"c_custkey", $"o_orderkey",
-        date_format($"o_orderdate", "yyyy-MM-dd").as("orderdate"),
-        round($"o_totalprice", 2).as("totalprice"))
+    T.lineitem(spark, dir)
+      .groupBy($"l_orderkey")
       .agg(sum($"l_quantity").as("sum_qty"))
+      .filter($"sum_qty" > 140.0)
+      .join(T.orders(spark, dir), $"o_orderkey" === $"l_orderkey")
+      .join(T.customer(spark, dir), $"o_custkey" === $"c_custkey")
+      .select($"c_name", $"c_custkey", $"o_orderkey",
+        date_format($"o_orderdate", "yyyy-MM-dd").as("orderdate"),
+        round($"o_totalprice", 2).as("totalprice"), $"sum_qty")
       .orderBy(desc("totalprice"), asc("o_orderkey"))
       .limit(100)
   }

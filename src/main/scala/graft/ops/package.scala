@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, Dataset}
-import org.apache.spark.sql.functions.{conv, expr, lit, md5, substring}
+import org.apache.spark.sql.functions.{concat_ws, conv, expr, lit, md5, substring}
 
 package object ops {
 
@@ -26,6 +26,13 @@ package object ops {
     * `element_at(w, i + k)`. */
   def wordStarts(n: Int): Column =
     expr(s"CASE WHEN size(w) >= $n THEN sequence(1, size(w) - ${n - 1}) ELSE array() END")
+
+  /** The text of the n-word window of `w` that starts at the position
+    * column named `start` (one of [[wordStarts]]): its words
+    * `element_at(w, start + k)`, k = 0 .. n - 1, joined by single
+    * spaces, all codegen'd. */
+  def wordWindow(n: Int, start: String): Column =
+    concat_ws(" ", (0 until n).map(k => expr(s"element_at(w, $start + $k)")): _*)
 
   /** Lineage-truncation switch for the iterative operator family.
     *

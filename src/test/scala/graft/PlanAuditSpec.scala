@@ -145,8 +145,6 @@ class PlanAuditSpec extends AnyFunSuite {
     "q_mutual_knn",
     // O(months) x O(months) bounded pairwise-slope join (<= C(84,2))
     "q_theil_sen",
-    // 1-row mean-degree broadcast that sets the peel threshold k
-    "q_kcore_peel",
     // 1-row corpus-count broadcast that sets the scaled sign-LSH depth
     "q_sim_range_search", "q_hard_negatives",
     // inherits the brute-force probe-side non-equi join of its exact
@@ -420,15 +418,26 @@ class PlanAuditSpec extends AnyFunSuite {
     "q_contamination_semantic" -> "train + eval branches feeding ONE ckpt'd per-vector argmax relation (the threshold derivation re-reads the ckpt, not the corpus)",
     "q_shard_mix_audit" -> "corpus assignment scan + ONE ckpt'd 1-row params relation (source index + shard count both derive from it)")
 
-  test("no registered query scans one source relation more than twice") {
+  /** One name per file-source scan leaf of `plan` (its root paths'
+    * file names), "non-fs" for any other relation leaf. */
+  private def scanLeaves(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Seq[String] = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val offenders = executions.toSeq.flatMap { case (name, qe) =>
-      val leaves = qe.optimizedPlan.collect {
-        case l: LogicalRelation => l.relation match {
-          case h: HadoopFsRelation => h.location.rootPaths.map(_.getName).mkString(",")
-          case _ => "non-fs"
-        }
+    plan.collect {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => h.location.rootPaths.map(_.getName).mkString(",")
+        case _ => "non-fs"
       }
+    }
+  }
+
+  test("q18_large_volume scans lineitem once: the HAVING sum is the output sum") {
+    val plan = SparkEntry.queries("q18_large_volume")(spark, sf).queryExecution.optimizedPlan
+    assert(scanLeaves(plan).count(_ == "lineitem.parquet") === 1, plan.toString)
+  }
+
+  test("no registered query scans one source relation more than twice") {
+    val offenders = executions.toSeq.flatMap { case (name, qe) =>
+      val leaves = scanLeaves(qe.optimizedPlan)
       val over = leaves.groupBy(identity).exists(_._2.size > 2)
       if (over && !multiScanAllowed.contains(name)) Some(name) else None
     }
@@ -649,7 +658,7 @@ class PlanAuditSpec extends AnyFunSuite {
     "q_pagerank" -> "3 unrolled rounds re-derive the checkpointed edge/rank relations",
     "q_ppr" -> "3 unrolled rounds re-derive the checkpointed edge/rank relations + seed branch",
     "q_hits" -> "3 unrolled hub/authority half-steps re-derive the checkpointed edge relation",
-    "q_kcore_peel" -> "3 unrolled peel rounds re-derive the checkpointed edge relation",
+    "q_kcore_peel" -> "3 unrolled peel rounds each semi-join the previous round's checkpointed edge relation against a keep set derived from it, re-deriving both",
     "q_label_prop" -> "3 unrolled propagation rounds re-derive the checkpointed edge/label relations",
     "q_kmeans_iterated" -> "unrolled assign/update rounds re-derive the checkpointed assignment relation",
     "q_dedup_clusters" -> "star-contraction rounds re-derive the checkpointed edge set from the minhash pipeline",
@@ -662,7 +671,6 @@ class PlanAuditSpec extends AnyFunSuite {
   test("checkpoint-free iterative variants pass the shape gates (cartesian/BNLJ/window/value-buffer/multi-scan/fact-broadcast)") {
     import org.apache.spark.sql.catalyst.expressions.aggregate.{CollectList, CollectSet, Percentile}
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     withNoCkpt {
       assert(graft.ops.CkptFlag.disabled, "noCkpt flag not visible to ops package")
       iterativeQueries.foreach { name =>
@@ -690,12 +698,7 @@ class PlanAuditSpec extends AnyFunSuite {
             }.nonEmpty)
           assert(!hasBuffer || valueBufferAllowed.contains(name),
             "value-buffering aggregate inside the loop body")
-          val leaves = qe.optimizedPlan.collect {
-            case l: LogicalRelation => l.relation match {
-              case h: HadoopFsRelation => h.location.rootPaths.map(_.getName).mkString(",")
-              case _ => "non-fs"
-            }
-          }
+          val leaves = scanLeaves(qe.optimizedPlan)
           val over = leaves.groupBy(identity).exists(_._2.size > 2)
           assert(!over || multiScanNoCkptAllowed.contains(name),
             "relation scanned >2x inside the loop body without a documented reason")
